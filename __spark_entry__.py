@@ -64,25 +64,13 @@ def entry(spark: SparkSession) -> DataFrame:
 
 _LAST_DRIVER_CHECK = {
     # --- last green driver row: CORRECTNESS_r09.json ---
-    "anti_join_customers": 9, "bigram_lm_quality": 9, "bpe_encode_docs": 9,
-    "bpe_roundtrip_docs": 9, "corpus_diff_releases": 9,
-    "dedup_clusters_incremental": 9, "dedup_clusters_streaming": 9,
-    "distinct_agg_segments": 9, "embedding_quantize_int8": 9,
-    "embedding_standardize": 9, "format_roundtrip_text": 9,
-    "mixture_temperature_lang": 9, "multimodal_frame_sample": 9,
-    "multimodal_resize": 9, "pivot_status_counts": 9,
-    "profile_drift_documents": 9, "scalar_funcs_projection": 9,
-    "semi_join_customers": 9, "source_cap_sample": 9, "text_token_gini": 9,
-    "window_rank_functions": 9, "winsorize_order_totals": 9,
+    "profile_drift_documents": 9,
     # --- last green driver row: CORRECTNESS_r10.json ---
-    "ccnet_lm_buckets": 10, "collect_sorted_sizes": 10,
-    "correlated_subquery": 10, "curation_pipeline_tokens": 10,
-    "decontaminate_attribution": 10, "decontaminate_rewrite_docs": 10,
-    "dedup_exact": 10, "dedup_exact_survivors": 10,
-    "dedup_minhash_clusters": 10, "dedup_minhash_lsh": 10,
-    "delegated_sql": 10, "embedding_covariance": 10,
-    "explode_token_freq": 10, "gopher_quality_docs": 10,
-    "grouping_sets_sql": 10, "having_filter": 10,
+    "collect_sorted_sizes": 10, "correlated_subquery": 10,
+    "curation_pipeline_tokens": 10, "dedup_exact": 10,
+    "dedup_exact_survivors": 10, "delegated_sql": 10,
+    "embedding_covariance": 10, "explode_token_freq": 10,
+    "gopher_quality_docs": 10, "grouping_sets_sql": 10, "having_filter": 10,
     "histogram_price_buckets": 10, "json_extract_props": 10,
     "json_map_explode": 10, "lateral_topk_per_nation": 10,
     "line_boilerplate_docs": 10, "multimodal_png_roundtrip": 10,
@@ -99,12 +87,9 @@ _LAST_DRIVER_CHECK = {
     "tokenize_to_ids_bigvocab": 10, "union_distinct_nations": 10,
     # --- last green driver row: CORRECTNESS_r11.json ---
     "asof_last_purchase": 11, "c4_quality_docs": 11,
-    "ccnet_lm_approx_contract": 11, "chunk_documents_windows": 11,
-    "cogroup_asof_enrich": 11, "decontaminate_overlap": 11,
-    "dedup_cluster_survivors": 11, "format_roundtrip_csv": 11,
-    "format_roundtrip_json": 11, "full_outer_reconcile": 11,
-    "grouped_apply_rank": 11, "incremental_lsh_pairs": 11,
-    "incremental_span_dedup": 11, "mixture_resample_lang": 11,
+    "chunk_documents_windows": 11, "cogroup_asof_enrich": 11,
+    "format_roundtrip_csv": 11, "format_roundtrip_json": 11,
+    "full_outer_reconcile": 11, "grouped_apply_rank": 11,
     "multimodal_audio_chunks": 11, "multimodal_meta": 11,
     "outlier_flags_events": 11, "pack_sequences_source": 11,
     "pandas_udf_normalize": 11, "pca_variance_contract": 11,
@@ -123,8 +108,7 @@ _LAST_DRIVER_CHECK = {
     "ann_arrow_topk": 12, "approx_distinct_contract": 12,
     "approx_quantiles_contract": 12, "asof_next_purchase": 12,
     "bm25_topk_search": 12, "cohort_retention": 12, "constraint_audit": 12,
-    "curation_pipeline_batch": 12, "dedup_cluster_size_histogram": 12,
-    "dedup_clusters_star": 12, "dedup_rate_report_by_source": 12,
+    "dedup_cluster_size_histogram": 12, "dedup_rate_report_by_source": 12,
     "dedup_simhash": 12, "dedup_window_rewrite": 12,
     "dedup_window_spans": 12, "dedup_window_spans_shifted": 12,
     "funnel_stages_user": 12, "heavy_hitters_contract": 12,
@@ -132,36 +116,56 @@ _LAST_DRIVER_CHECK = {
     "multimodal_features": 12, "multimodal_probe": 12,
     "nb_classifier_hashed": 12, "nb_quality_classifier": 12,
     "percentile_prune_approx_contract": 12, "profile_embeddings": 12,
-    "quality_percentile_prune": 12, "rank_blend_approx_contract": 12,
-    "salted_agg_event_types": 12, "salted_join_hotkey": 12,
-    "scd2_history": 12, "streaming_interval_join": 12,
-    "streaming_nb_scoring": 12, "train_val_test_split": 12,
-    "triplet_mining_pairs": 12, "vocab_oov_rate": 12,
-    "vocab_top_tokens": 12, "winnow_fingerprints": 12,
-    "winnow_overlap_pairs": 12, "zorder_pruning_stats": 12,
+    "quality_percentile_prune": 12, "salted_agg_event_types": 12,
+    "salted_join_hotkey": 12, "scd2_history": 12,
+    "streaming_interval_join": 12, "streaming_nb_scoring": 12,
+    "train_val_test_split": 12, "triplet_mining_pairs": 12,
+    "vocab_oov_rate": 12, "vocab_top_tokens": 12, "winnow_fingerprints": 12,
+    "zorder_pruning_stats": 12,
     # --- last green driver row: CORRECTNESS_r13.json ---
-    "agg_cube": 13, "agg_rollup": 13, "ann_cosine_topk": 13,
-    "ann_index_streaming": 13, "ann_index_topk": 13, "ann_ivf_topk": 13,
-    "ann_lsh_topk": 13, "ann_pq_recall_contract": 13, "append_union": 13,
-    "bpe_encode_docs_bigvocab": 13, "corpus_rarity": 13,
-    "decontaminate_semantic_embeddings": 13, "dedup_containment": 13,
-    "dedup_embedding_cosine": 13, "dedup_ngram_jaccard": 13,
-    "dedup_ngram_jaccard_guarded": 13, "embedding_cluster_assign": 13,
-    "factor_levels_brand": 13, "format_roundtrip_orc": 13,
-    "fuzzy_matchmerge_segments": 13, "hard_negative_mining": 13,
-    "hilbert_curve_order2": 13, "knn_label_consistency": 13,
-    "locf_events": 13, "matchmerge_composite_key": 13,
-    "matchmerge_expr_key": 13, "matchmerge_inner": 13,
-    "matchmerge_left": 13, "matchmerge_paste_key": 13,
-    "matchmerge_vector_y": 13, "q18_large_volume_orders": 13,
-    "q1_pricing_summary": 13, "q21_waiting_supplier": 13,
-    "q3_top_revenue_orders": 13, "q5_nation_revenue": 13,
-    "quality_rank_blend": 13, "recode_mktsegment": 13, "rename_project": 13,
-    "semantic_dedup_survivors": 13, "sessionize_stateful_evicted": 13,
-    "set_except": 13, "set_intersect": 13, "streaming_funnel": 13,
-    "token_budget_sample": 13, "transfun_derived_date": 13,
-    "upsert_scd1": 13, "user_cadence_stats": 13, "window_multi_horizon": 13,
+    "agg_cube": 13, "agg_rollup": 13, "ann_lsh_topk": 13,
+    "append_union": 13, "bpe_encode_docs_bigvocab": 13,
+    "decontaminate_semantic_embeddings": 13, "dedup_embedding_cosine": 13,
+    "embedding_cluster_assign": 13, "factor_levels_brand": 13,
+    "format_roundtrip_orc": 13, "fuzzy_matchmerge_segments": 13,
+    "hilbert_curve_order2": 13, "locf_events": 13,
+    "matchmerge_composite_key": 13, "matchmerge_expr_key": 13,
+    "matchmerge_inner": 13, "matchmerge_left": 13,
+    "matchmerge_paste_key": 13, "matchmerge_vector_y": 13,
+    "q18_large_volume_orders": 13, "q21_waiting_supplier": 13,
+    "q3_top_revenue_orders": 13, "recode_mktsegment": 13,
+    "rename_project": 13, "semantic_dedup_survivors": 13,
+    "sessionize_stateful_evicted": 13, "set_except": 13,
+    "set_intersect": 13, "streaming_funnel": 13, "token_budget_sample": 13,
+    "transfun_derived_date": 13, "upsert_scd1": 13,
+    "user_cadence_stats": 13, "window_multi_horizon": 13,
     "window_running_spend": 13, "window_topk_per_customer": 13,
+    # --- last green driver row: CORRECTNESS_r14.json ---
+    "ann_cosine_topk": 14, "ann_index_streaming": 14, "ann_index_topk": 14,
+    "ann_ivf_topk": 14, "ann_pq_recall_contract": 14,
+    "anti_join_customers": 14, "bigram_lm_quality": 14,
+    "bpe_encode_docs": 14, "bpe_roundtrip_docs": 14,
+    "ccnet_lm_approx_contract": 14, "ccnet_lm_buckets": 14,
+    "corpus_diff_releases": 14, "corpus_rarity": 14,
+    "curation_pipeline_batch": 14, "decontaminate_attribution": 14,
+    "decontaminate_overlap": 14, "decontaminate_rewrite_docs": 14,
+    "dedup_cluster_survivors": 14, "dedup_clusters_incremental": 14,
+    "dedup_clusters_star": 14, "dedup_clusters_streaming": 14,
+    "dedup_containment": 14, "dedup_minhash_clusters": 14,
+    "dedup_minhash_lsh": 14, "dedup_ngram_jaccard": 14,
+    "dedup_ngram_jaccard_guarded": 14, "distinct_agg_segments": 14,
+    "embedding_quantize_int8": 14, "embedding_standardize": 14,
+    "format_roundtrip_text": 14, "hard_negative_mining": 14,
+    "incremental_lsh_pairs": 14, "incremental_span_dedup": 14,
+    "knn_label_consistency": 14, "mixture_resample_lang": 14,
+    "mixture_temperature_lang": 14, "multimodal_frame_sample": 14,
+    "multimodal_resize": 14, "pivot_status_counts": 14,
+    "q1_pricing_summary": 14, "q5_nation_revenue": 14,
+    "quality_rank_blend": 14, "rank_blend_approx_contract": 14,
+    "scalar_funcs_projection": 14, "semi_join_customers": 14,
+    "source_cap_sample": 14, "text_token_gini": 14,
+    "window_rank_functions": 14, "winnow_overlap_pairs": 14,
+    "winsorize_order_totals": 14,
 }
 
 
@@ -169,70 +173,13 @@ _LAST_DRIVER_CHECK = {
 # consumer wiring, or a semantics-relevant operator edit) — they must
 # re-verify in the new form regardless of a prior green row.
 _CHANGED_THIS_ROUND: frozenset[str] = frozenset({
-    # r14: q1 aggregation became the two-level scaled-long form
-    # (per-partition int64 partials of the contract's own decimal
-    # cast, merged in decimal — values bit-identical, plan changed;
-    # relational_queries.py).
-    "q1_pricing_summary",
-    # r14: _topk_fast_screen reshaped to a scalar-width exchange with
-    # a survivor re-join (+ conservative NaN keeps in the screen
-    # filter) — every two-phase serve path's plan changed
-    # (operators/similarity.py).
-    "ann_cosine_topk",
-    "ann_ivf_topk",
-    "ann_pq_recall_contract",
-    "ann_index_topk",
-    "ann_index_streaming",
-    "knn_label_consistency",
-    "hard_negative_mining",
-    # r14: the incremental LSH band digests and the incremental span
-    # index key narrowed to xxhash64 int64 (equality classes identical
-    # up to ~2^-64 collisions; stored index schema changed —
-    # streaming/incremental_lsh.py, streaming/incremental_spans.py,
-    # operators/dedup.py band_sig_array/span_rows).
-    "incremental_lsh_pairs",
-    "incremental_span_dedup",
-    "dedup_clusters_incremental",
-    "dedup_clusters_streaming",
-    # r14: q5 revenue sum became the same two-level scaled-long form
-    # as q1 (values bit-identical, plan changed;
-    # relational_queries.py).
-    "q5_nation_revenue",
-    # r14: resample rates computed with unpartitioned windows instead
-    # of crossJoin(broadcast(agg)) — kept set bit-identical, plan
-    # changed (operators/sampling.py).
-    "mixture_resample_lang",
-    "mixture_temperature_lang",
-    # r14: shingle/fingerprint/bigram keys narrowed to xxhash64;
-    # decontaminate went single-scan (explode_outer); the bigram model
-    # is joined once instead of twice (operators/dedup.py,
-    # operators/search.py) — outputs exact-tuple-identical, plans
-    # changed.
-    "decontaminate_overlap",
-    "decontaminate_attribution",
-    "decontaminate_rewrite_docs",
-    "dedup_ngram_jaccard",
-    "dedup_ngram_jaccard_guarded",
-    "dedup_containment",
-    "winnow_overlap_pairs",
-    "bigram_lm_quality",
-    "ccnet_lm_buckets",
-    "ccnet_lm_approx_contract",
-    "curation_pipeline_batch",
-    # r14: rank_blend's exact-mode denominator became a window count
-    # (the crossJoin(broadcast(agg)) form re-ran the whole signal
-    # subtree; operators/quality.py) — values identical, plan changed.
-    "quality_rank_blend",
-    "rank_blend_approx_contract",
-    # r14: corpus_rarity's persisted token stream narrowed to xxhash64
-    # keys (operators/text.py); the LSH bucket join key narrowed to one
-    # xxhash64 of (band_idx, band_sig) (operators/dedup.py) — outputs
-    # exact-tuple-identical, plans changed.
-    "corpus_rarity",
-    "dedup_minhash_lsh",
+    # connected_components became one entry point (driver union-find up
+    # to 65,536 edges, star rounds beyond; min-label propagation
+    # deleted): both queries moved from min-label rounds to the driver
+    # path — component-minimum labels unchanged, plans changed
+    # (operators/dedup.py).
     "dedup_minhash_clusters",
     "dedup_cluster_survivors",
-    "dedup_clusters_star",
 })
 
 # Derived view kept for the smoke-test invariant and round tooling: a

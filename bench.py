@@ -307,8 +307,7 @@ def cluster_artifact_experiment(spark) -> dict:
     )
     shutil.rmtree(path, ignore_errors=True)
     t0 = time.time()
-    labels = build_dedup_clusters(docs, path=path, portable=True,
-                                  algorithm="star")
+    labels = build_dedup_clusters(docs, path=path, portable=True)
     build = time.time() - t0
     t0 = time.time()
     cluster_size_histogram(labels).write.format("noop").mode("overwrite").save()

@@ -239,16 +239,16 @@ def q_dedup_minhash_clusters(spark, sf_dir):
     """The actionable dedup artifact: every document labeled with its
     near-dup cluster id (min doc_id of its connected component over the
     verified MinHash+LSH pair graph; singletons cluster to themselves).
-    Spark side = the UNMATERIALIZED build_dedup_clusters pipeline with
-    min-label propagation — keeping the full pipeline and that
-    algorithm live in the driver check, while the dedup_clusters_star
-    twin reads the star-built artifact; oracle = recursive transitive
+    Spark side = the UNMATERIALIZED build_dedup_clusters pipeline —
+    keeping the full pair pipeline and its connected-components step
+    live in the driver check, while the dedup_clusters_star twin reads
+    the materialized artifact; oracle = recursive transitive
     closure."""
     from etlutils_spark.operators.dedup import build_dedup_clusters
 
     return build_dedup_clusters(
         _t(spark, sf_dir, "documents"), num_hashes=8, bands=4,
-        threshold=0.5, portable=True, algorithm="minlabel",
+        threshold=0.5, portable=True,
     )
 
 
@@ -256,12 +256,9 @@ def q_dedup_minhash_clusters(spark, sf_dir):
 def q_dedup_clusters_star(spark, sf_dir):
     """The same cluster labeling as ``dedup_minhash_clusters``, served
     from the materialize-once artifact (``operators.dedup.
-    build_dedup_clusters``), whose build runs the alternating
-    large/small-star algorithm (Kiveris et al. 2014;
-    ``connected_components(algorithm="star")`` — O(log n) rounds on any
-    pair-graph shape vs min-label's O(diameter)). Same
-    recursive-closure oracle: the star labels must equal the
-    component-minimum labeling bit-for-bit. The registered form models
+    build_dedup_clusters``). Same recursive-closure oracle: the
+    artifact's labels must equal the component-minimum labeling
+    bit-for-bit. The registered form models
     production — the pair pipeline runs once per corpus snapshot into
     the artifact; this query (like the histogram / rate-report /
     split consumers) reads the label table."""
@@ -3141,9 +3138,8 @@ def _materialized_clusters(spark, sf_dir):
     if not os.path.exists(os.path.join(scratch, "_SUCCESS")):
         from etlutils_spark.operators.dedup import build_dedup_clusters
 
-        # the artifact build runs the star-CC variant (the scale-safe
-        # default); the recursive-closure oracle pins that its labels
-        # equal minlabel's component minimum bit-for-bit. Built into a
+        # the recursive-closure oracle pins that the artifact's labels
+        # are the component minimum bit-for-bit. Built into a
         # pid-scoped staging dir then renamed into place: concurrent
         # processes (driver correctness + bench on the shared box) must
         # never read a half-written table — whoever renames first wins,
@@ -3153,7 +3149,6 @@ def _materialized_clusters(spark, sf_dir):
         build_dedup_clusters(
             _t(spark, sf_dir, "documents"), path=staging,
             num_hashes=8, bands=4, threshold=0.5, portable=True,
-            algorithm="auto",
         )
         import shutil
 

@@ -671,39 +671,16 @@ def embedding_neardup_pairs(
     )
 
 
-def _cc_driver_small(
-    pairs: DataFrame,
-    left: str,
-    right: str,
-    stats: dict | None,
-    limit: int,
-) -> "DataFrame | None":
-    """The bounded small-graph fast path behind
-    ``connected_components(algorithm="auto")``: collect at most
-    ``limit`` edges (the probe is a pushed-down ``limit(limit + 1)`` —
-    an over-limit graph costs one truncated scan and returns None for
-    the distributed fallback) and run path-compressed union-find on
-    the driver. Output schema and values match the distributed
-    algorithms exactly: one ``(node, cluster_id)`` row per node
-    appearing in any edge, cluster_id = component minimum."""
-    spark = pairs.sparkSession
-    rows = (
-        pairs.select(
-            F.col(left).cast("long"), F.col(right).cast("long")
-        )
-        .limit(limit + 1)
-        .collect()
-    )
-    if len(rows) > limit:
-        return None
-    if any(a is None or b is None for a, b in rows):
-        # null endpoints (e.g. a failed string->long cast): route to
-        # the distributed path so behavior never depends on edge count
-        # (review catch: int(None) raised here while star silently
-        # propagated the nulls)
-        return None
-    if stats is not None:
-        stats["rounds"] = 0
+# Edges at or under this count are labeled by union-find on the driver
+# (about 2 MB collected); larger graphs run the distributed star rounds.
+_CC_DRIVER_MAX_EDGES = 65_536
+
+
+def _cc_driver(spark: SparkSession, rows: list) -> DataFrame:
+    """Path-compressed union-find over collected ``(u, v)`` rows: one
+    ``(node, cluster_id)`` row per node appearing in any edge,
+    cluster_id = component minimum — the same labels ``_cc_star``
+    produces."""
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -740,145 +717,56 @@ def connected_components(
     left: str = "doc_id_1",
     right: str = "doc_id_2",
     max_iter: int = 25,
-    algorithm: str = "minlabel",
     stats: dict | None = None,
-    small_graph_limit: int = 65_536,
 ) -> DataFrame:
     """Union-find over an undirected pair list: (node, cluster_id) where
     cluster_id = the minimum node id in the node's connected component —
     the step that turns near-dup PAIRS into an actionable keep/drop
     assignment (keep cluster_id == node, drop the rest).
 
-    ``algorithm="minlabel"`` (default): each round every node takes the
-    min of its own label and its neighbors' labels; converges in
-    O(graph diameter) rounds (dup clusters are near-cliques — diameter
-    1-2) with an O(E) shuffle per round, all join/groupBy (no
-    driver-side graph). Each round is AQE-planned independently; labels
-    persist round-to-round and are freed on replacement.
-
-    ``algorithm="star"``: the alternating large-star/small-star
-    algorithm (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC 2014) — O(log n) rounds on ANY graph, independent of
-    diameter, at ~2 edge-shuffles per round. The right choice when the
-    pair graph is arbitrary (e.g. ``leakage_safe_split`` over mixed
-    link sources, long chains of pairwise matches) rather than the
-    near-clique dup graphs min-label is tuned for; see the chain-graph
-    test for the round-count separation.
-
-    ``algorithm="auto"``: probe the edge count with a pushed-down
-    ``limit``; at or under ``small_graph_limit`` edges (default 65536,
-    ~2 MB collected) run union-find DRIVER-SIDE — one cheap probe job
+    The ``(left, right)`` projection is persisted once, then probed with
+    a pushed-down ``limit``. At or under ``_CC_DRIVER_MAX_EDGES`` edges
+    (65536, ~2 MB collected) union-find runs DRIVER-SIDE — one probe job
     plus one createDataFrame instead of O(log n) rounds of eager
     checkpoints, each of which costs ~0.5-1 s of fixed scheduling
     regardless of data size (measured: the per-round checkpoints were
-    ~6 s of the streaming index's ~10 s per-batch floor, on graphs of
-    a few hundred edges). Past the limit it IS the star algorithm —
-    the probe stops scanning at limit+1 rows, so big graphs pay one
-    truncated scan, never a collect. The labels are identical by
-    construction (component minimum, no ties), pinned by a
-    differential test. This is the affected-scope refresh's CC mode:
-    the compressed touched-component graph is dup-mass-of-touched-
-    components-sized — tiny for focused batches at ANY corpus size —
-    while a corpus-wide merge storm still falls through to star.
-    Caveat: on overflow the star fallback re-reads the input, so feed
-    "auto" a MATERIALIZED frame (stored parquet, persisted, or
-    checkpointed) when the pair pipeline is expensive — the index
-    forms read stored edge tables, and ``build_dedup_clusters``
-    persists its live chain before calling in. Null endpoints route
-    to the distributed path (the driver probe returns None on any
-    null) so behavior never depends on edge count.
+    ~6 s of the streaming index's ~10 s per-batch floor, on graphs of a
+    few hundred edges). Larger graphs run the alternating
+    large-star/small-star algorithm (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC 2014): O(log n) rounds on
+    ANY graph, independent of diameter, at ~2 edge-shuffles per round.
+    Both paths read the one persisted copy, so the upstream pair
+    pipeline runs once whichever path labels it; the copy is released
+    before return. Labels are identical either way (component minimum,
+    no ties), pinned by a differential test. Null endpoints take the
+    distributed path, so behavior never depends on edge count.
 
-    ``stats``: optional dict, receives ``{"rounds": n}`` for plan
-    audits and tests (``rounds == 0`` marks the driver fast path).
+    ``max_iter`` bounds the star rounds. ``stats``: optional dict,
+    receives ``{"rounds": n}`` for plan audits and tests (``rounds ==
+    0`` marks the driver path).
     """
-    if algorithm == "auto":
-        out = _cc_driver_small(pairs, left, right, stats, small_graph_limit)
-        if out is not None:
-            return out
-        return _cc_star(pairs, left, right, max_iter, stats)
-    if algorithm == "star":
-        return _cc_star(pairs, left, right, max_iter, stats)
-    if algorithm != "minlabel":
-        raise ValueError(
-            f"algorithm={algorithm!r}: use 'minlabel' (diameter-bounded, "
-            "dup-graph default), 'star' (log-bounded, general graphs), "
-            "or 'auto' (driver union-find under a bounded edge count, "
-            "star beyond)"
-        )
-    e = pairs.select(
-        F.col(left).cast("long").alias("a"), F.col(right).cast("long").alias("b")
-    )
-    edges = (
-        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    labels = (
-        edges.select(F.col("a").alias("node")).distinct()
-        .withColumn("comp", F.col("node"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    converged = False
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
-        nbr = (
-            edges.join(labels, edges["b"] == labels["node"])
-            .groupBy("a").agg(F.min("comp").alias("nbr_comp"))
-        )
-        # localCheckpoint (not persist): the round's plan references the
-        # prior labels multiple times, so without lineage truncation the
-        # logical tree doubles per round — exponential analysis memory
-        # on long-diameter graphs. Checkpointing materializes the ~node
-        # table and restarts lineage each round. (At cluster scale with
-        # preemptible executors, swap for reliable checkpoint() to a
-        # checkpoint dir — same call shape.)
-        new_labels = (
-            labels.join(nbr, labels["node"] == nbr["a"], "left")
-            .select(
-                "node",
-                F.least(F.col("comp"), F.coalesce("nbr_comp", F.col("comp"))).alias("comp"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.comp") != F.col("o.comp"))
-            .limit(1)
-            .count()
-        )
-        # unpersist() frees the round-0 PERSISTED table; checkpointed
-        # rounds are a CacheManager no-op — their blocks are released by
-        # the ContextCleaner once the reassignment below drops the last
-        # reference (prompt under CPython refcounting), so live storage
-        # stays ~2 round-tables deep
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    edges.unpersist()
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge within max_iter={max_iter} "
-            "rounds; labels would be partially propagated (cluster_id != "
-            "component minimum). Raise max_iter — rounds needed is O(graph "
-            "diameter), or switch to algorithm='star' (O(log n) rounds)."
-        )
-    if stats is not None:
-        stats["rounds"] = rounds
-    return labels.select("node", F.col("comp").alias("cluster_id"))
+    raw = pairs.select(
+        F.col(left).cast("long").alias("u"), F.col(right).cast("long").alias("v")
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        rows = raw.limit(_CC_DRIVER_MAX_EDGES + 1).collect()
+        # null endpoints (e.g. a failed string->long cast) take the
+        # star path, so the output never depends on the edge count
+        if len(rows) <= _CC_DRIVER_MAX_EDGES and all(
+            a is not None and b is not None for a, b in rows
+        ):
+            if stats is not None:
+                stats["rounds"] = 0
+            return _cc_driver(pairs.sparkSession, rows)
+        return _cc_star(raw, max_iter, stats)
+    finally:
+        raw.unpersist()
 
 
-def _cc_star(
-    pairs: DataFrame,
-    left: str,
-    right: str,
-    max_iter: int,
-    stats: dict | None,
-) -> DataFrame:
-    """Alternating large-star/small-star rounds (Kiveris et al. 2014).
+def _cc_star(raw: DataFrame, max_iter: int, stats: dict | None) -> DataFrame:
+    """Alternating large-star/small-star rounds (Kiveris et al. 2014)
+    over ``raw``, the persisted ``(u, v)`` long projection that
+    :func:`connected_components` owns and releases.
 
     Edges live max->min oriented; each round runs Large-Star (every
     node hooks its larger neighbors onto its neighborhood minimum) then
@@ -887,20 +775,10 @@ def _cc_star(
     the component minimum, reached in O(log n) rounds on any graph —
     two O(E) shuffles per round, no driver-side state beyond the
     convergence probe."""
-    # persisted so the upstream pair pipeline (often a full
-    # minhash->LSH->verify chain) runs exactly ONCE even though both the
-    # edge set and the node set derive from it; released right after the
-    # first edge count materializes both
-    raw = pairs.select(
-        F.col(left).cast("long").alias("u"), F.col(right).cast("long").alias("v")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    # canonical max->min orientation; the upstream pair pipeline (often
-    # a full minhash->LSH->verify chain) runs exactly ONCE, into this
-    # persisted table — everything else derives from it. Self-loops are
-    # dropped from the EDGE set only; the node set below is built from
-    # the unfiltered pair list so a node whose only pairs are (u, u)
-    # still appears in the output labeled to itself — matching
-    # algorithm='minlabel' row-for-row (round-6 advice fix).
+    # canonical max->min orientation. Self-loops are dropped from the
+    # EDGE set only; the node set below is built from the unfiltered
+    # pair list so a node whose only pairs are (u, u) still appears in
+    # the output labeled to itself, as on the driver path.
     edges = (
         raw.filter(F.col("u") != F.col("v"))
         .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
@@ -920,6 +798,8 @@ def _cc_star(
     converged = False
     rounds = 0
     prev_count = edges.count()
+    # both derived tables are materialized: free the pair copy for the
+    # rounds (the caller's unpersist is then a no-op)
     raw.unpersist()
     for _ in range(max_iter):
         rounds += 1
@@ -938,9 +818,11 @@ def _cc_star(
         # Small-Star on the oriented list: every smaller neighbor w != m
         # and u itself attach to m = min of u's smaller neighborhood.
         smins = after_large.groupBy("u").agg(F.min("v").alias("m"))
-        # localCheckpoint for the same reason as min-label: new_edges'
-        # plan holds after_large ~3x and after_large holds sym 2x, so
-        # un-truncated lineage grows ~6x per round.
+        # localCheckpoint, not persist: new_edges' plan holds
+        # after_large ~3x and after_large holds sym 2x, so un-truncated
+        # lineage grows ~6x per round. (At cluster scale with
+        # preemptible executors, swap for reliable checkpoint() to a
+        # checkpoint dir — same call shape.)
         new_edges = (
             after_large.join(smins, "u")
             .filter(F.col("v") != F.col("m"))
@@ -960,7 +842,8 @@ def _cc_star(
         )
         prev_count = new_count
         # frees the round-0 persisted edge table; checkpointed rounds
-        # release via ContextCleaner on reassignment (see min-label)
+        # are a CacheManager no-op — the ContextCleaner releases their
+        # blocks once the reassignment drops the last reference
         edges.unpersist()
         edges = new_edges
         if not changed:
@@ -970,8 +853,8 @@ def _cc_star(
         edges.unpersist()
         all_nodes.unpersist()
         raise RuntimeError(
-            f"connected_components(algorithm='star') did not converge "
-            f"within max_iter={max_iter} rounds; O(log n) rounds suffice "
+            f"connected_components did not converge within "
+            f"max_iter={max_iter} rounds; O(log n) rounds suffice "
             "on any graph — raise max_iter."
         )
     labels = (
@@ -996,7 +879,6 @@ def build_dedup_clusters(
     bands: int = 4,
     threshold: float = 0.5,
     portable: bool = False,
-    algorithm: str = "star",
     max_doc_freq: int | None = None,
     max_bucket_size: int | None = None,
     mode: str = "overwrite",
@@ -1024,30 +906,16 @@ def build_dedup_clusters(
     batch-extendable (:func:`extend_dedup_index`) without re-shingling
     the corpus — choose it when the corpus grows in place.
 
-    ``algorithm="star"`` (default) labels components in O(log n)
-    alternating large/small-star rounds (Kiveris et al. 2014) — the
-    scale-safe choice for arbitrary pair-graph shapes; ``"minlabel"``
-    is O(diameter) propagation, fine for the near-clique dup graphs
-    MinHash produces. The two skew guards (``max_doc_freq``,
-    ``max_bucket_size``) pass straight through to
-    :func:`minhash_dedup_pairs`."""
+    Components come from :func:`connected_components`, which reads the
+    live pair chain once whichever labeling path the edge count picks.
+    The two skew guards (``max_doc_freq``, ``max_bucket_size``) pass
+    straight through to :func:`minhash_dedup_pairs`."""
     pairs = minhash_dedup_pairs(
         docs, text_col=text_col, id_col=id_col, n=n, num_hashes=num_hashes,
         bands=bands, threshold=threshold, portable=portable,
         max_doc_freq=max_doc_freq, max_bucket_size=max_bucket_size,
     )
-    if algorithm == "auto":
-        # "auto" probes the pair count and, on overflow, re-reads the
-        # input in the star fallback — against the LIVE minhash/verify
-        # chain that would re-execute the pipeline's most expensive
-        # stages twice (review catch; the index forms feed auto from
-        # stored parquet, where the re-read is a cheap truncated scan).
-        # Persist so probe and fallback share one materialization; the
-        # label write below is the consuming action.
-        pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
-    comp = connected_components(
-        pairs, f"{id_col}_1", f"{id_col}_2", algorithm=algorithm
-    )
+    comp = connected_components(pairs, f"{id_col}_1", f"{id_col}_2")
     labels = (
         docs.select(F.col(id_col).cast("long").alias(id_col))
         .join(comp, F.col(id_col) == comp["node"], "left")
@@ -1056,17 +924,6 @@ def build_dedup_clusters(
             F.coalesce("cluster_id", F.col(id_col)).cast("long").alias("cluster_id"),
         )
     )
-    if algorithm == "auto":
-        # by the time connected_components(algorithm="auto") returns,
-        # the persist is fully consumed EITHER WAY: the driver fast
-        # path collected its probe and comp is a local relation that
-        # never references pairs, and the star fallback's rounds run
-        # eagerly (per-round convergence counts) into localCheckpoints
-        # that truncate lineage. Holding the cached blocks past this
-        # point is dead weight for the session lifetime (review catch —
-        # the old "caller's action consumes the persist" comment was
-        # wrong on the driver path).
-        pairs.unpersist()
     if path is None:
         return labels
     labels.write.mode(mode).parquet(path)
@@ -1135,9 +992,11 @@ def build_dedup_index(
     (parquet-backed).
 
     Scale: one corpus pass builds the profiles; candidates are the
-    banded self-join; CC is star (O(log n) rounds). At 100 TB each of
-    the three tables is a warehouse table; ``extend_dedup_index`` then
-    makes every subsequent ingest batch O(batch), never O(corpus).
+    banded self-join; CC is :func:`connected_components` (driver
+    union-find on small graphs, O(log n) star rounds beyond). At 100 TB
+    each of the three tables is a warehouse table;
+    ``extend_dedup_index`` then makes every subsequent ingest batch
+    O(batch), never O(corpus).
     Sibling: :func:`build_dedup_clusters` is the fixed-snapshot form —
     exact-shingle verify, labels only, no stored probe state — for
     corpora rebuilt per snapshot rather than grown in place.
@@ -1207,7 +1066,7 @@ def _build_dedup_index_locked(
     prof.write.mode("overwrite").parquet(f"{path}/profiles")
     edges.write.mode("overwrite").parquet(f"{path}/edges")
     stored_edges = spark.read.parquet(f"{path}/edges")
-    comp = connected_components(stored_edges, "id_1", "id_2", algorithm="auto")
+    comp = connected_components(stored_edges, "id_1", "id_2")
     labels = (
         docs.select(F.col(id_col).cast("long").alias(id_col))
         .join(comp, F.col(id_col) == comp["node"], "left")
@@ -1496,7 +1355,6 @@ def extend_dedup_index(
     num_hashes: int | None = None,
     bands: int | None = None,
     threshold: float | None = None,
-    cc_scope: str = "affected",
     writer_lease_stale_sec: float = 600.0,
 ) -> DataFrame:
     """Fold an ingest BATCH into an existing ``build_dedup_index``
@@ -1510,33 +1368,26 @@ def extend_dedup_index(
     (a silent bands mismatch would probe with incompatible signatures
     and drop every cross-batch duplicate without any error).
 
-    ``cc_scope`` picks the connected-components recomputation scope:
-
-    - ``"affected"`` (default): only components actually TOUCHED by
-      the batch's new edges are relabeled. Untouched components cannot
-      change (connectivity is monotone — edges are only added), so
-      their old label rows pass through verbatim; the touched ones are
-      relabeled over a COMPRESSED graph — each touched component
-      contributes its (member, old_label) star edges (old labels are
-      component minima, so every member id is present and the new
-      minimum is exact) plus the new edges. Cost per refresh is
-      O(touched-component mass). Labels are bit-identical to "full"
-      (pinned by tests). Requires labels to be in sync with profiles;
-      an out-of-sync artifact (a prior refresh crashed between its
-      appends and its label rewrite) is DETECTED per refresh in O(1)
-      via a pair of epoch markers (profiles-side bumped before the
-      appends, labels-side after the rewrite — unequal == crashed),
-      and that refresh falls back to full CC, which re-derives every
-      label from the stored edge table and self-heals the crashed
-      batch's shingleable docs. Pre-marker artifacts pay a one-time
-      profile-vs-label anti-join as the migration check. Single
-      writer enforced by the lease below, as everywhere in the
-      artifact tier.
-    - ``"full"``: star CC over the whole stored edge table — always
-      correct with no sync precondition. With post-refresh edge
-      compaction the stored edge table is the |V_dup|-row spanning
-      star, so even "full" no longer grows with accumulated batches;
-      "affected" still wins by not re-deriving untouched components.
+    Connected components are recomputed over the AFFECTED scope: only
+    components actually TOUCHED by the batch's new edges are relabeled.
+    Untouched components cannot change (connectivity is monotone —
+    edges are only added), so their old label rows pass through
+    verbatim; the touched ones are relabeled over a COMPRESSED graph —
+    each touched component contributes its (member, old_label) star
+    edges (old labels are component minima, so every member id is
+    present and the new minimum is exact) plus the new edges. Cost per
+    refresh is O(touched-component mass). This requires labels to be
+    in sync with profiles; an out-of-sync artifact (a prior refresh
+    crashed between its appends and its label rewrite) is DETECTED per
+    refresh in O(1) via a pair of epoch markers (profiles-side bumped
+    before the appends, labels-side after the rewrite — unequal ==
+    crashed), and that refresh recomputes FULL scope instead: CC over
+    the stored edge table ∪ the stored labels' stars, which re-derives
+    every label and self-heals the crashed batch's shingleable docs.
+    Pre-marker artifacts pay a one-time profile-vs-label anti-join as
+    the migration check. Either scope labels bit-identically to a
+    from-scratch rebuild (pinned by tests). Single writer enforced by
+    the lease below, as everywhere in the artifact tier.
 
     Per batch: shingle/sign only the new docs (O(batch)); candidates =
     the batch's bands probed against the stored profile index (the
@@ -1566,7 +1417,7 @@ def extend_dedup_index(
     the ``dedup_clusters_incremental`` oracle query.
 
     CLEAN batches (zero verified pairs — the common production case)
-    take a fast path under ``cc_scope="affected"``: no component can
+    take a fast path (absent drift): no component can
     change, so the edge table is left untouched and the label delta is
     written alone — the batch docs' buckets on a bucketed layout, an
     additive APPEND of genuinely-new rows on the unbucketed one
@@ -1606,8 +1457,6 @@ def extend_dedup_index(
     replay of the killed batch raises — delete the lease file to
     recover immediately."""
     spark = new_docs.sparkSession
-    if cc_scope not in ("full", "affected"):
-        raise ValueError(f"cc_scope must be full|affected, got {cc_scope!r}")
     # the params read happens UNDER the lease too: a rebuild committing
     # between our read and our writes would otherwise hand us stale
     # signature parameters (review catch)
@@ -1629,7 +1478,7 @@ def extend_dedup_index(
             spark, path, n, num_hashes, bands, threshold
         )
         return _extend_dedup_index_locked(
-            spark, path, new_docs, text_col, id_col, cc_scope,
+            spark, path, new_docs, text_col, id_col,
             n, num_hashes, bands, threshold, label_buckets,
             commit_check=lambda: verify_writer_lease(
                 spark, f"{path}/.writer_lease", lease
@@ -1645,7 +1494,6 @@ def _extend_dedup_index_locked(
     new_docs: DataFrame,
     text_col: str,
     id_col: str,
-    cc_scope: str,
     n: int,
     num_hashes: int,
     bands: int,
@@ -1669,7 +1517,6 @@ def _extend_dedup_index_locked(
 
     old_prof = spark.read.parquet(f"{path}/profiles")
     lbl = spark.read.parquet(f"{path}/labels")
-    effective_scope = cc_scope
     id_name = lbl.columns[0]  # builder's id column, positionally
     bucketed = "label_bucket" in lbl.columns
     if bucketed and label_buckets < 2:
@@ -1695,8 +1542,8 @@ def _extend_dedup_index_locked(
     # appends and a labels-side marker only AFTER its label rewrite,
     # so unequal markers == crashed refresh (the r7 review retired the
     # original full-profile anti-join, which silently re-introduced an
-    # O(corpus) scan into the O(batch) path). On drift, fall back to
-    # full CC for this refresh — it re-derives every label from the
+    # O(corpus) scan into the O(batch) path). On drift, run full-scope
+    # CC for this refresh — it re-derives every label from the
     # stored edge table and self-heals the crashed batch's shingleable
     # docs. Pre-marker artifacts (built before r7) pay the anti-join
     # ONCE as the migration path; a successful refresh then writes
@@ -1704,9 +1551,8 @@ def _extend_dedup_index_locked(
     p_epoch = _read_sync_epoch(spark, path, "profiles")
     l_epoch = _read_sync_epoch(spark, path, "labels")
     if p_epoch is None or l_epoch is None:
-        # migration path; the anti-join only matters under "affected"
-        # ("full" re-derives everything regardless — skip the scan)
-        drift = cc_scope == "affected" and not (
+        # migration path
+        drift = not (
             old_prof.select(F.col("doc_id").cast("long").alias("doc_id"))
             .join(
                 lbl.select(
@@ -1721,8 +1567,6 @@ def _extend_dedup_index_locked(
     else:
         drift = p_epoch != l_epoch
         epoch = max(p_epoch, l_epoch) + 1
-    if drift and cc_scope == "affected":
-        effective_scope = "full"
     # batch_profiles eagerly localCheckpoints its output (it fans out
     # to ~6 plan subtrees here), so the shingling/minhash runs once;
     # constructed AFTER the artifact-sanity checks above so a corrupt
@@ -1764,16 +1608,14 @@ def _extend_dedup_index_locked(
     # job inside the post-check append, where a theft during it went
     # undetected (review catch)
     new_edges = new_edges.localCheckpoint(eager=True)
-    batch_clean = False
-    if effective_scope == "affected":
-        # clean-batch probe (r8 verdict #6): a batch with ZERO verified
-        # pairs — the common production case — needs no star snapshot,
-        # no compressed-graph CC, no edge append/rewrite, and touches
-        # only its own docs' label buckets. The probe is an isEmpty on
-        # the just-checkpointed frame, so it costs a first-block read,
-        # not a pipeline re-run.
-        batch_clean = new_edges.isEmpty()
-    if effective_scope == "affected" and bucketed and not batch_clean:
+    # clean-batch probe (r8 verdict #6): a batch with ZERO verified
+    # pairs — the common production case — needs no star snapshot, no
+    # compressed-graph CC, no edge append/rewrite, and touches only its
+    # own docs' label buckets. The probe is an isEmpty on the
+    # just-checkpointed frame, so it costs a first-block read, not a
+    # pipeline re-run. A drift refresh never takes the clean path.
+    batch_clean = not drift and new_edges.isEmpty()
+    if not drift and bucketed and not batch_clean:
         # pre-append snapshot of the COMPACTED star edge table —
         # dup-mass-sized, and guaranteed to actually be the compacted
         # star because equal epochs imply the previous refresh's
@@ -1827,29 +1669,26 @@ def _extend_dedup_index_locked(
             .localCheckpoint(eager=True)
         )
 
-    if effective_scope == "full":
+    if drift:
+        # full scope. Recovery must not trust the edge table ALONE: the
+        # two drift cases leave opposite halves fresh. A crash before
+        # the label rewrite leaves edges complete (old star + the
+        # crashed batch's raw edges) and labels stale; a crash DURING
+        # edge compaction (non-atomic parquet overwrite) leaves labels
+        # complete and edges truncated. The union edges ∪ star(labels)
+        # is correct in BOTH: every row in either table is a true
+        # near-dup relation, and at least one of the two has full
+        # coverage of the true components.
         all_ids = _all_ids()
-        cc_input = spark.read.parquet(f"{path}/edges")
-        if drift:
-            # Recovery must not trust the edge table ALONE: the two
-            # drift cases leave opposite halves fresh. A crash before
-            # the label rewrite leaves edges complete (old star + the
-            # crashed batch's raw edges) and labels stale; a crash
-            # DURING edge compaction (non-atomic parquet overwrite)
-            # leaves labels complete and edges truncated. The union
-            # edges ∪ star(labels) is correct in BOTH: every row in
-            # either table is a true near-dup relation, and at least
-            # one of the two has full coverage of the true components.
-            lbl_star = lbl.filter(
-                F.col("cluster_id").cast("long")
-                != F.col(lbl.columns[0]).cast("long")
-            ).select(
-                F.col("cluster_id").cast("long").alias("id_1"),
-                F.col(lbl.columns[0]).cast("long").alias("id_2"),
-            )
-            cc_input = cc_input.unionByName(lbl_star)
-        comp = connected_components(cc_input, "id_1", "id_2",
-                                    algorithm="auto")
+        lbl_star = lbl.filter(
+            F.col("cluster_id").cast("long")
+            != F.col(lbl.columns[0]).cast("long")
+        ).select(
+            F.col("cluster_id").cast("long").alias("id_1"),
+            F.col(lbl.columns[0]).cast("long").alias("id_2"),
+        )
+        cc_input = spark.read.parquet(f"{path}/edges").unionByName(lbl_star)
+        comp = connected_components(cc_input, "id_1", "id_2")
         labels = (
             all_ids.join(comp, all_ids["doc_id"] == comp["node"], "left")
             .select(
@@ -1913,7 +1752,7 @@ def _extend_dedup_index_locked(
                 new_edges.select("id_1", "id_2")
             )
             comp = connected_components(
-                compressed, "id_1", "id_2", algorithm="auto"
+                compressed, "id_1", "id_2"
             ).localCheckpoint(eager=True)  # feeds the label write AND
             # the edge rewrite that runs after both overwrites
         # buckets whose labels may change = buckets of every node of
@@ -2072,9 +1911,7 @@ def _extend_dedup_index_locked(
             .filter(F.col("id_1") != F.col("id_2"))
             .unionByName(new_edges.select("id_1", "id_2"))
         )
-        comp = connected_components(
-            compressed, "id_1", "id_2", algorithm="auto"
-        )
+        comp = connected_components(compressed, "id_1", "id_2")
         # pre-overwrite snapshot of (id, old label) — labels is about
         # to replace the table this derives from
         prev = (

@@ -522,7 +522,6 @@ def leakage_safe_split(
     right: str = "doc_id_2",
     salt: str = "",
     broadcast_clusters: bool = True,
-    cc_algorithm: str = "star",
     components: DataFrame | None = None,
 ) -> DataFrame:
     """Split assignment keyed by near-dup CLUSTER, not document: every
@@ -542,12 +541,10 @@ def leakage_safe_split(
     Scale: the component table is bounded by the near-dup pair set
     (tiny vs the corpus) so it broadcasts; docs never shuffle. Set
     ``broadcast_clusters=False`` for pathological pair graphs.
-    ``pairs`` here is an ARBITRARY link graph (multiple pair sources
-    union'd, chains of pairwise matches), not the near-clique dup
-    graphs min-label propagation is tuned for — so the component
-    labeling defaults to ``cc_algorithm="star"`` (O(log n) rounds on
-    any shape; see connected_components); pass "minlabel" to match the
-    dedup pipelines' default.
+    ``pairs`` may be an ARBITRARY link graph (multiple pair sources
+    union'd, chains of pairwise matches): ``connected_components``
+    labels any shape, by driver union-find when small and in O(log n)
+    star rounds otherwise, reading the pair pipeline once either way.
 
     Production shape: pass ``components=`` — a precomputed ``(node,
     cluster_id)`` label table (``build_dedup_clusters``'s materialized
@@ -579,7 +576,7 @@ def leakage_safe_split(
         # the pairs path
         comp = comp.filter(F.col("node") != F.col("cluster_id"))
     else:
-        comp = connected_components(pairs, left, right, algorithm=cc_algorithm)
+        comp = connected_components(pairs, left, right)
     if broadcast_clusters:
         comp = F.broadcast(comp)
     labeled = (

@@ -128,7 +128,6 @@ def streaming_dedup_index(
     num_hashes: int = 8,
     bands: int = 4,
     threshold: float = 0.5,
-    cc_scope: str = "affected",
     compact_every: int | None = None,
 ):
     """Streaming ingest into the batch-incremental dedup index: ONE
@@ -185,9 +184,7 @@ def streaming_dedup_index(
         from etlutils_spark.sources.sidecar import bootstrap_action
 
         if bootstrap_action(spark, f"{path}/params") == "extend":
-            extend_dedup_index(
-                path, batch_df, text_col, id_col, cc_scope=cc_scope
-            )
+            extend_dedup_index(path, batch_df, text_col, id_col)
         else:
             build_dedup_index(
                 batch_df, path, text_col, id_col, n, num_hashes, bands,

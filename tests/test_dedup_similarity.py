@@ -501,22 +501,28 @@ def test_sample_frames_explodes_rows(docs):
     assert sorted(per_doc[0]) == sorted(per_doc[1])  # identical payloads
 
 
+def _cc_star_labels(pairs, limit=0, **kw):
+    """connected_components with its driver edge limit lowered to
+    ``limit``, so any larger graph takes the distributed star rounds."""
+    from unittest import mock
+
+    from etlutils_spark.operators import dedup
+
+    with mock.patch.object(dedup, "_CC_DRIVER_MAX_EDGES", limit):
+        return {r.node: r.cluster_id
+                for r in dedup.connected_components(pairs, **kw).collect()}
+
+
 def test_connected_components_chain_and_islands(spark):
-    # a 4-node CHAIN needs multiple propagation rounds (diameter 3) --
+    # a 4-node CHAIN needs multiple star rounds (diameter 3) --
     # exercises convergence, not just one hop; 7-8 is a disjoint island
     pairs = spark.createDataFrame(
         [(2, 1), (2, 3), (3, 4), (7, 8)], "doc_id_1 long, doc_id_2 long"
     )
     out = {r.node: r.cluster_id for r in connected_components(pairs).collect()}
     assert out == {1: 1, 2: 1, 3: 1, 4: 1, 7: 7, 8: 7}
-    # the star variant labels identically on the same graph
-    star = {r.node: r.cluster_id
-            for r in connected_components(pairs, algorithm="star").collect()}
-    assert star == out
-    import pytest
-
-    with pytest.raises(ValueError, match="minlabel.*star|star.*minlabel"):
-        connected_components(pairs, algorithm="bogus")
+    # the star rounds label identically on the same graph
+    assert _cc_star_labels(pairs) == out
 
 
 def test_lsh_parameter_helpers():
@@ -688,13 +694,14 @@ def test_extend_dedup_index_clean_batch_fast_path(spark, tmp_path):
 
 
 def test_extend_dedup_index_affected_scope_matches_full(spark, tmp_path):
-    """cc_scope='affected' must label bit-identically to 'full' (and to
-    a from-scratch rebuild), including the hard cases: a batch doc
-    MERGING two pre-existing clusters, an untouched cluster passing
-    through verbatim, and shingle-less docs."""
-    import pytest
-
+    """The affected-scope refresh must label bit-identically to the
+    full-scope one (reached, as in production, through drift: unequal
+    epoch markers) and to a from-scratch rebuild, including the hard
+    cases: a batch doc MERGING two pre-existing clusters, an untouched
+    cluster passing through verbatim, and shingle-less docs."""
     from etlutils_spark.operators.dedup import (
+        _read_sync_epoch,
+        _write_sync_epoch,
         build_dedup_index,
         extend_dedup_index,
     )
@@ -728,13 +735,16 @@ def test_extend_dedup_index_affected_scope_matches_full(spark, tmp_path):
     build_dedup_index(base, p_aff, threshold=0.3, bands=8,
                       label_buckets=8)
     build_dedup_index(base, p_full, threshold=0.3, bands=8)
+    # unequal epochs send the next p_full refresh to full-scope CC
+    _write_sync_epoch(spark, p_full, "profiles",
+                      _read_sync_epoch(spark, p_full, "labels") + 1)
     # threshold 0.3: a doc concatenating two clusters' texts overlaps
     # each at jaccard ~0.45 — enough to BRIDGE them, which the default
     # 0.5 cannot (a disjoint-cluster bridge tops out below 0.5)
     pick = ["doc_id", "cluster_id"]
     got_aff = sorted(tuple(r) for r in
                      extend_dedup_index(p_aff, batch, threshold=0.3,
-                                        bands=8, cc_scope="affected")
+                                        bands=8)
                      .select(pick).collect())
     got_full = sorted(tuple(r) for r in
                       extend_dedup_index(p_full, batch, bands=8,
@@ -751,8 +761,10 @@ def test_extend_dedup_index_affected_scope_matches_full(spark, tmp_path):
     # untouched cluster and shingle-less/solo docs intact
     assert labels[5] == labels[6] == 5
     assert labels[7] == 7 and labels[9] == 9
-    with pytest.raises(ValueError, match="cc_scope"):
-        extend_dedup_index(p_aff, batch, cc_scope="bogus")
+    # the full-scope refresh re-equalized the epochs
+    assert _read_sync_epoch(spark, p_full, "profiles") == _read_sync_epoch(
+        spark, p_full, "labels"
+    )
 
 
 def test_extend_dedup_index_custom_id_col(spark, tmp_path):
@@ -947,8 +959,8 @@ def test_bucketed_layout_without_modulus_is_loud(spark, tmp_path):
 def test_extend_dedup_index_affected_drift_fallback(spark, tmp_path):
     """A refresh that crashed AFTER its profile/edge appends but BEFORE
     its label rewrite leaves profile ids with no label row. A later
-    cc_scope='affected' extend must detect that drift and fall back to
-    full CC for the refresh, self-healing the crashed batch's
+    extend must detect that drift and fall back to full-scope CC for
+    the refresh, self-healing the crashed batch's
     shingleable docs (r6 advice: the compressed graph alone would
     label them to themselves — wrong and complete-looking)."""
     from etlutils_spark.operators.dedup import (
@@ -992,8 +1004,7 @@ def test_extend_dedup_index_affected_drift_fallback(spark, tmp_path):
     stale = {r.doc_id for r in spark.read.parquet(f"{path}/labels").collect()}
     assert 4 not in stale  # the artifact really is out of sync
 
-    out = extend_dedup_index(path, docs.filter("doc_id = 5"),
-                             cc_scope="affected")
+    out = extend_dedup_index(path, docs.filter("doc_id = 5"))
     labels = {r.doc_id: r.cluster_id for r in out.collect()}
     # drift fallback re-derived doc 4's label from the stored edge
     # table; without it, 4 would label to itself
@@ -1016,8 +1027,7 @@ def test_extend_dedup_index_affected_drift_fallback(spark, tmp_path):
     spark.createDataFrame([(3, 4)], "id_1 long, id_2 long").write.mode(
         "append"
     ).parquet(f"{path2}/edges")
-    out2 = extend_dedup_index(path2, docs.filter("doc_id = 5"),
-                              cc_scope="affected")
+    out2 = extend_dedup_index(path2, docs.filter("doc_id = 5"))
     labels2 = {r.doc_id: r.cluster_id for r in out2.collect()}
     assert labels2 == {1: 1, 2: 1, 3: 3, 4: 3, 5: 5}
 
@@ -1119,43 +1129,31 @@ def test_ann_index_build_query_extend(spark, tmp_path):
 
 def test_cc_star_keeps_self_loop_only_nodes(spark):
     # a node whose ONLY pairs are self-pairs must still appear in the
-    # output, labeled to itself, in BOTH algorithms (round-6 advice fix:
+    # output, labeled to itself, on BOTH paths (round-6 advice fix:
     # star used to build its node set after the u!=v filter and drop it)
     pairs = spark.createDataFrame(
         [(1, 2), (5, 5)], "doc_id_1 long, doc_id_2 long"
     )
     expected = {1: 1, 2: 1, 5: 5}
-    lab_min = {r.node: r.cluster_id
-               for r in connected_components(pairs).collect()}
-    lab_star = {r.node: r.cluster_id
-                for r in connected_components(pairs, algorithm="star").collect()}
-    assert lab_min == expected
-    assert lab_star == expected
+    lab_driver = {r.node: r.cluster_id
+                  for r in connected_components(pairs).collect()}
+    assert lab_driver == expected
+    assert _cc_star_labels(pairs) == expected
 
 
-def test_cc_star_beats_minlabel_on_chains(spark):
-    """Kiveris-style alternating stars converge in O(log n) rounds where
-    min-label propagation needs O(diameter): on a 24-node chain (the
-    arbitrary-pair-graph shape leakage_safe_split can see) star must
-    finish in a fraction of min-label's rounds with identical labels."""
+def test_cc_star_rounds_logarithmic_on_chains(spark):
+    """Kiveris-style alternating stars converge in O(log n) rounds, not
+    O(diameter): a 24-node chain (diameter 23 — the
+    arbitrary-pair-graph shape leakage_safe_split can see) must finish
+    in <= 8 rounds with the component-minimum labels."""
     n = 24
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "doc_id_1 long, doc_id_2 long"
     )
-    s_min, s_star = {}, {}
-    lab_min = {r.node: r.cluster_id
-               for r in connected_components(pairs, max_iter=50,
-                                             stats=s_min).collect()}
-    lab_star = {r.node: r.cluster_id
-                for r in connected_components(pairs, algorithm="star",
-                                              max_iter=50,
-                                              stats=s_star).collect()}
-    assert lab_min == {i: 0 for i in range(n)}
-    assert lab_star == lab_min
-    # diameter 23 -> min-label needs >= 23 rounds; star is logarithmic
-    assert s_min["rounds"] >= 23
+    s_star: dict = {}
+    lab_star = _cc_star_labels(pairs, max_iter=50, stats=s_star)
+    assert lab_star == {i: 0 for i in range(n)}
     assert s_star["rounds"] <= 8
-    assert s_star["rounds"] < s_min["rounds"] / 2
 
 
 def test_cosine_topk_arrow_matches_jvm(spark, sf_dir):
@@ -1814,7 +1812,7 @@ def test_affected_extend_rewrites_only_touched_buckets(spark, tmp_path):
     assert len(before) > 1  # the point needs >1 partition to make
     batch = spark.createDataFrame([(102, a + " z")],
                                   "doc_id bigint, text string")
-    out = extend_dedup_index(path, batch, cc_scope="affected")
+    out = extend_dedup_index(path, batch)
     got = {r.doc_id: r.cluster_id for r in out.collect()}
     assert got[100] == got[101] == got[102] == 100
     assert got[5] == 5 and len(got) == 23
@@ -1840,7 +1838,7 @@ def test_affected_extend_rewrites_only_touched_buckets(spark, tmp_path):
     # correctly (the star is the next refresh's membership source)
     batch2 = spark.createDataFrame([(103, a + " w")],
                                    "doc_id bigint, text string")
-    out2 = extend_dedup_index(path, batch2, cc_scope="affected")
+    out2 = extend_dedup_index(path, batch2)
     got2 = {r.doc_id: r.cluster_id for r in out2.collect()}
     assert got2[100] == got2[101] == got2[102] == got2[103] == 100
     edges2 = sorted(
@@ -1989,6 +1987,8 @@ def test_bucketed_index_returns_contract_schema(spark, tmp_path):
     exactly the large corpora where auto-bucketing engages, breaking
     positional / select(*) consumers (review catch)."""
     from etlutils_spark.operators.dedup import (
+        _read_sync_epoch,
+        _write_sync_epoch,
         build_dedup_index,
         extend_dedup_index,
     )
@@ -2002,12 +2002,22 @@ def test_bucketed_index_returns_contract_schema(spark, tmp_path):
     built = build_dedup_index(docs.filter("doc_id < 3"), path,
                               bands=8, threshold=0.3, label_buckets=4)
     assert built.columns == ["doc_id", "cluster_id"]
-    extended = extend_dedup_index(path, docs.filter("doc_id = 3"),
-                                  cc_scope="affected")
+    extended = extend_dedup_index(path, docs.filter("doc_id = 3"))
     assert extended.columns == ["doc_id", "cluster_id"]
-    extended_full = extend_dedup_index(path, docs.filter("doc_id = 3"),
-                                       cc_scope="full")
+    # unequal epochs route the replayed refresh to full-scope CC
+    _write_sync_epoch(spark, path, "profiles",
+                      _read_sync_epoch(spark, path, "labels") + 1)
+    extended_full = extend_dedup_index(path, docs.filter("doc_id = 3"))
     assert extended_full.columns == ["doc_id", "cluster_id"]
+    assert _read_sync_epoch(spark, path, "profiles") == _read_sync_epoch(
+        spark, path, "labels"
+    )
+    # the full-scope replay labels exactly as a from-scratch build
+    want = build_dedup_index(docs, str(tmp_path / "rebuild"), bands=8,
+                             threshold=0.3)
+    pick = ["doc_id", "cluster_id"]
+    assert sorted(tuple(r) for r in extended_full.select(pick).collect()) \
+        == sorted(tuple(r) for r in want.select(pick).collect())
     # the on-disk table keeps its partition key
     assert "label_bucket" in spark.read.parquet(f"{path}/labels").columns
 
@@ -2355,15 +2365,15 @@ def test_writer_lease_two_concurrent_extends(spark, tmp_path):
 
 
 def test_cc_auto_matches_distributed_algorithms(spark):
-    """algorithm='auto' (bounded driver union-find under
-    small_graph_limit, star beyond) must label every graph identically
-    to the distributed algorithms — cluster_id is the component
-    minimum either way. Pins the fast path on chains, islands,
-    self-loops, and a random graph; pins the fallback by shrinking the
-    limit below the edge count."""
+    """connected_components (bounded driver union-find under
+    _CC_DRIVER_MAX_EDGES, star beyond) must label every graph
+    identically to the distributed star rounds — cluster_id is the
+    component minimum either way. Pins the driver path on chains,
+    islands, self-loops, and a random graph; pins the fallback by
+    shrinking the limit below the edge count."""
     import random
 
-    from etlutils_spark.operators.dedup import connected_components
+    from etlutils_spark.operators import dedup
 
     rng = random.Random(42)
     cases = [
@@ -2373,8 +2383,8 @@ def test_cc_auto_matches_distributed_algorithms(spark):
         # instance — a re-seeded-per-edge RNG collapses to a star
         # graph and never exercises multi-hop merges; review catch)
         [(rng.randint(1, 80), rng.randint(1, 80)) for _ in range(200)],
-        # long chain: min-label must propagate through 30 hops in the
-        # union-find exactly as the distributed rounds do
+        # long chain: the union-find must resolve 30 hops exactly as
+        # the distributed rounds do
         [(i, i + 1) for i in range(50, 80)],
     ]
     for edges in cases:
@@ -2382,33 +2392,46 @@ def test_cc_auto_matches_distributed_algorithms(spark):
         stats: dict = {}
         auto = sorted(
             tuple(r)
-            for r in connected_components(
-                df, algorithm="auto", stats=stats
-            ).collect()
+            for r in dedup.connected_components(df, stats=stats).collect()
         )
         assert stats["rounds"] == 0  # the driver path actually ran
-        star = sorted(
-            tuple(r)
-            for r in connected_components(df, algorithm="star").collect()
-        )
-        minl = sorted(
-            tuple(r)
-            for r in connected_components(
-                df, algorithm="minlabel", max_iter=40  # 30-hop chain
-            ).collect()
-        )
-        assert auto == star == minl
-        # limit below the edge count -> the probe overflows and auto
-        # IS the star algorithm (rounds > 0)
+        # limit below the edge count -> the probe overflows and the
+        # star rounds label the graph (rounds > 0)
         stats2: dict = {}
-        fallback = sorted(
-            tuple(r)
-            for r in connected_components(
-                df, algorithm="auto", stats=stats2, small_graph_limit=2
-            ).collect()
-        )
+        star = sorted(_cc_star_labels(df, limit=2, stats=stats2).items())
         assert stats2["rounds"] > 0
-        assert fallback == star
+        assert auto == star
+
+
+def test_connected_components_leaves_no_persisted_rdd(spark):
+    """connected_components persists its (left, right) projection once
+    for the size probe and the star rounds, and must release it before
+    returning — on the driver path and on the star path. The only
+    persisted RDDs the star path may leave are its lineage-truncating
+    local checkpoints, which the returned labels read from and the
+    ContextCleaner frees with them."""
+    from etlutils_spark.operators import dedup
+
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return {int(k): v for k, v in dict(jsc.getPersistentRDDs()).items()}
+
+    df = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (10, 11), (20, 20)],
+        "doc_id_1 long, doc_id_2 long",
+    )
+    before = set(persisted())
+    stats: dict = {}
+    dedup.connected_components(df, stats=stats).collect()
+    assert stats["rounds"] == 0
+    assert set(persisted()) - before == set()
+
+    before = set(persisted())
+    _cc_star_labels(df, stats=stats)
+    assert stats["rounds"] > 0
+    left = {k: v for k, v in persisted().items() if k not in before}
+    assert [k for k, v in left.items() if not v.rdd().isCheckpointed()] == []
 
 
 def test_writer_lease_heartbeat_and_release_protocol(spark, tmp_path):
@@ -3396,7 +3419,7 @@ def test_bucketed_labels_one_file_per_bucket(spark, tmp_path):
     batch = spark.createDataFrame(
         [(100, a + " doc1 extradup")], "doc_id bigint, text string"
     ).repartition(4)
-    extend_dedup_index(path, batch, cc_scope="affected")
+    extend_dedup_index(path, batch)
     per = files_per_bucket()
     assert per and all(n == 1 for n in per.values()), per
 

@@ -536,3 +536,58 @@ def test_cluster_artifact_consumers_read_label_table(spark, qs):
     split_q = physical_plan(qs["leakage_safe_split"](spark, SF))
     assert "Generate" not in split_q, split_q
     assert "BroadcastHashJoin" in split_q and "SortMergeJoin" not in split_q
+
+
+def _executed_nodes(node):
+    """Every physical node of an executed plan, descending through AQE
+    wrappers, query stages and reused exchanges."""
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        yield from _executed_nodes(node.executedPlan())
+        return
+    yield node
+    if name.endswith("QueryStageExec"):
+        yield from _executed_nodes(node.plan())
+        return
+    children = node.children()
+    for i in range(children.size()):
+        yield from _executed_nodes(children.apply(i))
+
+
+def test_ann_screen_exchanges_carry_no_arrays(spark, qs):
+    """_topk_fast_screen's scalar-exchange contract: the screen window
+    shuffles (query_id, id, __fast, __eps) scalars only; the embedding
+    arrays never ride a planner-inserted shuffle (they are broadcast
+    back to the survivors). Asserted on the executed plan of
+    ann_cosine_topk. The corpus scan's explicit round-robin `spread`
+    repartition is not a screen exchange and is left out."""
+    import json
+
+    from pyspark.sql import types as T
+
+    def has_array(dt):
+        if isinstance(dt, T.ArrayType):
+            return True
+        if isinstance(dt, T.StructType):
+            return any(has_array(f.dataType) for f in dt.fields)
+        if isinstance(dt, T.MapType):
+            return has_array(dt.keyType) or has_array(dt.valueType)
+        return False
+
+    df = qs["ann_cosine_topk"](spark, SF)
+    df.collect()  # runs df's own QueryExecution: its AQE plan is final
+    plan = df._jdf.queryExecution().executedPlan()
+    shuffles = [
+        n for n in _executed_nodes(plan)
+        if n.getClass().getSimpleName() == "ShuffleExchangeExec"
+        and n.shuffleOrigin().toString() == "ENSURE_REQUIREMENTS"
+    ]
+    schemas = [
+        T.StructType.fromJson(json.loads(ex.schema().json()))
+        for ex in shuffles
+    ]
+    assert any("__fast" in s.fieldNames() for s in schemas), (
+        "expected the screen window's shuffle"
+    )
+    for schema in schemas:
+        assert not has_array(schema), schema.simpleString()

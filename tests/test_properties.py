@@ -403,20 +403,23 @@ def ref_components(edges):
     )
 )
 def test_connected_components_auto_matches_reference(spark, edges):
-    """Every algorithm — the driver union-find fast path ('auto' under
-    the limit), the star rounds, min-label propagation — must produce
-    the reference labeling (component minimum) on arbitrary small
-    graphs, including self-loops, parallel edges, and reversed
+    """Both labelings — the driver union-find (connected_components
+    under its edge limit) and the distributed star rounds — must
+    produce the reference labeling (component minimum) on arbitrary
+    small graphs, including self-loops, parallel edges, and reversed
     duplicates that hypothesis generates freely."""
-    from etlutils_spark.operators.dedup import connected_components
+    from unittest import mock
+
+    from etlutils_spark.operators import dedup
 
     df = spark.createDataFrame(edges, "doc_id_1 long, doc_id_2 long")
     want = ref_components(edges)
-    for algo in ("auto", "star", "minlabel"):
+    got = sorted(tuple(r) for r in dedup.connected_components(df).collect())
+    assert got == want, ("driver", edges)
+    # a zero edge limit sends every graph to the star rounds
+    with mock.patch.object(dedup, "_CC_DRIVER_MAX_EDGES", 0):
         got = sorted(
             tuple(r)
-            for r in connected_components(
-                df, algorithm=algo, max_iter=40
-            ).collect()
+            for r in dedup.connected_components(df, max_iter=40).collect()
         )
-        assert got == want, (algo, edges)
+    assert got == want, ("star", edges)

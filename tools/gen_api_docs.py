@@ -188,32 +188,43 @@ def generate() -> dict[str, str]:
     return files
 
 
+OUT_DIR = os.path.join(REPO, "docs", "api")
+
+
+def drift(files: dict[str, str]) -> list[str]:
+    """Files under docs/api that differ from ``files`` (missing or
+    changed), plus stale ones ``files`` no longer has — sorted."""
+    out = []
+    for fname, content in files.items():
+        path = os.path.join(OUT_DIR, fname)
+        if not os.path.exists(path):
+            out.append(fname)
+            continue
+        with open(path) as fh:
+            if fh.read() != content:
+                out.append(fname)
+    existing = {
+        f for f in os.listdir(OUT_DIR) if f.endswith(".md")
+    } if os.path.isdir(OUT_DIR) else set()
+    out.extend(f"{stale} (stale)" for stale in existing - set(files))
+    return sorted(out)
+
+
 def main() -> int:
-    out_dir = os.path.join(REPO, "docs", "api")
     files = generate()
     if "--check" in sys.argv:
-        drift = []
-        for fname, content in files.items():
-            path = os.path.join(out_dir, fname)
-            on_disk = open(path).read() if os.path.exists(path) else None
-            if on_disk != content:
-                drift.append(fname)
-        existing = {
-            f for f in os.listdir(out_dir) if f.endswith(".md")
-        } if os.path.isdir(out_dir) else set()
-        for stale in sorted(existing - set(files)):
-            drift.append(f"{stale} (stale)")
-        if drift:
-            print("API docs out of sync:", ", ".join(sorted(drift)))
+        drifted = drift(files)
+        if drifted:
+            print("API docs out of sync:", ", ".join(drifted))
             return 1
         print(f"docs/api in sync ({len(files)} files)")
         return 0
-    os.makedirs(out_dir, exist_ok=True)
-    for stale in set(os.listdir(out_dir)) - set(files):
+    os.makedirs(OUT_DIR, exist_ok=True)
+    for stale in set(os.listdir(OUT_DIR)) - set(files):
         if stale.endswith(".md"):
-            os.remove(os.path.join(out_dir, stale))
+            os.remove(os.path.join(OUT_DIR, stale))
     for fname, content in files.items():
-        with open(os.path.join(out_dir, fname), "w") as fh:
+        with open(os.path.join(OUT_DIR, fname), "w") as fh:
             fh.write(content)
     print(f"wrote {len(files)} files to docs/api/")
     return 0

@@ -129,7 +129,7 @@ COMMENTARY = {
     "tiny combinable aggregations (cluster key, then size key); the "
     "pair graph is never re-materialized.",
     "dedup_clusters_star": "the materialize-once artifact read back: "
-    "one parquet scan of the label table — the minhash->LSH->star-CC "
+    "one parquet scan of the label table — the minhash->LSH->verify->CC "
     "pipeline ran exactly once at build time (bench: 7.5 s cold build, "
     "0.1 s consumer at sf0.1).",
     "leakage_safe_split": "docs scan + BroadcastHashJoin against the "
@@ -225,8 +225,9 @@ def render(spark) -> str:
         tree = re.sub(r", Statistics\([^)]*\)", "", tree)
         lines = tree.strip().splitlines()
         if len(lines) > 200:
-            # iterative operators (e.g. min-label propagation) unroll
-            # into repeating plan blocks — the head carries the shape
+            # iterative operators (e.g. the star connected-components
+            # rounds) unroll into repeating plan blocks — the head
+            # carries the shape
             tree = "\n".join(lines[:200]) + (
                 f"\n... [{len(lines) - 200} further lines: the iterative"
                 " rounds repeat the block above]"

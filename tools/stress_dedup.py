@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Fat-tail near-dup stress: MinHash -> LSH -> verify -> star-CC end to
+"""Fat-tail near-dup stress: MinHash -> LSH -> verify -> CC end to
 end on a synthetic corpus with ZIPF-distributed duplicate-group sizes,
 where the largest group holds 1% of the corpus — the boilerplate-cluster
 regime the 10x sweeps don't reach (VERDICT.md r5 "Next round" #4).
@@ -15,8 +15,9 @@ is one connected component. Candidate-pair mass is therefore dominated
 by the head group's B(B-1)/2 — the quantity every stage must stay
 linear in.
 
-Per scale the report records: stage walls (pairs pipeline, star CC),
-candidate count BEFORE verification, verified pairs, CC rounds, peak
+Per scale the report records: stage walls (pairs pipeline, connected
+components), candidate count BEFORE verification, verified pairs, CC
+rounds (0 when the graph is small enough for driver union-find), peak
 per-stage shuffle write, and the max-bucket-size guard's effect on the
 same corpus (candidates + wall with the head bucket dropped). The
 pass/fail rubric lives with the recorded numbers in BASELINE.md: wall
@@ -157,12 +158,10 @@ def run_scale(spark, n: int) -> dict:
     s2 = total_shuffle_write(spark)
     out["verify_shuffle_mb"] = shuffle_delta(s1, s2)
 
-    # stage C: star CC over the verified pairs
+    # stage C: connected components over the verified pairs
     t0 = time.time()
     stats: dict = {}
-    comp = connected_components(
-        pairs, "doc_id_1", "doc_id_2", algorithm="star", stats=stats
-    )
+    comp = connected_components(pairs, "doc_id_1", "doc_id_2", stats=stats)
     n_clusters = comp.select("cluster_id").distinct().count()
     out["cc_sec"] = round(time.time() - t0, 2)
     out["cc_rounds"] = stats.get("rounds")

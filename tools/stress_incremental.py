@@ -59,30 +59,30 @@ def run(spark, n: int) -> dict:
         .persist()
     )
     n_batch = batch.count()
-    # explicit full scope: extend's DEFAULT became "affected" in r7, so
-    # an unqualified call here would time affected against itself below
-    # (review catch) — this row is the full-vs-affected comparison
     t0 = time.time()
-    labels = extend_dedup_index(path, batch, cc_scope="full")
+    labels = extend_dedup_index(path, batch)
     n_labeled = labels.count()
     extend_sec = round(time.time() - t0, 2)
-    # same batch again under affected-scope CC (replay is label-
-    # idempotent, so the artifact state is valid): relabels only the
-    # components the batch touches instead of the whole edge table
+    # the refreshed labels must equal a from-scratch build on the union
+    # corpus — the extend's contract, and the cost it exists to avoid
+    rebuild_path = f"{path}_rebuild"
+    shutil.rmtree(rebuild_path, ignore_errors=True)
     t0 = time.time()
-    labels2 = extend_dedup_index(path, batch, cc_scope="affected")
-    n2 = labels2.count()
-    extend_affected_sec = round(time.time() - t0, 2)
-    assert n2 == n_labeled, (n2, n_labeled)
+    rebuilt = build_dedup_index(docs.unionByName(batch), rebuild_path)
+    n_rebuilt = rebuilt.count()
+    rebuild_sec = round(time.time() - t0, 2)
+    assert n_rebuilt == n_labeled, (n_rebuilt, n_labeled)
+    assert labels.exceptAll(rebuilt).isEmpty(), "extend != rebuild"
     docs.unpersist()
     batch.unpersist()
     shutil.rmtree(path, ignore_errors=True)
+    shutil.rmtree(rebuild_path, ignore_errors=True)
     return {
         "corpus": n,
         "batch": n_batch,
         "build_sec": build_sec,
         "extend_sec": extend_sec,
-        "extend_affected_sec": extend_affected_sec,
+        "rebuild_sec": rebuild_sec,
         "labeled_total": n_labeled,
     }
 
@@ -256,7 +256,7 @@ def run_bucketed(spark, n: int, buckets: int, n_refreshes: int = 3,
         )
         before = _files()
         t0 = time.time()
-        extend_dedup_index(path, b2, cc_scope="affected")
+        extend_dedup_index(path, b2)
         extend_secs.append(round(time.time() - t0, 2))
         after = _files()
         new_b = sum(os.path.getsize(p) for p in after - before)
