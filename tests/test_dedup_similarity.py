@@ -513,6 +513,25 @@ def _cc_star_labels(pairs, limit=0, **kw):
                 for r in dedup.connected_components(pairs, **kw).collect()}
 
 
+def _group_jobs(spark, fn):
+    """Run ``fn`` under a fresh job group; return (its result, the
+    number of Spark jobs that group launched). Counting by group keeps
+    late jobs of other tests out of the figure."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status tracker fills from the listener bus: drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_connected_components_chain_and_islands(spark):
     # a 4-node CHAIN needs multiple star rounds (diameter 3) --
     # exercises convergence, not just one hop; 7-8 is a disjoint island
@@ -523,6 +542,45 @@ def test_connected_components_chain_and_islands(spark):
     assert out == {1: 1, 2: 1, 3: 1, 4: 1, 7: 7, 8: 7}
     # the star rounds label identically on the same graph
     assert _cc_star_labels(pairs) == out
+
+
+def test_connected_components_driver_path_is_local_relation(spark):
+    """The driver path's labels are a JVM LocalRelation, not a pickled
+    Python RDD (LogicalRDD), whose every consumer would run
+    Python-worker tasks."""
+    pairs = spark.createDataFrame(
+        [(2, 1), (2, 3), (7, 8)], "doc_id_1 long, doc_id_2 long"
+    )
+    stats: dict = {}
+    out = connected_components(pairs, stats=stats)
+    assert stats["rounds"] == 0
+    plan = out._jdf.queryExecution().analyzed()
+    assert plan.getClass().getSimpleName() == "LocalRelation"
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
+        ("node", "bigint"), ("cluster_id", "bigint")
+    ]
+    assert {r.node: r.cluster_id for r in out.collect()} == {
+        1: 1, 2: 1, 3: 1, 7: 7, 8: 7
+    }
+
+
+def test_shingle_rows_single_partition_scan_launches_no_job(spark, tmp_path):
+    """Building ``shingle_rows`` over a one-partition scan spreads it
+    once and runs no Spark job: a second ``spread`` would ask the
+    already-repartitioned frame for its partition count, which under
+    AQE materializes the shuffle."""
+    path = str(tmp_path / "one_file")
+    spark.createDataFrame(
+        [(1, "a b c d"), (2, "e f g h")], "doc_id long, text string"
+    ).coalesce(1).write.parquet(path)
+    scan = spark.read.parquet(path)
+    assert scan.rdd.getNumPartitions() == 1
+    assert spark.sparkContext.defaultParallelism > 1
+    out, jobs = _group_jobs(spark, lambda: shingle_rows(scan))
+    assert jobs == 0
+    # the spread itself is kept: one round-robin repartition
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Repartition") == 1
 
 
 def test_lsh_parameter_helpers():
@@ -691,6 +749,46 @@ def test_extend_dedup_index_clean_batch_fast_path(spark, tmp_path):
     assert sorted(tuple(r) for r in got2.select(pick).collect()) == sorted(
         tuple(r) for r in want.select(pick).collect()
     )
+
+
+def test_extend_dedup_index_job_budget(spark, tmp_path):
+    """Spark jobs one refresh may launch on the default (unbucketed)
+    layout, pinned at the measured counts: 27 for a dirty batch (its
+    doc pairs with two stored docs) and 18 for a clean one. Each eager
+    action under AQE is a job per query stage, so a new probe,
+    checkpoint or schema inference on the refresh path shows up here
+    first."""
+    from etlutils_spark.operators.dedup import (
+        build_dedup_index,
+        extend_dedup_index,
+    )
+
+    base = "the quick brown fox jumps over the lazy dog near the river bank"
+    rows = [
+        (1, base + " one"),
+        (2, base + " two"),
+        (3, "completely different text about columnar storage engines"),
+        (4, base + " three"),  # dirty batch: pairs with 1 and 2
+        (5, "another unrelated note concerning shuffle partitions"),
+        (7, "hi"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
+    path = str(tmp_path / "budget")
+    build_dedup_index(docs.filter("doc_id in (1, 2, 3, 7)"), path)
+    assert not any(  # the auto layout of a small corpus is unbucketed
+        f.startswith("label_bucket=")
+        for f in os.listdir(os.path.join(path, "labels"))
+    )
+    _, dirty = _group_jobs(
+        spark, lambda: extend_dedup_index(path, docs.filter("doc_id = 4"))
+    )
+    got, clean = _group_jobs(
+        spark, lambda: extend_dedup_index(path, docs.filter("doc_id = 5"))
+    )
+    assert dict(got.select("doc_id", "cluster_id").collect()) == {
+        1: 1, 2: 1, 3: 3, 4: 1, 5: 5, 7: 7
+    }
+    assert dirty <= 27 and clean <= 18, (dirty, clean)
 
 
 def test_extend_dedup_index_affected_scope_matches_full(spark, tmp_path):

@@ -13,6 +13,11 @@ finds cross-batch pairs) and time the extend. The pass rubric lives in
 BASELINE.md: extend wall at 10x the stored corpus must stay ~flat
 (probe side is the broadcast batch; CC re-runs over the edge table,
 which grows with dup mass, not corpus).
+
+Every extend runs under its own Spark job group, and each report
+prints the jobs that group launched next to the seconds
+(``extend_jobs``), read from the status tracker: the per-batch job
+floor as the stored size grows.
 """
 
 from __future__ import annotations
@@ -23,6 +28,7 @@ import shutil
 import sys
 import tempfile
 import time
+import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -31,6 +37,24 @@ from pyspark.sql import functions as F
 from tools.stress_dedup import make_corpus  # noqa: E402
 
 BATCH = 500
+
+
+def _timed_jobs(spark, fn):
+    """Run ``fn`` under its own Spark job group: (its result, wall
+    seconds, the number of jobs the group launched)."""
+    sc = spark.sparkContext
+    group = f"stress-incremental-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    t0 = time.time()
+    try:
+        out = fn()
+    finally:
+        sec = round(time.time() - t0, 2)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status tracker fills from the listener bus: drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    return out, sec, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def run(spark, n: int) -> dict:
@@ -59,10 +83,12 @@ def run(spark, n: int) -> dict:
         .persist()
     )
     n_batch = batch.count()
-    t0 = time.time()
-    labels = extend_dedup_index(path, batch)
-    n_labeled = labels.count()
-    extend_sec = round(time.time() - t0, 2)
+
+    def extend():
+        labels = extend_dedup_index(path, batch)
+        return labels, labels.count()
+
+    (labels, n_labeled), extend_sec, extend_jobs = _timed_jobs(spark, extend)
     # the refreshed labels must equal a from-scratch build on the union
     # corpus — the extend's contract, and the cost it exists to avoid
     rebuild_path = f"{path}_rebuild"
@@ -82,6 +108,7 @@ def run(spark, n: int) -> dict:
         "batch": n_batch,
         "build_sec": build_sec,
         "extend_sec": extend_sec,
+        "extend_jobs": extend_jobs,
         "rebuild_sec": rebuild_sec,
         "labeled_total": n_labeled,
     }
@@ -108,7 +135,7 @@ def run_accumulated(spark, n: int, n_batches: int = 12) -> dict:
     t0 = time.time()
     build_dedup_index(docs, path)
     build_sec = round(time.time() - t0, 2)
-    extend_secs = []
+    extend_secs, extend_jobs = [], []
     edge_rows = []
     for k in range(n_batches):
         # batch k: near-dups of stored docs, ids disjoint per batch so
@@ -123,9 +150,11 @@ def run_accumulated(spark, n: int, n_batches: int = 12) -> dict:
             .persist()
         )
         batch.count()
-        t0 = time.time()
-        extend_dedup_index(path, batch)
-        extend_secs.append(round(time.time() - t0, 2))
+        _, sec, jobs = _timed_jobs(
+            spark, lambda: extend_dedup_index(path, batch)
+        )
+        extend_secs.append(sec)
+        extend_jobs.append(jobs)
         edge_rows.append(
             spark.read.parquet(os.path.join(path, "edges")).count()
         )
@@ -138,6 +167,7 @@ def run_accumulated(spark, n: int, n_batches: int = 12) -> dict:
         "n_batches": n_batches,
         "build_sec": build_sec,
         "extend_secs": extend_secs,
+        "extend_jobs": extend_jobs,
         "edge_rows_after_each": edge_rows,
     }
 
@@ -249,15 +279,15 @@ def run_bucketed(spark, n: int, buckets: int, n_refreshes: int = 3,
         .persist()
     )
     batch.count()
-    extend_secs, rewrite_fracs = [], []
+    extend_secs, extend_jobs, rewrite_fracs = [], [], []
     for k in range(n_refreshes):
         b2 = batch.select(
             (F.col("doc_id") + F.lit(k * 1000)).alias("doc_id"), "text"
         )
         before = _files()
-        t0 = time.time()
-        extend_dedup_index(path, b2)
-        extend_secs.append(round(time.time() - t0, 2))
+        _, sec, jobs = _timed_jobs(spark, lambda: extend_dedup_index(path, b2))
+        extend_secs.append(sec)
+        extend_jobs.append(jobs)
         after = _files()
         new_b = sum(os.path.getsize(p) for p in after - before)
         tot_b = sum(os.path.getsize(p) for p in after)
@@ -288,6 +318,7 @@ def run_bucketed(spark, n: int, buckets: int, n_refreshes: int = 3,
         "label_buckets": buckets,
         "build_sec": build_sec,
         "extend_secs": extend_secs,
+        "extend_jobs": extend_jobs,
         "label_bytes_rewritten_frac": rewrite_fracs,
         "labels_digest": [int(digest.s), int(digest.c)],
     }
