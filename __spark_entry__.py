@@ -180,6 +180,15 @@ _CHANGED_THIS_ROUND: frozenset[str] = frozenset({
     # (operators/dedup.py).
     "dedup_minhash_clusters",
     "dedup_cluster_survivors",
+    # IVF/PQ moved onto the artifact's quantizer primitives
+    # (operators/similarity.py): ivf_topk trains the seeded numpy
+    # k-means on the orderBy(id) sample instead of Spark ML KMeans (plan
+    # changed), and the PQ codebooks now train with k-means++ seeding,
+    # so the codes behind the PQ and artifact queries moved.
+    "ann_ivf_topk",
+    "ann_pq_recall_contract",
+    "ann_index_topk",
+    "ann_index_streaming",
 })
 
 # Derived view kept for the smoke-test invariant and round tooling: a

@@ -225,19 +225,6 @@ def main() -> None:
             spark.catalog.clearCache()
         extras[name] = round(best, 3)
 
-    experiments = {
-        **cluster_artifact_experiment(spark),
-        **tokens_mode_experiment(spark),
-        **pq_scan_mode_experiment(spark),
-        **minhash_hash_mode_experiment(spark),
-        **skew_join_experiment(spark),
-        **bucketed_join_experiment(spark),
-        **decimal_vs_double_experiment(spark),
-        **layout_pruning_experiment(spark),
-        **ann_jvm_vs_arrow_experiment(spark),
-        **bloom_filter_join_experiment(spark),
-    }
-
     m = re.search(r"sf([0-9.]+)", SF_DIR)
     sf = float(m.group(1).rstrip(".")) if m else None
     compact = {
@@ -247,18 +234,18 @@ def main() -> None:
         "queries": timings,
         "sf": sf,
     }
-    full = {**compact, "extras_r4": extras, "experiments": experiments}
+    full = {**compact, "extras_r4": extras}
     # The driver captures only the last ~2000 bytes of stdout
     # (BENCH_r04 lost the headline to tail truncation). stdout carries
     # EXACTLY ONE compact line (~1 KB) so it always survives the tail
-    # window; the full report (extras + experiments) goes to stderr and
+    # window; the full report (with extras) goes to stderr and
     # a sidecar file for humans/the judge.
     repo = os.path.dirname(os.path.abspath(__file__))
     with open(os.path.join(repo, "bench_full.json"), "w") as fh:
         json.dump(full, fh, indent=1)
     # round-stamped copy (r6 verdict "Next round" #6): the driver's
     # BENCH_r{N}.json keeps only a 2000-char stdout tail, which loses
-    # the extras/experiments object; BENCH_full_r{N}.json is committed
+    # the extras object; BENCH_full_r{N}.json is committed
     # alongside it so round-over-round extras comparison parses out of
     # the repo alone. Round = 1 + the newest committed driver bench.
     rounds = [
@@ -279,492 +266,6 @@ def main() -> None:
     print(json.dumps(full), file=sys.stderr)
     print(json.dumps(compact), flush=True)
     spark.stop()
-
-
-def cluster_artifact_experiment(spark) -> dict:
-    """The honest cost split the registered cluster-consumer queries
-    (dedup_clusters_star, leakage_safe_split, histogram, rate report)
-    amortize away: COLD build of the materialize-once cluster artifact
-    (full minhash->LSH->verify->star-CC pipeline, written to parquet)
-    vs a consumer aggregation reading it back. Their min-of-N timings
-    measure the production read path; this records what the once-per-
-    corpus-snapshot build costs at this SF."""
-    import shutil
-    import tempfile
-
-    from etlutils_spark.operators.dedup import (
-        build_dedup_clusters,
-        cluster_size_histogram,
-    )
-    from etlutils_spark.sources.files import read_table
-
-    docs = read_table(spark, "documents", SF_DIR)
-    # pid-scoped scratch: concurrent bench runs on the shared box (the
-    # variance scenario BASELINE.md documents) must not rmtree each
-    # other's artifact mid-read
-    path = os.path.join(
-        tempfile.gettempdir(), f"bench_cluster_artifact_{os.getpid()}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
-    t0 = time.time()
-    labels = build_dedup_clusters(docs, path=path, portable=True)
-    build = time.time() - t0
-    t0 = time.time()
-    cluster_size_histogram(labels).write.format("noop").mode("overwrite").save()
-    consume = time.time() - t0
-    shutil.rmtree(path, ignore_errors=True)
-    return {
-        "cluster_artifact_cold_build_sec": round(build, 3),
-        "cluster_artifact_consumer_sec": round(consume, 3),
-    }
-
-
-def tokens_mode_experiment(spark) -> dict:
-    """The tokens_to_ids plan-budget story, measured per round: the
-    literal map is fastest while it fits the plan budget; at BPE scale
-    (32k synthetic vocab here) the literal plan is a compile-time
-    cliff (measured ~58 s at r4 — not re-paid every round), while the
-    broadcast join stays flat. Reported: literal and broadcast at 8k,
-    broadcast at 32k."""
-    from pyspark.sql import functions as F
-
-    from etlutils_spark.operators.text import build_vocab, tokens_to_ids
-    from etlutils_spark.sources.files import read_table
-
-    docs = read_table(spark, "documents", SF_DIR)
-    v8k = build_vocab(docs, top_n=8192)
-    # synthetic 32k vocab: real top tokens + deterministic fillers (the
-    # filler ids are never hit; size is what stresses the plan/build)
-    filler = spark.range(32768).select(
-        F.concat(F.lit("tok_"), F.col("id")).alias("token"),
-        (F.col("id") + 100000).alias("vocab_rank"),
-    )
-    v32k = (
-        v8k.select("token", "vocab_rank")
-        .unionByName(filler)
-        .limit(32768)
-    )
-    out = {}
-    for key, vocab, mode in (
-        ("tokens_literal_8k_sec", v8k, "literal"),
-        ("tokens_broadcast_8k_sec", v8k, "broadcast"),
-        ("tokens_broadcast_32k_sec", v32k, "broadcast"),
-    ):
-        out[key] = time_min2(
-            tokens_to_ids(docs, vocab, mode=mode).select(
-                "doc_id", F.size("ids").alias("n")
-            ),
-            attempts=2,
-        )
-    return out
-
-
-def time_min2(df, attempts: int = 3) -> float:
-    """Min-of-N noop-write wall clock (same noise rationale as the
-    headline loop; the name is historical — attempts defaults to 3)."""
-    best = None
-    for _ in range(attempts):
-        t0 = time.time()
-        df.write.format("noop").mode("overwrite").save()
-        best = time.time() - t0 if best is None else min(best, time.time() - t0)
-    return round(best, 3)
-
-
-def decimal_vs_double_experiment(spark) -> dict[str, float]:
-    """Oracle-parity tax tier: the TPC-H Q1 aggregate timed with
-    decimal(38,6) accumulation (bitwise-deterministic at any partition
-    count / cluster size — what the correctness gate and any
-    audit-reproducibility contract require) vs plain double sums (the
-    production fast path when last-ulp stability isn't contractual).
-    Both run from the same scan; the delta is pure aggregation cost.
-
-    r14 measurement fix (OPTIMIZATION_r14.md): the registered
-    q1_pricing_summary became the two-level scaled-long form, so
-    `q1_decimal_exact_sec` now builds the single-level decimal(38,6)
-    aggregate INLINE (the form the key has always measured — reusing
-    the registered query would silently time the scaled-long path and
-    break the key's round-over-round meaning); the registered form is
-    added as `q1_registered_two_level_sec`."""
-    from pyspark.sql import functions as F
-
-    from etlutils_spark.entry_queries import davg, dsum
-    from etlutils_spark.relational_queries import CUTOFF, q1_pricing_summary
-    from etlutils_spark.sources.files import read_table
-
-    li = read_table(spark, "lineitem", SF_DIR)
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    charge = disc_price * (1 + F.col("l_tax"))
-    decimal_exact = (
-        li.filter(F.col("l_shipdate") <= F.to_timestamp(F.lit(CUTOFF)))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            dsum(F.col("l_quantity"), "sum_qty"),
-            dsum(F.col("l_extendedprice"), "sum_base_price"),
-            dsum(disc_price, "sum_disc_price"),
-            dsum(charge, "sum_charge"),
-            davg(F.col("l_quantity"), "avg_qty"),
-            davg(F.col("l_extendedprice"), "avg_price"),
-            davg(F.col("l_discount"), "avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-    fast = (
-        li.filter(F.col("l_shipdate") <= F.to_timestamp(F.lit(CUTOFF)))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum("l_quantity").alias("sum_qty"),
-            F.sum("l_extendedprice").alias("sum_base_price"),
-            F.sum(disc_price).alias("sum_disc_price"),
-            F.sum(charge).alias("sum_charge"),
-            F.avg("l_quantity").alias("avg_qty"),
-            F.avg("l_extendedprice").alias("avg_price"),
-            F.avg("l_discount").alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-    # Third mode: scaled-long accumulation — round(x * 10^6) summed as
-    # int64 then rescaled. Same IEEE ops on any engine (portable like
-    # the decimal path; measured bit-equal to it on this data) at
-    # near-double speed. Still not the registered form: int64 overflows
-    # once a group's scaled sum passes ~9.2e18, and round(x*1e6) is only
-    # empirically equal to the decimal cast's rounding. The REGISTERED
-    # q1 (r14) is the two-level variant that fixes both — per-partition
-    # long partials of the contract's own decimal cast, merged in
-    # decimal — timed below as q1_registered_two_level_sec.
-    sl = lambda c: (F.sum(F.round(c * 1e6).cast("long")) / F.lit(1e6))  # noqa: E731
-    scaled = (
-        li.filter(F.col("l_shipdate") <= F.to_timestamp(F.lit(CUTOFF)))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            sl(F.col("l_quantity")).alias("sum_qty"),
-            sl(F.col("l_extendedprice")).alias("sum_base_price"),
-            sl(disc_price).alias("sum_disc_price"),
-            sl(charge).alias("sum_charge"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-    return {
-        "q1_decimal_exact_sec": time_min2(decimal_exact),
-        "q1_double_fast_sec": time_min2(fast),
-        "q1_scaled_long_sec": time_min2(scaled),
-        "q1_registered_two_level_sec": time_min2(
-            q1_pricing_summary(spark, SF_DIR)
-        ),
-    }
-
-
-def layout_pruning_experiment(spark) -> dict[str, float]:
-    """Data-layout tier: the same selective two-column filter+aggregate
-    scanned from an unsorted copy of lineitem vs a Z-ordered copy
-    (sources/layout.py). Parquet footer min/max stats let the Z-ordered
-    scan skip most files/row-groups for filters on EITHER clustered
-    column; the unsorted copy reads everything. Layout cost is untimed
-    (once-per-dataset, amortized over every selective scan) — at 100 TB
-    this is the difference between touching 1% and 100% of the input."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from etlutils_spark.sources.files import read_table
-    from etlutils_spark.sources.layout import zorder_layout
-
-    li = read_table(spark, "lineitem", SF_DIR)
-    cols = ["l_partkey", "l_orderkey"]
-    d = tempfile.mkdtemp(prefix="bench_layout_")
-    li.repartition(32).write.mode("overwrite").parquet(f"{d}/plain")
-    zorder_layout(li, cols, num_partitions=32).write.mode("overwrite").parquet(
-        f"{d}/z"
-    )
-    b = li.agg(
-        *[F.min(c).alias(f"mn_{c}") for c in cols],
-        *[F.max(c).alias(f"mx_{c}") for c in cols],
-    ).first()
-    # low-end 1/16 window per column (a mid-domain window straddles the
-    # top rank bit and defeats coarse pruning — see tests/test_layout.py)
-    hi = {c: b[f"mn_{c}"] + (b[f"mx_{c}"] - b[f"mn_{c}"]) // 16 for c in cols}
-
-    def q(path):
-        df = spark.read.parquet(path)
-        for c in cols:
-            df = df.filter(F.col(c) <= hi[c])
-        return df.agg(F.sum("l_extendedprice").alias("s"))
-
-    def files_surviving_stats(path) -> int:
-        # what parquet footer min/max pruning leaves to be read — the
-        # I/O-proportional metric that scales where local wall-clock
-        # (dominated by fixed per-query cost at bench SF) does not
-        import glob
-
-        import pyarrow.parquet as pq
-
-        n = 0
-        for f in glob.glob(f"{path}/part-*.parquet"):
-            keep = True
-            for c in cols:
-                vals = pq.read_table(f, columns=[c])[c]
-                if len(vals) and vals.to_pandas().min() > hi[c]:
-                    keep = False
-            n += keep
-        return n
-
-    return {
-        "filter_scan_plain_sec": time_min2(q(f"{d}/plain")),
-        "filter_scan_zorder_sec": time_min2(q(f"{d}/z")),
-        "filter_scan_plain_files": files_surviving_stats(f"{d}/plain"),
-        "filter_scan_zorder_files": files_surviving_stats(f"{d}/z"),
-    }
-
-
-def ann_jvm_vs_arrow_experiment(spark) -> dict[str, float]:
-    """Vectorization tier: the same exact brute-force cosine top-10
-    (5 queries x corpus) as (a) JVM expression-tree dot products
-    (zip_with/aggregate per row — whole-stage codegen but scalar) vs
-    (b) one numpy/BLAS matmul per Arrow batch with per-batch partial
-    top-k. Same output (differential-tested); the delta is the cost of
-    scalar expression evaluation vs dense linear algebra — the reason
-    the embedding tier routes through Arrow batches at scale."""
-    from pyspark.sql import functions as F
-
-    from etlutils_spark.operators.similarity import cosine_topk, cosine_topk_arrow
-    from etlutils_spark.sources.files import read_table
-
-    emb = read_table(spark, "embeddings", SF_DIR)
-    q = emb.filter(F.col("vec_id") < 5)
-    # replicate the corpus 32x (distinct synthetic ids) so the timing is
-    # compute-bound — at the native sf0.1 corpus size both paths sit in
-    # fixed per-query overhead and the vectorization delta is invisible
-    n = emb.count()
-    rep = (
-        emb.crossJoin(F.broadcast(spark.range(32).select(F.col("id").alias("__r"))))
-        .select(
-            (F.col("vec_id") + F.col("__r") * n).alias("vec_id"), "embedding"
-        )
-    )
-    rep.persist().count()
-    try:
-        jvm = time_min2(cosine_topk(rep, q, k=10, exact=False))
-        arrow = time_min2(cosine_topk_arrow(rep, q, k=10))
-    finally:
-        rep.unpersist()
-    return {"ann_jvm_expr_sec": jvm, "ann_arrow_blas_sec": arrow}
-
-
-def pq_scan_mode_experiment(spark) -> dict[str, float]:
-    """PQ tier: exact Arrow/BLAS brute force vs the PQ path fused
-    (normalize+encode+ADC each run — the one-shot cost) vs the PQ scan
-    over a PRE-ENCODED codes table (the steady-state production mode:
-    encode once, query many). Corpus replicated 32x so the scan stage
-    dominates. The headline PQ win at 100 TB is memory geometry (m
-    bytes/vector vs 4*dim), which local wall-clock can only hint at —
-    the pre-encoded scan reading 32x less data per row is that hint."""
-    from pyspark.sql import functions as F
-
-    from etlutils_spark.operators.similarity import (
-        cosine_topk_arrow,
-        pq_encode,
-        pq_topk,
-        pq_train,
-    )
-    from etlutils_spark.sources.files import read_table
-
-    emb = read_table(spark, "embeddings", SF_DIR)
-    q = emb.filter(F.col("vec_id") < 5)
-    n = emb.count()
-    rep = (
-        emb.crossJoin(F.broadcast(spark.range(32).select(F.col("id").alias("__r"))))
-        .select((F.col("vec_id") + F.col("__r") * n).alias("vec_id"), "embedding")
-    )
-    rep.persist().count()
-    books = pq_train(rep)
-    codes = pq_encode(rep, books)
-    codes.persist().count()
-    try:
-        brute = time_min2(cosine_topk_arrow(rep, q, k=10))
-        fused = time_min2(pq_topk(rep, q, k=10, shortlist=256))
-        pre = time_min2(
-            pq_topk(rep, q, k=10, shortlist=256, codes=codes, codebooks=books)
-        )
-    finally:
-        rep.unpersist()
-        codes.unpersist()
-    return {
-        "ann_bruteforce_arrow_sec": brute,
-        "ann_pq_fused_sec": fused,
-        "ann_pq_precoded_sec": pre,
-    }
-
-
-def minhash_hash_mode_experiment(spark) -> dict[str, float]:
-    """Hash-cost tier: the full MinHash+LSH near-dup pipeline with
-    portable md5 signatures (hex-string min — engine-portable, what the
-    oracle gate reproduces bit-for-bit) vs xxhash64 signatures (bigint
-    min — JVM-fast, the production mode). Same candidate semantics;
-    the delta is 8 string hashes + string min-aggregation per shingle
-    vs 8 long hashes. At corpus scale the signature stage dominates
-    MinHash cost, so this ratio IS the portable-mode tax."""
-    from pyspark.sql import functions as F
-
-    from etlutils_spark.operators.dedup import minhash_dedup_pairs
-    from etlutils_spark.sources.files import read_table
-
-    docs = read_table(spark, "documents", SF_DIR)
-    # replicate 4x (distinct ids, distinct-ified text) so the signature
-    # stage dominates — at the native bench corpus both modes sit in
-    # fixed per-query overhead and the hash-cost delta is invisible
-    n = docs.count()
-    rep = (
-        docs.crossJoin(F.broadcast(spark.range(4).select(F.col("id").alias("__r"))))
-        .select(
-            (F.col("doc_id") + F.col("__r") * n).alias("doc_id"),
-            F.concat_ws(" ", F.col("text"), F.concat(F.lit("rep"), F.col("__r"))).alias(
-                "text"
-            ),
-        )
-    )
-    rep.persist().count()
-    try:
-        md5 = time_min2(minhash_dedup_pairs(rep, portable=True))
-        xx = time_min2(minhash_dedup_pairs(rep, portable=False))
-    finally:
-        rep.unpersist()
-    return {"minhash_md5_portable_sec": md5, "minhash_xxhash64_sec": xx}
-
-
-def skew_join_experiment(spark) -> dict[str, float]:
-    """Skew tier: a Zipf-hot fact (one key owns ~50% of rows) joined to
-    a dim, timed (a) naively with AQE skew-split disabled — one reducer
-    drags the stage; (b) with AQE skewJoin enabled (runtime split);
-    (c) with an explicit deterministic salt (operators.skew) — the plan
-    that does not depend on AQE detecting the skew. At 100 TB a single
-    hot key is the difference between a 10-minute and a 10-hour stage;
-    both mitigations must exist because AQE only splits what its stats
-    see post-shuffle."""
-    from pyspark.sql import functions as F
-
-    from etlutils_spark.operators.skew import salted_join
-    from etlutils_spark.sources.files import read_table
-
-    li = read_table(spark, "lineitem", SF_DIR).select("l_orderkey", "l_extendedprice")
-    # half the rows collapse onto one hot key -> one reducer owns them
-    skewed = li.withColumn(
-        "k", F.when(F.col("l_orderkey") % 2 == 0, F.lit(0)).otherwise(F.col("l_orderkey"))
-    )
-    dim = (
-        spark.range(0, 200_000)
-        .select(F.col("id").alias("k"), (F.col("id") % 7).alias("grp"))
-    )
-
-    def agg(j):
-        return j.groupBy("grp").agg(F.sum("l_extendedprice").alias("s"))
-
-    prev_b = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    prev_sk = spark.conf.get("spark.sql.adaptive.skewJoin.enabled")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-        plain = time_min2(agg(skewed.join(dim, "k")))
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-        aqe = time_min2(agg(skewed.join(dim, "k")))
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-        salted = time_min2(agg(salted_join(skewed, dim, on="k")))
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_b)
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", prev_sk)
-    return {
-        "skew_join_plain_sec": plain,
-        "skew_join_aqe_sec": aqe,
-        "skew_join_salted_sec": salted,
-    }
-
-
-def bucketed_join_experiment(spark) -> dict[str, float]:
-    """Exchange-free co-location tier: the same lineitem-x-orders join
-    timed from plain parquet (2 shuffles + sorts) and from bucketed+
-    sorted tables (0 exchanges). Layout cost is untimed — bucketing is
-    a once-per-dataset investment amortized over every downstream join,
-    the core 100 TB fact-to-fact pattern. Broadcast is disabled inside
-    the experiment so the measured delta is the exchange itself (at
-    bench SF the dim side would otherwise broadcast; at 100 TB neither
-    side broadcasts)."""
-    from pyspark.sql import functions as F
-
-    from etlutils_spark.operators.skew import bucketed_table
-    from etlutils_spark.sources.files import read_table
-
-    li = read_table(spark, "lineitem", SF_DIR).select(
-        "l_orderkey", "l_extendedprice", "l_discount"
-    )
-    od = read_table(spark, "orders", SF_DIR).select("o_orderkey", "o_orderdate")
-    bucketed_table(li, "bench_li_b", ["l_orderkey"], 16, sort_cols=["l_orderkey"])
-    bucketed_table(od, "bench_od_b", ["o_orderkey"], 16, sort_cols=["o_orderkey"])
-
-    def revenue_by_day(a, b):
-        return (
-            a.join(b, a["l_orderkey"] == b["o_orderkey"])
-            .groupBy("o_orderdate")
-            .agg(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("rev"))
-        )
-
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        shuffled = time_min2(revenue_by_day(li, od))
-        bucketed = time_min2(
-            revenue_by_day(spark.table("bench_li_b"), spark.table("bench_od_b"))
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    return {"join_shuffled_sec": shuffled, "join_bucketed_sec": bucketed}
-
-
-def bloom_filter_join_experiment(spark) -> dict[str, float]:
-    """Runtime bloom-filter semi-join reduction: a selective dimension
-    filter injected as a bloom filter into the fact scan, so fact rows
-    that cannot join die at the scan instead of riding the shuffle.
-    Spark's default applicationSideScanSizeThreshold (10 GB) targets
-    real clusters; the experiment lowers it to 0 so the same plan
-    rewrite fires at bench SF — the measured delta understates the
-    100 TB effect, where the avoided shuffle is the dominant term.
-    Broadcast is disabled: with a broadcastable dim the optimizer
-    correctly prefers the broadcast join and no bloom filter is needed.
-    """
-    from pyspark.sql import functions as F
-
-    from etlutils_spark.sources.files import read_table
-
-    li = read_table(spark, "lineitem", SF_DIR).select(
-        "l_orderkey", "l_extendedprice", "l_discount"
-    )
-    od = read_table(spark, "orders", SF_DIR).filter(
-        (F.col("o_orderpriority") == "1-URGENT") & (F.col("o_totalprice") > 150000)
-    ).select("o_orderkey")
-
-    def probe(a, b):
-        return a.join(b, a["l_orderkey"] == b["o_orderkey"]).agg(
-            F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("rev")
-        )
-
-    confs = {
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
-    }
-    prev = {k: spark.conf.get(k) for k in confs}
-    prev_bf = spark.conf.get("spark.sql.optimizer.runtime.bloomFilter.enabled")
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
-        plain = time_min2(probe(li, od))
-        spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-        bloomed = time_min2(probe(li, od))
-    finally:
-        for k, v in prev.items():
-            spark.conf.set(k, v)
-        spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", prev_bf)
-    return {
-        "bloom_filter_off_sec": plain,
-        "bloom_filter_on_sec": bloomed,
-    }
 
 
 if __name__ == "__main__":

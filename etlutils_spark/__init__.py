@@ -67,7 +67,6 @@ from etlutils_spark.operators.similarity import (
     pca_project,
     hard_negative_mining,
     knn_label_consistency,
-    pq_encode,
     pq_topk,
     pq_train,
     quantize_embeddings_int8,
@@ -177,7 +176,6 @@ __all__ = [
     "hard_negative_mining",
     "profile_drift",
     "pq_train",
-    "pq_encode",
     "pq_topk",
     "build_ann_index",
     "compact_ann_index",

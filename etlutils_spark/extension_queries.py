@@ -609,12 +609,10 @@ def q_ann_ivf_topk(spark, sf_dir):
 
     emb = _t(spark, sf_dir, "embeddings")
     # exhaustive nprobe makes the result centroid-invariant, so the
-    # k-means budget is minimal: random init (no k-means|| sampling
-    # rounds) + 1 iteration (the pruned-mode pytest recall test keeps
-    # a real iteration budget)
+    # k-means budget is minimal: 1 Lloyd iteration (the pruned-mode
+    # pytest recall test keeps a real iteration budget)
     out = ivf_topk(emb, emb.filter(F.col("vec_id") < 5), k=10,
-                   num_clusters=16, nprobe=16, max_iter=1,
-                   init_mode="random")
+                   num_clusters=16, nprobe=16, max_iter=1)
     return out.withColumn("rank", F.col("rank").cast("bigint"))
 
 
@@ -2710,7 +2708,7 @@ def q_ann_index_topk(spark, sf_dir):
     # exhaustive-nprobe results are centroid-invariant, so the k-means
     # budget is minimal (same economics note as ann_ivf_topk); the
     # pruned contract column keeps a wide floor for that budget
-    build_ann_index(emb, root, init_mode="random", max_iter=5)
+    build_ann_index(emb, root, max_iter=5)
     q = emb.filter(F.col("vec_id") < 5)
     # the ORACLE-pinned arm must be exact end to end: exhaustive nprobe
     # makes the IVF stage lossless, and an unbounded shortlist makes
@@ -2799,7 +2797,6 @@ def q_ann_index_streaming(spark, sf_dir):
         checkpoint=os.path.join(root, "ckpt"),
         # exhaustive-nprobe serving is centroid-invariant, so the
         # k-means budget is minimal (same economics as ann_index_topk)
-        init_mode="random",
         max_iter=5,
     )
     q.awaitTermination()
@@ -2812,7 +2809,7 @@ def q_ann_index_streaming(spark, sf_dir):
         os.path.join(src, "slice1.parquet"),
         os.path.join(src, "slice2.parquet"),
     )
-    build_ann_index(slice0, twin, init_mode="random", max_iter=5)
+    build_ann_index(slice0, twin, max_iter=5)
     extend_ann_index(twin, rest)
     a = spark.read.parquet(f"{idx}/codes").withColumn(
         "__c", F.col("codes").cast("string")

@@ -18,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from etlutils_spark.operators.similarity import _TRAIN_SAMPLE_LIMIT
+
 
 def streaming_ann_index(
     vectors: DataFrame,
@@ -30,8 +32,7 @@ def streaming_ann_index(
     ksub: int = 16,
     seed: int = 42,
     max_iter: int = 20,
-    init_mode: str = "k-means||",
-    sample_limit: int = 65_536,
+    sample_limit: int = _TRAIN_SAMPLE_LIMIT,
     compact_every: int | None = None,
 ):
     """Fold a vector STREAM into a ``build_ann_index`` artifact.
@@ -105,7 +106,6 @@ def streaming_ann_index(
                 vec_col=vec_col,
                 seed=seed,
                 max_iter=max_iter,
-                init_mode=init_mode,
                 sample_limit=sample_limit,
             )
         processed["n"] += 1

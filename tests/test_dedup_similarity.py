@@ -291,6 +291,69 @@ def test_ivf_topk_recall_vs_bruteforce(emb):
     assert top1.get(0) == 10
 
 
+def test_ivf_topk_pruned_is_partitioning_invariant(emb):
+    """The IVF quantizer trains on the orderBy(id) sample and assigns
+    cells row by row, so a pruned probe returns the same rows whether
+    the corpus arrives in one partition or in seven."""
+    from etlutils_spark.operators.similarity import ivf_topk
+
+    def rows(corpus):
+        queries = corpus.filter(F.col("vec_id") < 3)
+        out = ivf_topk(corpus, queries, k=3, num_clusters=3, nprobe=1)
+        return sorted(tuple(r) for r in out.collect())
+
+    one = rows(emb.coalesce(1))
+    assert one and one == rows(emb.repartition(7))
+
+
+def test_ann_nprobe_below_one_raises(emb, tmp_path):
+    """Probing no IVF cell would silently return no neighbors for every
+    query; both IVF serving paths reject it instead."""
+    from etlutils_spark.operators.similarity import (
+        ann_index_topk,
+        build_ann_index,
+        ivf_topk,
+    )
+
+    with pytest.raises(ValueError, match="nprobe"):
+        ivf_topk(emb, emb, k=3, num_clusters=3, nprobe=0)
+    path = str(tmp_path / "annidx")
+    build_ann_index(emb, path, num_clusters=3, m=4, ksub=4)
+    with pytest.raises(ValueError, match="nprobe"):
+        ann_index_topk(emb, path, emb, k=3, nprobe=0)
+    with pytest.raises(ValueError, match="nprobe"):
+        ann_index_topk(emb, path, emb, k=3, nprobe=-1)
+
+
+def test_build_ann_index_collects_training_sample_once(spark, emb, tmp_path):
+    """Both quantizers train from ONE driver collect of the
+    orderBy(id).limit(sample_limit) sample; the other jobs are the
+    codes, centroids and codebooks writes and the codes read-back.
+    Jobs are counted by group, like test_extend_dedup_index_job_budget,
+    and named by their stages' call sites."""
+    import uuid
+
+    from etlutils_spark.operators.similarity import build_ann_index
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        build_ann_index(emb, str(tmp_path / "annidx"), num_clusters=3,
+                        m=4, ksub=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    tracker = sc.statusTracker()
+    names = [
+        tracker.getStageInfo(min(tracker.getJobInfo(j).stageIds)).name
+        for j in tracker.getJobIdsForGroup(group)
+    ]
+    assert sum(n.startswith("collect at ") for n in names) == 1, names
+    assert len(names) <= 5, names
+
+
 def test_multimodal_feature_plumbing(docs):
     df = multimodal.attach_binary_payload(docs)
     feats = multimodal.extract_features(df).collect()
@@ -1629,27 +1692,6 @@ def test_pq_guards(emb):
                 shortlist=8, max_shortlist_rows=10)
     books = pq_train(emb, m=4, ksub=4)
     assert books.shape == (4, 4, 4)
-
-
-def test_pq_precomputed_codes_match_fused(emb):
-    """Encode-once production mode: scanning a materialized codes table
-    must reproduce the fused normalize+encode+ADC scan exactly."""
-    import pytest
-
-    from etlutils_spark.operators.similarity import pq_encode, pq_topk, pq_train
-
-    queries = emb.filter(F.col("vec_id") < 2)
-    fused = {tuple(r) for r in
-             pq_topk(emb, queries, k=3, m=4, ksub=4, shortlist=6).collect()}
-    books = pq_train(emb, m=4, ksub=4)
-    codes = pq_encode(emb, books, )
-    pre = {tuple(r) for r in
-           pq_topk(emb, queries, k=3, m=4, ksub=4, shortlist=6,
-                   codes=codes, codebooks=books).collect()}
-    assert pre == fused
-    # codes without their codebooks is a silent-misdecode hazard: raise
-    with pytest.raises(ValueError, match="codebooks"):
-        pq_topk(emb, queries, codes=codes)
 
 
 def test_decontaminate_semantic_flags_planted_neardup(emb):

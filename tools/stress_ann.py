@@ -59,7 +59,7 @@ def run(spark, n: int) -> dict:
     shutil.rmtree(path, ignore_errors=True)
     t0 = time.time()
     build_ann_index(corpus, path, num_clusters=16, m=4, ksub=16,
-                    init_mode="random", max_iter=5)
+                    max_iter=5)
     build_sec = round(time.time() - t0, 2)
     batch = synth_vectors(spark, BATCH, id_offset=10 * n).persist()
     batch.count()
@@ -129,7 +129,7 @@ def run_accumulated(spark, n: int, n_batches: int = 12) -> dict:
     shutil.rmtree(path, ignore_errors=True)
     t0 = time.time()
     build_ann_index(corpus, path, num_clusters=16, m=4, ksub=16,
-                    init_mode="random", max_iter=5)
+                    max_iter=5)
     build_sec = round(time.time() - t0, 2)
     extend_secs, code_rows = [], []
     for k in range(n_batches):
