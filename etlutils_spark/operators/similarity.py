@@ -282,6 +282,12 @@ def _batch_topk(
 # Default training-sample size of every quantizer (see _train_sample).
 _TRAIN_SAMPLE_LIMIT = 65_536
 
+# Fixed schemas of the ANN artifact's quantizer tables: the build writes
+# them with these and _read_ann_index reads them back with them, so a
+# serving call pays no schema-inference job.
+_CENTROIDS_DDL = "cluster_id int, centroid array<double>"
+_CODEBOOKS_DDL = "subspace int, code int, center array<double>"
+
 
 def _train_sample(
     corpus: DataFrame, id_col: str, vec_col: str, sample_limit: int
@@ -1480,7 +1486,7 @@ def _build_ann_index_locked(
     ).write.mode("overwrite").parquet(f"{path}/codes")
     spark.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
-        "cluster_id int, centroid array<double>",
+        _CENTROIDS_DDL,
     ).write.mode("overwrite").parquet(f"{path}/centroids")
     spark.createDataFrame(
         [
@@ -1488,7 +1494,7 @@ def _build_ann_index_locked(
             for s in range(books.shape[0])
             for c in range(books.shape[1])
         ],
-        "subspace int, code int, center array<double>",
+        _CODEBOOKS_DDL,
     ).write.mode("overwrite").parquet(f"{path}/codebooks")
     # params is the build's commit marker (last write) — one FS-API
     # JSON file, no Spark job (see sources.sidecar). Ownership is
@@ -1557,9 +1563,13 @@ def _read_ann_params(spark, path: str):
 def _read_ann_index(spark, path: str):
     """(params row, centroid matrix (C, dim), codebooks (m, ksub, dsub))
     from a ``build_ann_index`` artifact. Both collects are bounded by
-    construction: num_clusters and m*ksub rows."""
+    construction: num_clusters and m*ksub rows; both tables are read
+    with their fixed DDL, so neither read launches a schema-inference
+    job."""
     params = _read_ann_params(spark, path)
-    cent_rows = spark.read.parquet(f"{path}/centroids").collect()
+    cent_rows = spark.read.schema(_CENTROIDS_DDL).parquet(
+        f"{path}/centroids"
+    ).collect()
     cents = np.empty((params["num_clusters"], params["dim"]), dtype=np.float64)
     for r in cent_rows:
         cents[r["cluster_id"]] = r["centroid"]
@@ -1567,7 +1577,9 @@ def _read_ann_index(spark, path: str):
         (params["m"], params["ksub"], params["dim"] // params["m"]),
         dtype=np.float64,
     )
-    for r in spark.read.parquet(f"{path}/codebooks").collect():
+    for r in spark.read.schema(_CODEBOOKS_DDL).parquet(
+        f"{path}/codebooks"
+    ).collect():
         books[r["subspace"], r["code"]] = r["center"]
     return params, cents, books
 

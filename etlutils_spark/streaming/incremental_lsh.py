@@ -45,11 +45,6 @@ from pyspark.sql.utils import AnalysisException
 
 from etlutils_spark.operators.dedup import band_sig_array, shingle_rows
 
-_PROFILE_SCHEMA = (
-    "doc_id bigint, band_sigs array<bigint>, shingle_hashes array<bigint>, n_sh int"
-)
-
-
 def batch_profiles(
     docs: DataFrame,
     text_col: str = "text",
@@ -91,6 +86,14 @@ def batch_profiles(
     return out.localCheckpoint(eager=True)
 
 
+def _jaccard(sh_1: str, sh_2: str):
+    """Exact Jaccard of two stored shingle-hash sets (Column)."""
+    inter = F.size(F.array_intersect(sh_1, sh_2))
+    return inter.cast("double") / (
+        F.size(sh_1) + F.size(sh_2) - inter
+    ).cast("double")
+
+
 def _verified_pairs(cand: DataFrame, left: DataFrame, right: DataFrame, threshold: float) -> DataFrame:
     """Exact Jaccard on stored shingle-hash sets for candidate id pairs."""
     l_prof = left.select(
@@ -99,14 +102,10 @@ def _verified_pairs(cand: DataFrame, left: DataFrame, right: DataFrame, threshol
     r_prof = right.select(
         F.col("doc_id").alias("id_2"), F.col("shingle_hashes").alias("sh_2")
     )
-    inter = F.size(F.array_intersect("sh_1", "sh_2"))
-    jac = inter.cast("double") / (
-        F.size("sh_1") + F.size("sh_2") - inter
-    ).cast("double")
     return (
         cand.join(l_prof, "id_1")
         .join(r_prof, "id_2")
-        .select("id_1", "id_2", jac.alias("jaccard"))
+        .select("id_1", "id_2", _jaccard("sh_1", "sh_2").alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
 

@@ -331,27 +331,40 @@ def test_build_ann_index_collects_training_sample_once(spark, emb, tmp_path):
     codes, centroids and codebooks writes and the codes read-back.
     Jobs are counted by group, like test_extend_dedup_index_job_budget,
     and named by their stages' call sites."""
-    import uuid
-
     from etlutils_spark.operators.similarity import build_ann_index
 
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        build_ann_index(emb, str(tmp_path / "annidx"), num_clusters=3,
-                        m=4, ksub=4)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
-    tracker = sc.statusTracker()
-    names = [
-        tracker.getStageInfo(min(tracker.getJobInfo(j).stageIds)).name
-        for j in tracker.getJobIdsForGroup(group)
-    ]
+    _, names = _group_jobs(
+        spark,
+        lambda: build_ann_index(emb, str(tmp_path / "annidx"),
+                                num_clusters=3, m=4, ksub=4),
+    )
     assert sum(n.startswith("collect at ") for n in names) == 1, names
     assert len(names) <= 5, names
+
+
+def test_ann_index_topk_reads_quantizers_without_inference(
+    spark, emb, tmp_path
+):
+    """Serving from the artifact reads ``centroids`` and ``codebooks``
+    with their fixed DDL: the call's jobs are the two quantizer
+    collects, the query collect and the ``codes`` read's schema
+    inference — four, where inferring both quantizer schemas made
+    six."""
+    from etlutils_spark.operators.similarity import (
+        ann_index_topk,
+        build_ann_index,
+    )
+
+    path = str(tmp_path / "annidx")
+    build_ann_index(emb, path, num_clusters=3, m=4, ksub=4)
+    # one partition: the bounded query collect is exactly one job
+    queries = emb.filter("vec_id < 2").coalesce(1)
+    got, names = _group_jobs(
+        spark, lambda: ann_index_topk(emb, path, queries, k=2)
+    )
+    assert sum(n.startswith("collect at ") for n in names) == 3, names
+    assert len(names) <= 4, names
+    assert got.count() == 4
 
 
 def test_multimodal_feature_plumbing(docs):
@@ -578,8 +591,9 @@ def _cc_star_labels(pairs, limit=0, **kw):
 
 def _group_jobs(spark, fn):
     """Run ``fn`` under a fresh job group; return (its result, the
-    number of Spark jobs that group launched). Counting by group keeps
-    late jobs of other tests out of the figure."""
+    Spark jobs that group launched, each named by its first stage's
+    call site). Counting by group keeps late jobs of other tests out
+    of the figure."""
     import uuid
 
     sc = spark.sparkContext
@@ -592,7 +606,11 @@ def _group_jobs(spark, fn):
         sc.setLocalProperty("spark.job.description", None)
     # the status tracker fills from the listener bus: drain it first
     sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    tracker = sc.statusTracker()
+    return out, [
+        tracker.getStageInfo(min(tracker.getJobInfo(j).stageIds)).name
+        for j in sorted(tracker.getJobIdsForGroup(group))
+    ]
 
 
 def test_connected_components_chain_and_islands(spark):
@@ -640,7 +658,7 @@ def test_shingle_rows_single_partition_scan_launches_no_job(spark, tmp_path):
     assert scan.rdd.getNumPartitions() == 1
     assert spark.sparkContext.defaultParallelism > 1
     out, jobs = _group_jobs(spark, lambda: shingle_rows(scan))
-    assert jobs == 0
+    assert jobs == []
     # the spread itself is kept: one round-robin repartition
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("Repartition") == 1
@@ -816,11 +834,13 @@ def test_extend_dedup_index_clean_batch_fast_path(spark, tmp_path):
 
 def test_extend_dedup_index_job_budget(spark, tmp_path):
     """Spark jobs one refresh may launch on the default (unbucketed)
-    layout, pinned at the measured counts: 27 for a dirty batch (its
-    doc pairs with two stored docs) and 18 for a clean one. Each eager
+    layout, pinned at the measured counts: 18 for a dirty batch (its
+    doc pairs with two stored docs) and 9 for a clean one. Each eager
     action under AQE is a job per query stage, so a new probe,
     checkpoint or schema inference on the refresh path shows up here
-    first."""
+    first. No job is a schema inference: the stored tables are read
+    with the schemas the build recorded, and the returned labels with
+    the schema of the table just written or appended to."""
     from etlutils_spark.operators.dedup import (
         build_dedup_index,
         extend_dedup_index,
@@ -851,7 +871,71 @@ def test_extend_dedup_index_job_budget(spark, tmp_path):
     assert dict(got.select("doc_id", "cluster_id").collect()) == {
         1: 1, 2: 1, 3: 3, 4: 1, 5: 5, 7: 7
     }
-    assert dirty <= 27 and clean <= 18, (dirty, clean)
+    assert len(dirty) <= 18 and len(clean) <= 9, (dirty, clean)
+
+
+def test_extend_dedup_index_without_recorded_schemas(spark, tmp_path):
+    """An artifact whose params sidecar predates the recorded table
+    schemas still extends: the stored tables are read with schema
+    inference, the labels match a rebuild on the union, and the
+    sidecar is left as it was (extend does not add the keys)."""
+    from etlutils_spark.operators.dedup import (
+        build_dedup_index,
+        extend_dedup_index,
+    )
+    from etlutils_spark.sources.sidecar import (
+        read_sidecar_json,
+        write_sidecar_json,
+    )
+
+    a = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda"
+    b = "one two three four five six seven eight nine ten eleven twelve"
+    docs = spark.createDataFrame(
+        [(1, a + " x"), (2, b + " x"), (3, "hi"),
+         (4, a + " y"), (5, b + " y"), (6, "ok")],
+        "doc_id int, text string",
+    )
+    path = str(tmp_path / "old")
+    build_dedup_index(docs.filter("doc_id <= 3"), path)
+    params = read_sidecar_json(spark, f"{path}/params")
+    assert {"profiles_schema", "labels_schema"} <= set(params)
+    legacy = {k: v for k, v in params.items() if not k.endswith("_schema")}
+    write_sidecar_json(spark, f"{path}/params", legacy)
+    got = extend_dedup_index(path, docs.filter("doc_id > 3"))
+    want = build_dedup_index(docs, str(tmp_path / "rebuild"))
+    assert dict(got.collect()) == dict(want.collect()) == {
+        1: 1, 2: 2, 3: 3, 4: 1, 5: 2, 6: 6
+    }
+    assert read_sidecar_json(spark, f"{path}/params") == legacy
+
+
+def test_extend_dedup_index_batch_id_type_differs_from_build(
+    spark, tmp_path
+):
+    """Batches whose id column is bigint where the build's was int, or
+    the reverse, extend repeatedly: appended profile rows take the
+    stored id type, so the table keeps the one schema it is read
+    with."""
+    from etlutils_spark.operators.dedup import (
+        build_dedup_index,
+        extend_dedup_index,
+    )
+
+    a = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda"
+    rows = [(1, a + " x"), (2, "one two three four five six"),
+            (3, a + " y"), (4, a + " z")]
+    for built, batch in [("int", "bigint"), ("bigint", "int")]:
+        path = str(tmp_path / f"{built}_{batch}")
+        build_dedup_index(
+            spark.createDataFrame(rows[:2], f"doc_id {built}, text string"),
+            path,
+        )
+        for row in rows[2:]:
+            got = extend_dedup_index(
+                path,
+                spark.createDataFrame([row], f"doc_id {batch}, text string"),
+            )
+        assert dict(got.collect()) == {1: 1, 2: 2, 3: 1, 4: 1}, built
 
 
 def test_extend_dedup_index_affected_scope_matches_full(spark, tmp_path):

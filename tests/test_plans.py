@@ -591,3 +591,63 @@ def test_ann_screen_exchanges_carry_no_arrays(spark, qs):
     )
     for schema in schemas:
         assert not has_array(schema), schema.simpleString()
+
+
+def test_extend_probe_streams_stored_profiles_past_broadcast_batch(
+    spark, tmp_path
+):
+    """extend_dedup_index's probe-and-verify pass is one broadcast hash
+    join whose build side is the batch: the stored-profiles scan feeds
+    the join with no shuffle in between, so the stored profiles and
+    their shingle arrays are never exchanged, however large the index
+    grows. Asserted on the executed plan of the pass, run against a
+    built artifact read the way extend reads it."""
+    from etlutils_spark.operators.dedup import (
+        _probe_and_verify,
+        _read_stored,
+        build_dedup_index,
+    )
+    from etlutils_spark.sources.sidecar import read_sidecar_json
+    from etlutils_spark.streaming.incremental_lsh import batch_profiles
+
+    a = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda"
+    b = "one two three four five six seven eight nine ten eleven twelve"
+    docs = spark.createDataFrame(
+        [(1, a + " x"), (2, b + " x"), (3, "hi"),
+         (4, a + " y"), (5, b + " y"), (6, b + " z")],
+        "doc_id bigint, text string",
+    )
+    path = str(tmp_path / "idx")
+    build_dedup_index(docs.filter("doc_id <= 3"), path)
+    params = read_sidecar_json(spark, f"{path}/params")
+    stored = _read_stored(
+        spark, f"{path}/profiles", params["profiles_schema"]
+    )
+    batch = batch_profiles(
+        docs.filter("doc_id > 3"), n=params["n"],
+        num_hashes=params["num_hashes"], bands=params["bands"],
+    )
+    edges = _probe_and_verify(stored, batch, params["threshold"])
+    assert sorted(map(tuple, edges.collect())) == [
+        (1, 4), (2, 5), (2, 6), (5, 6)
+    ]
+    nodes = list(_executed_nodes(edges._jdf.queryExecution().executedPlan()))
+    joins = [
+        n for n in nodes
+        if n.getClass().getSimpleName().endswith("HashJoinExec")
+        or n.getClass().getSimpleName() == "SortMergeJoinExec"
+    ]
+    assert [j.getClass().getSimpleName() for j in joins] == [
+        "BroadcastHashJoinExec"
+    ]
+
+    def names(node):
+        return [n.getClass().getSimpleName() for n in _executed_nodes(node)]
+
+    build, streamed = names(joins[0].buildPlan()), names(joins[0].streamedPlan())
+    # the broadcast side is the batch (a checkpointed RDD), not a scan
+    assert "FileSourceScanExec" not in build, build
+    assert "RDDScanExec" in build, build
+    # the stored-profiles scan streams into the join unshuffled
+    assert "FileSourceScanExec" in streamed, streamed
+    assert "ShuffleExchangeExec" not in streamed, streamed

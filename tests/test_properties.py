@@ -7,7 +7,7 @@ through a Spark job, so the budget is spent on semantic edge cases
 bulk."""
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from pyspark.sql import functions as F
 from hypothesis import strategies as st
 
@@ -428,3 +428,77 @@ def test_connected_components_auto_matches_reference(spark, edges):
             for r in dedup.connected_components(df, max_iter=40).collect()
         )
     assert got == want, ("star", edges)
+
+
+@st.composite
+def _near_dup_batches(draw):
+    """(rows, batches, replay): a corpus of near-dup families (each
+    member is its family's 10-word base with up to two words swapped
+    and one word appended) plus shingle-less docs, ids shuffled, cut
+    into a build batch and 1-2 ingest batches; ``replay`` names the
+    ingest batch that is folded in twice."""
+    rnd = draw(st.randoms(use_true_random=False))
+    docs = []
+    for fam in range(draw(st.integers(1, 3))):
+        base = [f"f{fam}w{i}" for i in range(10)]
+        for m in range(draw(st.integers(2, 3))):
+            words = list(base)
+            for _ in range(draw(st.integers(0, 2))):
+                words[rnd.randrange(10)] = f"x{rnd.randrange(1000)}"
+            docs.append(" ".join(words + [f"tail{fam}_{m}"]))
+    docs += ["hi"] * draw(st.integers(0, 2))  # too short to shingle
+    ids = draw(st.permutations(range(1, len(docs) + 1)))
+    rows = list(zip(ids, docs))
+    n_ingest = draw(st.integers(1, 2))
+    # the first row always seeds the build, so the artifact is never
+    # built from an empty frame
+    cut = [0] + [draw(st.integers(0, n_ingest)) for _ in rows[1:]]
+    batches = [[r for r, c in zip(rows, cut) if c == b] for b in range(n_ingest + 1)]
+    return rows, batches, draw(st.integers(1, n_ingest))
+
+
+# family 0 spans the build and both ingest batches (cross-batch pairs);
+# family 1 lives only in the first ingest batch (an intra-batch pair no
+# later batch re-finds); the second ingest batch is replayed
+_FAMILY_ROWS = [
+    (i, " ".join(f"f{fam}w{w}" for w in range(10)) + f" tail{fam}_{m}")
+    for i, fam, m in [(5, 0, 0), (2, 1, 0), (6, 1, 1), (1, 0, 1), (3, 0, 2)]
+] + [(4, "hi")]
+_FAMILY_SPLIT_CASE = (
+    _FAMILY_ROWS,
+    [_FAMILY_ROWS[:1], _FAMILY_ROWS[1:3], _FAMILY_ROWS[3:]],
+    2,
+)
+
+
+@settings(
+    max_examples=3,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+@given(_near_dup_batches())
+@example(case=_FAMILY_SPLIT_CASE)
+def test_extend_batches_label_like_rebuild(spark, tmp_path, case):
+    """Folding a corpus into a dedup index batch by batch (one batch
+    replayed) labels every doc exactly as build_dedup_index on the
+    union does: the one-pass probe-and-verify finds every cross- and
+    intra-batch pair the build's self-join finds."""
+    import uuid
+
+    from etlutils_spark.operators.dedup import (
+        build_dedup_index,
+        extend_dedup_index,
+    )
+
+    rows, batches, replay = case
+    schema = "doc_id bigint, text string"
+    root = tmp_path / uuid.uuid4().hex
+    path = str(root / "idx")
+    build_dedup_index(spark.createDataFrame(batches[0], schema), path)
+    for b, batch in enumerate(batches[1:], start=1):
+        for _ in range(2 if b == replay else 1):
+            got = extend_dedup_index(path, spark.createDataFrame(batch, schema))
+    want = build_dedup_index(
+        spark.createDataFrame(rows, schema), str(root / "rebuild")
+    )
+    assert dict(got.collect()) == dict(want.collect())
