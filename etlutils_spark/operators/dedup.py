@@ -680,6 +680,10 @@ def embedding_neardup_pairs(
 # (about 2 MB collected); larger graphs run the distributed star rounds.
 _CC_DRIVER_MAX_EDGES = 65_536
 
+# path/edges of a build_dedup_index artifact: every writer casts its ids
+# to long and every reader uses this schema
+_EDGES_DDL = "id_1 long, id_2 long"
+
 
 def _local_components(
     spark: SparkSession, nodes: list[int], clusters: list[int]
@@ -1078,13 +1082,16 @@ def _build_dedup_index_locked(
         .select("id_1", "id_2")
         .distinct()
     )
-    edges = _verified_pairs(cand, prof, prof, threshold).select("id_1", "id_2")
+    edges = _verified_pairs(cand, prof, prof, threshold).select(
+        F.col("id_1").cast("long").alias("id_1"),
+        F.col("id_2").cast("long").alias("id_2"),
+    )
     prof.write.mode("overwrite").parquet(f"{path}/profiles")
     # read back with the schema just written: no inference job; this
     # is also the schema the params sidecar records for extend's read
     stored_prof = spark.read.schema(prof.schema).parquet(f"{path}/profiles")
     edges.write.mode("overwrite").parquet(f"{path}/edges")
-    stored_edges = spark.read.parquet(f"{path}/edges")
+    stored_edges = spark.read.schema(_EDGES_DDL).parquet(f"{path}/edges")
     comp = connected_components(stored_edges, "id_1", "id_2")
     labels = (
         docs.select(F.col(id_col).cast("long").alias(id_col))
@@ -1109,26 +1116,9 @@ def _build_dedup_index_locked(
         label_buckets = (
             0 if n_docs < 250_000 else min(4096, n_docs // 10_000)
         )
-    label_buckets = int(label_buckets)
-    if label_buckets >= 2:
-        # repartition BY THE BUCKET before the partitioned write: all
-        # of a bucket's rows land in one task, so the table holds ~one
-        # file per bucket instead of tasks x buckets small files —
-        # measured at 5M docs / 512 buckets, the unrepartitioned form
-        # writes ~32k files and every later read/overwrite pays
-        # seconds of listing (the actual wall cost of the layout)
-        labels = labels.withColumn(
-            "label_bucket", _label_bucket(id_col, label_buckets)
-        )
-        labels.repartition(F.col("label_bucket")).write.mode(
-            "overwrite"
-        ).partitionBy("label_bucket").parquet(
-            f"{path}/labels"
-        )
-    else:
-        label_buckets = 0  # recorded as "unbucketed" in the sidecar
-        labels.write.mode("overwrite").parquet(f"{path}/labels")
-    out = spark.read.schema(labels.schema).parquet(f"{path}/labels")
+    # 0 is recorded as "unbucketed" in the sidecar
+    label_buckets = int(label_buckets) if int(label_buckets) >= 2 else 0
+    out = _write_labels(labels, f"{path}/labels", label_buckets)
     _compact_edges_from_labels(out, f"{path}/edges")
     # Sidecars (epochs, params) are single FS-API files, not Spark
     # writes — see sources.sidecar for the cost/atomicity argument.
@@ -1213,8 +1203,10 @@ def compact_dedup_index(
             ),
             "labels": None,
         }
-        lbl = spark.read.parquet(f"{path}/labels")
-        if "label_bucket" not in lbl.columns:
+        # a bucketed label table keeps one file per bucket by
+        # construction; the layout is the one the params record
+        params = read_sidecar_json(spark, f"{path}/params") or {}
+        if not params.get("label_buckets"):
             out["labels"] = compact_parquet_inplace(
                 spark, f"{path}/labels", target_rows_per_file,
                 pre_swap_check=check,
@@ -1236,6 +1228,37 @@ def _label_bucket(id_col, num_buckets: int) -> Column:
     ).cast("int")
 
 
+def _write_labels(
+    labels: DataFrame, table: str, label_buckets: int, dynamic: bool = False
+) -> DataFrame:
+    """Write an ``(id, cluster_id)`` label frame to ``table`` and return
+    the table read back with the schema just written (no inference
+    job). On the bucketed layout (``label_buckets >= 2``) each row
+    gains ``label_bucket`` and the frame is repartitioned BY the bucket
+    before the partitioned write: all of a bucket's rows land in one
+    task, so the table holds ~one file per bucket instead of tasks x
+    buckets small files — measured at 5M docs / 512 buckets, the
+    unrepartitioned form writes ~32k files and every later
+    read/overwrite pays seconds of listing (the actual wall cost of
+    the layout). ``dynamic`` overwrites only the buckets present in
+    ``labels`` (an extend passes just the rows of the buckets it can
+    change); the build's static overwrite replaces the whole table, so
+    a rebuild leaves no bucket of an earlier layout behind."""
+    if label_buckets >= 2:
+        labels = labels.withColumn(
+            "label_bucket", _label_bucket(labels.columns[0], label_buckets)
+        )
+        writer = (
+            labels.repartition(F.col("label_bucket"))
+            .write.partitionBy("label_bucket")
+            .option("partitionOverwriteMode", "dynamic" if dynamic else "static")
+        )
+    else:
+        writer = labels.write
+    writer.mode("overwrite").parquet(table)
+    return labels.sparkSession.read.schema(labels.schema).parquet(table)
+
+
 def _write_sync_epoch(spark, path: str, side: str, epoch: int) -> None:
     """Commit an epoch marker as ONE tiny text file through the Hadoop
     FileSystem API (sources.sidecar) — no Spark job. A Spark-side
@@ -1249,7 +1272,7 @@ def _write_sync_epoch(spark, path: str, side: str, epoch: int) -> None:
 def _read_sync_epoch(spark, path: str, side: str) -> int | None:
     """None == no readable marker: absent (pre-marker artifact), the
     earlier parquet-directory form, or torn — every case takes the
-    conservative migration/drift path in extend_dedup_index."""
+    conservative full-scope drift path in extend_dedup_index."""
     txt = read_sidecar_text(spark, f"{path}/sync_{side}")
     if txt is None:
         return None
@@ -1381,9 +1404,12 @@ def _read_stored(spark: SparkSession, table: str, schema_json: str | None) -> Da
 
 
 def _probe_and_verify(
-    stored: DataFrame, batch: DataFrame, threshold: float
+    stored: DataFrame,
+    batch: DataFrame,
+    threshold: float,
+    with_jaccard: bool = False,
 ) -> DataFrame:
-    """A refresh's verified new edges ``(id_1 < id_2)``, from ONE
+    """A batch's verified new edges ``(id_1 < id_2)``, from ONE
     broadcast hash join — the matchmerge shape: the batch's profiles,
     exploded to ``(id_1, band_idx, band_sig, sh_1)``, are the broadcast
     build side; the stored profiles ∪ the batch's, exploded to
@@ -1394,7 +1420,10 @@ def _probe_and_verify(
     shingle-hash sets is applied at the join with the build's
     ``>= threshold``, then each pair is ordered and deduplicated by one
     ``distinct``. The stored profiles are scanned once and are never
-    shuffled or joined back by id.
+    shuffled or joined back by id. ``with_jaccard`` keeps each pair's
+    ``jaccard`` as a third column (the streaming pair sink writes it;
+    a pair's Jaccard is a function of the pair, so the ``distinct`` is
+    unchanged).
 
     Batch-size bound: the broadcast relation holds ``bands`` copies of
     every batch doc's shingle-hash set, about ``bands x n_sh x 8``
@@ -1420,13 +1449,15 @@ def _probe_and_verify(
     keep = F.when(F.col("is_batch"), F.col("id_1") < F.col("id_2")).otherwise(
         F.col("id_1") != F.col("id_2")
     )
+    jaccard = _jaccard("sh_1", "sh_2")
     return (
         F.broadcast(exploded(batch, "1"))
         .join(probe, ["band_idx", "band_sig"])
-        .filter(keep & (_jaccard("sh_1", "sh_2") >= threshold))
+        .filter(keep & (jaccard >= threshold))
         .select(
             F.least("id_1", "id_2").alias("id_1"),
             F.greatest("id_1", "id_2").alias("id_2"),
+            *([jaccard.alias("jaccard")] if with_jaccard else []),
         )
         .distinct()
     )
@@ -1459,21 +1490,28 @@ def extend_dedup_index(
     Untouched components cannot change (connectivity is monotone —
     edges are only added), so their old label rows pass through
     verbatim; the touched ones are relabeled over a COMPRESSED graph —
-    each touched component contributes its (member, old_label) star
-    edges (old labels are component minima, so every member id is
-    present and the new minimum is exact) plus the new edges. Cost per
-    refresh is O(touched-component mass). This requires labels to be
-    in sync with profiles; an out-of-sync artifact (a prior refresh
-    crashed between its appends and its label rewrite) is DETECTED per
-    refresh in O(1) via a pair of epoch markers (profiles-side bumped
-    before the appends, labels-side after the rewrite — unequal ==
-    crashed), and that refresh recomputes FULL scope instead: CC over
-    the stored edge table ∪ the stored labels' stars, which re-derives
-    every label and self-heals the crashed batch's shingleable docs.
-    Pre-marker artifacts pay a one-time profile-vs-label anti-join as
-    the migration check. Either scope labels bit-identically to a
-    from-scratch rebuild (pinned by tests). Single writer enforced by
-    the lease below, as everywhere in the artifact tier.
+    each touched component's rows of the stored star edge table (one
+    ``(cluster minimum, member)`` row per non-singleton doc, so every
+    member id is present and the new minimum is exact) plus the new
+    edges. The touched rows are found by two broadcast semi joins over
+    that dup-mass-sized table; the label table is not scanned for
+    them. Cost per refresh is O(touched-component mass). This requires
+    the edge table to be the star of the labels; an out-of-sync
+    artifact (a prior refresh crashed between its appends and its
+    edge compaction) is DETECTED per refresh in O(1) via a pair of
+    epoch markers (profiles-side bumped before the appends,
+    labels-side after the compaction — unequal == crashed), and that
+    refresh recomputes FULL scope instead: CC over the stored edge
+    table ∪ the stored labels' stars ∪ the new edges, over an id scope
+    that adds the stored profiles, which re-derives every label and
+    self-heals the crashed batch's shingleable docs. An artifact built
+    before the markers existed takes full scope once, the same way.
+    Both scopes then share one tail: one checkpoint of the carried
+    label rows, ``coalesce(new component, old label, self)``, one
+    label write, the edge compaction and the labels-side marker.
+    Either scope labels bit-identically to a from-scratch rebuild
+    (pinned by tests). Single writer enforced by the lease below, as
+    everywhere in the artifact tier.
 
     Per batch: read the stored profiles and labels with the schemas
     recorded in ``path/params`` (no schema-inference job); shingle/sign
@@ -1494,16 +1532,13 @@ def extend_dedup_index(
     batches.
 
     On a BUCKETED label layout (``build_dedup_index(label_buckets=)``)
-    the affected-scope relabel additionally eliminates every remaining
-    O(corpus) term: touched components come from the compacted star
-    edge table (dup-mass-sized — equal epochs guarantee the previous
-    compaction completed), only the partitions holding changed labels
-    are rewritten (dynamic partition overwrite, with the unchanged
-    docs sharing those partitions carried over via a partition-pruned
-    read), and the edge compaction is rebuilt from the pre-append star
-    snapshot + the new components instead of a full label scan. The
-    whole refresh is then O(batch + dup_mass + corpus x
-    touched_buckets / label_buckets).
+    the affected-scope relabel carries only the label rows of the
+    buckets that can change (those of every node CC saw and of every
+    batch id, via a partition-pruned read) and rewrites only those
+    partitions (dynamic partition overwrite), so the label rewrite is
+    O(corpus x touched_buckets / label_buckets). The edge compaction
+    then scans the label table once — small next to the probe's scan
+    of the stored profiles.
 
     The refreshed labels are BIT-IDENTICAL to rebuilding from scratch
     on the union corpus: every cross-batch and every intra-batch pair
@@ -1512,8 +1547,8 @@ def extend_dedup_index(
     the ``dedup_clusters_incremental`` oracle query.
 
     CLEAN batches (zero verified pairs — the common production case)
-    take a fast path (absent drift): no component can
-    change, so the edge table is left untouched and the label delta is
+    take a fast path (absent drift): no component can change, so CC is
+    skipped, the edge table is left untouched and the label delta is
     written alone — the batch docs' buckets on a bucketed layout, an
     additive APPEND of genuinely-new rows on the unbucketed one
     (replays dedup via anti-join; the small appended files are
@@ -1629,39 +1664,18 @@ def _extend_dedup_index_locked(
         )
     # Drift check (MUST run before this batch's appends): a prior
     # refresh that crashed between its appends and its label rewrite
-    # leaves profile ids with edges in path/edges but no label row.
-    # The affected-scope compressed graph only sees THIS batch's new
-    # edges plus touched-component stars, so it would label those docs
-    # to themselves — wrong and complete-looking. Detection is O(1):
+    # leaves profile ids with edges in path/edges but no label row,
+    # and the affected-scope graph below would label those docs to
+    # themselves — wrong and complete-looking. Detection is O(1):
     # every refresh bumps a profiles-side epoch marker BEFORE its
-    # appends and a labels-side marker only AFTER its label rewrite,
-    # so unequal markers == crashed refresh (the r7 review retired the
-    # original full-profile anti-join, which silently re-introduced an
-    # O(corpus) scan into the O(batch) path). On drift, run full-scope
-    # CC for this refresh — it re-derives every label from the
-    # stored edge table and self-heals the crashed batch's shingleable
-    # docs. Pre-marker artifacts (built before r7) pay the anti-join
-    # ONCE as the migration path; a successful refresh then writes
-    # both markers.
+    # appends and a labels-side marker only AFTER its edge compaction,
+    # so unequal markers == crashed refresh. A missing marker (an
+    # artifact built before the markers existed) counts as drift too:
+    # full scope is always correct, and the refresh then writes both.
     p_epoch = _read_sync_epoch(spark, path, "profiles")
     l_epoch = _read_sync_epoch(spark, path, "labels")
-    if p_epoch is None or l_epoch is None:
-        # migration path
-        drift = not (
-            old_prof.select(F.col("doc_id").cast("long").alias("doc_id"))
-            .join(
-                lbl.select(
-                    F.col(lbl.columns[0]).cast("long").alias("doc_id")
-                ),
-                "doc_id",
-                "left_anti",
-            )
-            .isEmpty()
-        )
-        epoch = 1
-    else:
-        drift = p_epoch != l_epoch
-        epoch = max(p_epoch, l_epoch) + 1
+    drift = p_epoch is None or l_epoch is None or p_epoch != l_epoch
+    epoch = max(p_epoch or 0, l_epoch or 0) + 1
     # batch_profiles eagerly localCheckpoints its output (the probe's
     # build and stream sides and the append all read it), so the
     # shingling/minhash runs once;
@@ -1671,41 +1685,29 @@ def _extend_dedup_index_locked(
     # construction ahead of validation made a doomed extend pay a full
     # shingle job under the lease first)
     new_prof = batch_profiles(new_docs, text_col, id_col, n, num_hashes, bands)
-    new_edges = _probe_and_verify(old_prof, new_prof, threshold)
-    # materialize once IN BOTH SCOPES: consumed by the append AND the
-    # CC below, and — load-bearing for the commit_check contract — the
-    # expensive probe-and-verify job must COMPLETE before ownership is
-    # re-asserted; leaving it lazy under full scope would run the long
-    # job inside the post-check append, where a theft during it went
-    # undetected (review catch). The checkpoint is lazy and the count
-    # below is the one action that fills it, in both scopes.
+    # long ids: the compacted star is long, and one table must not mix
+    # int and long files (its readers use one schema)
+    new_edges = _probe_and_verify(old_prof, new_prof, threshold).select(
+        F.col("id_1").cast("long").alias("id_1"),
+        F.col("id_2").cast("long").alias("id_2"),
+    )
+    # materialize once: consumed by the append AND the CC below, and —
+    # load-bearing for the commit_check contract — the expensive
+    # probe-and-verify job must COMPLETE before ownership is
+    # re-asserted (review catch). The checkpoint is lazy and the count
+    # below is the one action that fills it. A batch with ZERO
+    # verified pairs (the common production case) changes no
+    # component: no CC, no edge append, no edge rewrite. A drift
+    # refresh never takes that clean path.
     new_edges = new_edges.localCheckpoint(eager=False)
-    # clean-batch probe (r8 verdict #6): a batch with ZERO verified
-    # pairs — the common production case — needs no star snapshot, no
-    # compressed-graph CC, no edge append/rewrite, and touches only its
-    # own docs' label buckets. The probe is that same count, so an
-    # eager checkpoint plus a separate isEmpty would be a second job
-    # for the same answer. A drift refresh never takes the clean path.
     batch_clean = new_edges.count() == 0 and not drift
-    if not drift and bucketed and not batch_clean:
-        # pre-append snapshot of the COMPACTED star edge table —
-        # dup-mass-sized, and guaranteed to actually be the compacted
-        # star because equal epochs imply the previous refresh's
-        # compaction completed (the labels-side epoch lands only after
-        # it). Sourcing touched components from this snapshot instead
-        # of the label table keeps the whole affected refresh free of
-        # full-corpus scans.
-        star_before = (
-            spark.read.parquet(f"{path}/edges")
-            .select(
-                F.col("id_1").cast("long").alias("id_1"),
-                F.col("id_2").cast("long").alias("id_2"),
-            )
-            .localCheckpoint(eager=True)
-        )
+    # the stored star, listed BEFORE this batch's edge append (a file
+    # source lists its files when the frame is created) and read with
+    # the one edge schema
+    stored_edges = spark.read.schema(_EDGES_DDL).parquet(f"{path}/edges")
     # intent marker BEFORE the appends: if this refresh dies anywhere
     # between here and the labels-side marker below, the epochs stay
-    # unequal and the next refresh takes the full-CC drift fallback.
+    # unequal and the next refresh takes the full-scope drift path.
     # Ownership is re-asserted first: everything above was reads and
     # cluster math (possibly minutes), everything from here on mutates
     if commit_check is not None:
@@ -1719,322 +1721,135 @@ def _extend_dedup_index_locked(
     new_prof.withColumn(
         "doc_id", F.col("doc_id").cast(old_prof.schema["doc_id"].dataType)
     ).write.mode("append").parquet(f"{path}/profiles")
-
-    def _all_ids():
-        # id universe = stored LABELS ∪ PROFILES ∪ the batch: labels
-        # carry docs too short to shingle (no profile row — they must
-        # keep their labels, as a from-scratch build would assign
-        # them); profiles additionally carry the SHINGLEABLE docs of a
-        # batch whose refresh crashed after the appends but before the
-        # label rewrite, so a subsequent extend of a different batch
-        # self-heals them (a crashed batch's shingle-less docs return
-        # only via the documented replay). O(corpus) — needed by the
-        # full-scope rewrite and the legacy affected path; the
-        # bucketed affected path replaces it with the touched-bucket
-        # scope below. Profiles come from the opening read: the file
-        # list predates this batch's append, but the batch's ids are
-        # in new_docs, so nothing is lost and no re-read (with its
-        # schema-inference job) is needed. Lazy: the result derives
-        # from path/labels, which the rewrite below overwrites, so
-        # each caller checkpoints what it builds from it first.
-        return (
-            lbl.select(F.col(id_name).cast("long").alias("doc_id"))
-            .unionByName(
-                old_prof.select(F.col("doc_id").cast("long").alias("doc_id"))
+    new_ids = new_docs.select(F.col(id_col).cast("long").alias("doc_id"))
+    if batch_clean and not bucketed:
+        # clean batch, unbucketed layout: the label delta is purely
+        # ADDITIVE — the batch's genuinely-new docs self-label,
+        # replayed docs already have rows. Append exactly those rows
+        # (the read-while-append anti-join of the ANN codes table)
+        # instead of rewriting the whole table; the next dirty batch's
+        # full rewrite re-compacts the small appended files.
+        fresh = (
+            new_ids.distinct()
+            .join(
+                lbl.select(F.col(id_name).cast("long").alias("doc_id")),
+                "doc_id",
+                "left_anti",
             )
-            .unionByName(
-                new_docs.select(F.col(id_col).cast("long").alias("doc_id"))
-            )
-            .distinct()
-        )
-
-    if drift:
-        # full scope. Recovery must not trust the edge table ALONE: the
-        # two drift cases leave opposite halves fresh. A crash before
-        # the label rewrite leaves edges complete (old star + the
-        # crashed batch's raw edges) and labels stale; a crash DURING
-        # edge compaction (non-atomic parquet overwrite) leaves labels
-        # complete and edges truncated. The union edges ∪ star(labels)
-        # is correct in BOTH: every row in either table is a true
-        # near-dup relation, and at least one of the two has full
-        # coverage of the true components.
-        all_ids = _all_ids().localCheckpoint(eager=True)
-        lbl_star = lbl.filter(
-            F.col("cluster_id").cast("long")
-            != F.col(lbl.columns[0]).cast("long")
-        ).select(
-            F.col("cluster_id").cast("long").alias("id_1"),
-            F.col(lbl.columns[0]).cast("long").alias("id_2"),
-        )
-        cc_input = spark.read.parquet(f"{path}/edges").unionByName(lbl_star)
-        comp = connected_components(cc_input, "id_1", "id_2")
-        labels = (
-            all_ids.join(comp, all_ids["doc_id"] == comp["node"], "left")
             .select(
-                # preserve the builder's id column name across refreshes
-                F.col("doc_id").alias(lbl.columns[0]),
-                F.coalesce("cluster_id", F.col("doc_id")).cast("long").alias(
-                    "cluster_id"
-                ),
+                F.col("doc_id").alias(id_name),
+                F.col("doc_id").alias("cluster_id"),
             )
         )
-    elif bucketed:
-        # affected-scope relabeling, bucketed layout: every input is
-        # batch- or dup-mass-sized and the label write touches only
-        # the partitions holding changed labels — no O(corpus) term
-        # anywhere in this branch (the probe above scans stored BANDS
-        # once; that is the documented index scan, not a rewrite).
-        if batch_clean:
-            # clean batch (zero verified pairs): no component can
-            # change, so the stored star and every non-batch label are
-            # already final — the refresh reduces to writing the BATCH
-            # docs' label rows (self-labels; old labels carried on
-            # replay) into their buckets. An empty local comp reuses
-            # the shared carry/coalesce tail below; the star snapshot,
-            # compressed-graph CC, edge append, and edge rewrite are
-            # all skipped (r8 verdict #6 — the common production case;
-            # extend ≡ rebuild stays bit-identical because a
-            # from-scratch build would also self-label a pairless
-            # batch).
-            comp = _local_components(spark, [], [])
-        else:
-            endpoints = (
-                new_edges.select(F.col("id_1").alias("doc_id"))
-                .unionByName(new_edges.select(F.col("id_2").alias("doc_id")))
-                .distinct()
-            )
-            # an endpoint's old cluster: its member row in the stored
-            # star, else itself (stored cluster minima carry no member
-            # row; stored singletons and batch-new docs self-label).
-            # The id_2 lookup may also match this batch's raw rows if
-            # ids collide with star rows — that only ever ADDS
-            # clusters to ``touched`` (a superset is safe: more rows
-            # re-derived, never fewer).
-            touched = F.broadcast(
-                endpoints.join(
-                    star_before,
-                    endpoints["doc_id"] == star_before["id_2"],
-                    "left",
+        fresh.write.mode("append").parquet(f"{path}/labels")
+        if commit_check is not None:  # final commit marker
+            commit_check()
+        _write_sync_epoch(spark, path, "labels", epoch)
+        # appended rows share the stored schema: no inference job
+        return spark.read.schema(lbl.schema).parquet(
+            f"{path}/labels"
+        ).select(id_name, "cluster_id")
+    if batch_clean:
+        comp = _local_components(spark, [], [])
+    else:
+        if drift:
+            # full scope. Recovery must not trust the edge table ALONE:
+            # a crash before the label rewrite leaves edges complete
+            # and labels stale, a crash DURING edge compaction
+            # (non-atomic overwrite) leaves labels complete and edges
+            # truncated. edges ∪ star(labels) is correct in BOTH:
+            # every row of either is a true near-dup relation, and at
+            # least one of the two covers the true components.
+            graph = stored_edges.unionByName(
+                lbl.filter(
+                    F.col("cluster_id").cast("long")
+                    != F.col(id_name).cast("long")
+                ).select(
+                    F.col("cluster_id").cast("long").alias("id_1"),
+                    F.col(id_name).cast("long").alias("id_2"),
                 )
-                .select(F.coalesce("id_1", "doc_id").alias("t_cluster"))
-                .distinct()
             )
-            # each touched component's full star (its exact node set +
-            # connectivity) + the new edges: CC over this compressed
-            # graph yields the same minima a full recompute would,
-            # because component minima only ever decrease via merges
-            # and every merge partner's node set is present
-            members_star = star_before.join(
-                touched, star_before["id_1"] == touched["t_cluster"]
-            ).select("id_1", "id_2")
-            compressed = members_star.unionByName(
-                new_edges.select("id_1", "id_2")
+        else:
+            # affected scope: equal epochs mean the stored edge table
+            # IS star(labels) — one (cluster minimum, member) row per
+            # non-singleton doc — so a touched component is the
+            # cluster of a member endpoint (its star row's id_1) or an
+            # endpoint itself (a cluster minimum, stored singleton or
+            # new doc). Its star rows carry its exact node set and
+            # connectivity, so CC over them + the new edges yields the
+            # same minima a full recompute would (minima only
+            # decrease via merges). Two broadcast semi joins over the
+            # dup-mass-sized star, no label-table scan.
+            ends = new_edges.select(F.col("id_1").alias("doc_id")).unionByName(
+                new_edges.select(F.col("id_2").alias("doc_id"))
             )
-            comp = connected_components(
-                compressed, "id_1", "id_2"
-            ).localCheckpoint(eager=True)  # feeds the label write AND
-            # the edge rewrite that runs after both overwrites
-        # buckets whose labels may change = buckets of every node of
-        # the compressed graph plus every batch id; the collect is
-        # bounded by label_buckets
-        changed_ids = (
-            comp.select(F.col("node").cast("long").alias("doc_id"))
-            .unionByName(
-                new_docs.select(F.col(id_col).cast("long").alias("doc_id"))
+            touched = stored_edges.join(
+                F.broadcast(ends), F.col("id_2") == ends["doc_id"], "left_semi"
+            ).select(F.col("id_1").alias("doc_id")).unionByName(ends)
+            graph = stored_edges.join(
+                F.broadcast(touched),
+                F.col("id_1") == touched["doc_id"],
+                "left_semi",
             )
-            .distinct()
+        comp = connected_components(
+            graph.unionByName(new_edges), "id_1", "id_2"
         )
+    # the label rows this refresh rewrites: all of them, or on a
+    # bucketed layout only the buckets that can change — those of
+    # every node CC saw and of every batch id (a collect bounded by
+    # label_buckets). Unchanged docs sharing a touched bucket are
+    # rewritten with their old labels, because dynamic overwrite
+    # replaces whole partition directories
+    carry = lbl
+    if bucketed and not drift:
+        changed = comp.select(F.col("node").alias("doc_id")).unionByName(new_ids)
         touched_buckets = [
             int(r[0])
-            for r in changed_ids.select(
-                _label_bucket("doc_id", label_buckets).alias("b")
-            )
+            for r in changed.select(_label_bucket("doc_id", label_buckets))
             .distinct()
             .collect()
         ]
-        # partition-pruned carry: unchanged docs sharing a touched
-        # bucket must be rewritten with their OLD labels, because
-        # dynamic overwrite replaces whole partition directories
-        in_buckets = lbl.filter(
-            F.col("label_bucket").isin(touched_buckets)
-        ).select(
-            F.col(id_name).cast("long").alias("doc_id"),
-            F.col("cluster_id").cast("long").alias("old_cluster"),
+        carry = lbl.filter(F.col("label_bucket").isin(touched_buckets))
+    old = carry.select(
+        F.col(id_name).cast("long").alias("doc_id"),
+        F.col("cluster_id").cast("long").alias("old_cluster"),
+    )
+    # id scope = the carried label rows ∪ the batch. Labels carry docs
+    # too short to shingle (no profile row — they keep their labels,
+    # as a from-scratch build would assign them). Full scope adds the
+    # stored profiles: they hold the SHINGLEABLE docs of a crashed
+    # refresh, which this refresh self-heals (a crashed batch's
+    # shingle-less docs return only via the documented replay)
+    scope = old.select("doc_id").unionByName(new_ids)
+    if drift:
+        scope = scope.unionByName(
+            old_prof.select(F.col("doc_id").cast("long").alias("doc_id"))
         )
-        scope_ids = (
-            in_buckets.select("doc_id")
-            .unionByName(
-                new_docs.select(F.col(id_col).cast("long").alias("doc_id"))
-            )
-            .distinct()
-        )
-        # pre-overwrite snapshot — derived from the partitions about
-        # to be replaced
-        prev = scope_ids.join(in_buckets, "doc_id", "left").localCheckpoint(
-            eager=True
-        )
-        labels = (
-            prev.join(comp, prev["doc_id"] == comp["node"], "left")
-            .select(
-                F.col("doc_id").alias(id_name),
-                F.coalesce(
-                    comp["cluster_id"], F.col("old_cluster"), F.col("doc_id")
-                ).cast("long").alias("cluster_id"),
-            )
-        )
-        # one file per touched bucket (see the build-site comment)
-        labels.withColumn(
-            "label_bucket", _label_bucket(id_name, label_buckets)
-        ).repartition(F.col("label_bucket")).write.mode(
-            "overwrite"
-        ).option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("label_bucket").parquet(f"{path}/labels")
-        out = spark.read.parquet(f"{path}/labels")
-        # edge rewrite without a label scan: keep untouched
-        # components' star rows, re-emit touched/merged ones from the
-        # just-computed comp (same rows _compact_edges_from_labels
-        # would derive from the full label table). Epoch ordering
-        # after this write is unchanged: a crash anywhere in this tail
-        # leaves unequal epochs and the drift recovery's
-        # edges ∪ star(labels) union covers both halves. A clean batch
-        # skips it outright — zero new edges touch zero components, so
-        # the stored star is already exactly what this would write.
-        if not batch_clean:
-            kept = star_before.join(
-                touched,
-                star_before["id_1"] == touched["t_cluster"],
-                "left_anti",
-            )
-            new_star = comp.filter(
-                F.col("cluster_id") != F.col("node")
-            ).select(
-                F.col("cluster_id").cast("long").alias("id_1"),
-                F.col("node").cast("long").alias("id_2"),
-            )
-            kept.unionByName(new_star).write.mode("overwrite").parquet(
-                f"{path}/edges"
-            )
-        if commit_check is not None:  # final commit marker: re-assert
-            commit_check()
-        _write_sync_epoch(spark, path, "labels", epoch)
-        # drop the physical partition key: (id, cluster_id) contract
-        return out.select(id_name, "cluster_id")
-    else:
-        # affected-scope relabeling, legacy unbucketed layout. Old
-        # labels are component minima, so each touched component's
-        # (member -> old_label) rows are a star preserving both its
-        # connectivity and its exact id set; CC over those stars + the
-        # new edges yields the same minima a full recompute would.
-        # Untouched components keep their rows.
-        if batch_clean:
-            # clean batch (zero verified pairs): no component changed,
-            # so the refresh's label delta is purely ADDITIVE — the
-            # batch's genuinely-new docs self-label, replayed docs
-            # already have rows. Append exactly those rows (the same
-            # read-while-append anti-join pattern as the ANN codes
-            # table) instead of rewriting the whole table, and leave
-            # the edge table alone. A from-scratch rebuild produces
-            # the same row set; the next DIRTY batch's full-table
-            # rewrite re-compacts the accumulated small files. Equal
-            # epochs guarantee no dangling profile rows need healing
-            # here (a crashed prior refresh routes to full scope via
-            # the drift check above).
-            fresh = (
-                new_docs.select(
-                    F.col(id_col).cast("long").alias("doc_id")
-                )
-                .distinct()
-                .join(
-                    lbl.select(
-                        F.col(id_name).cast("long").alias("doc_id")
-                    ),
-                    "doc_id",
-                    "left_anti",
-                )
-                .select(
-                    F.col("doc_id").alias(id_name),
-                    F.col("doc_id").alias("cluster_id"),
-                )
-            )
-            fresh.write.mode("append").parquet(f"{path}/labels")
-            if commit_check is not None:  # final commit marker
-                commit_check()
-            _write_sync_epoch(spark, path, "labels", epoch)
-            # appended rows share the stored schema: no inference job
-            return spark.read.schema(lbl.schema).parquet(
-                f"{path}/labels"
-            ).select(id_name, "cluster_id")
-        old_pairs = lbl.select(
-            F.col(id_name).cast("long").alias("doc_id"),
-            F.col("cluster_id").cast("long").alias("old_cluster"),
-        )
-        endpoints = new_edges.select(
-            F.col("id_1").alias("doc_id")
-        ).unionByName(new_edges.select(F.col("id_2").alias("doc_id")))
-        # broadcast semi joins select each touched member row once, so
-        # neither side needs a distinct (and its shuffle)
-        touched = old_pairs.join(
-            F.broadcast(endpoints), "doc_id", "left_semi"
-        ).select(F.col("old_cluster").alias("t_cluster"))
-        members = old_pairs.join(
-            F.broadcast(touched),
-            old_pairs["old_cluster"] == touched["t_cluster"],
-            "left_semi",
-        )
-        compressed = (
-            members.select(
-                F.col("doc_id").alias("id_1"),
-                F.col("old_cluster").alias("id_2"),
-            )
-            .filter(F.col("id_1") != F.col("id_2"))
-            .unionByName(new_edges.select("id_1", "id_2"))
-        )
-        comp = connected_components(compressed, "id_1", "id_2")
-        # pre-overwrite snapshot of (id, old label) — labels is about
-        # to replace the table this derives from (the one checkpoint
-        # of the id universe on this path)
-        prev = (
-            _all_ids().join(old_pairs, "doc_id", "left")
-            .localCheckpoint(eager=True)
-        )
-        labels = (
-            prev.join(comp, prev["doc_id"] == comp["node"], "left")
-            .select(
-                F.col("doc_id").alias(id_name),
-                F.coalesce(
-                    comp["cluster_id"], F.col("old_cluster"), F.col("doc_id")
-                ).cast("long").alias("cluster_id"),
-            )
-        )
-    # full scope / legacy affected: whole-table rewrite. labels derive
-    # from the just-appended parquet tables (not the in-flight
-    # frames), so the overwrite below cannot invalidate its own inputs
-    if bucketed:
-        # one file per bucket (see the build-site comment)
-        labels = labels.withColumn(
-            "label_bucket", _label_bucket(id_name, label_buckets)
-        )
-        labels.repartition(F.col("label_bucket")).write.mode(
-            "overwrite"
-        ).partitionBy("label_bucket").parquet(
-            f"{path}/labels"
-        )
-    else:
-        labels.write.mode("overwrite").parquet(f"{path}/labels")
-    # read back with the schema just written: no inference job
-    out = spark.read.schema(labels.schema).parquet(f"{path}/labels")
-    # post-refresh compaction: replace the accumulated edge rows with
-    # the spanning star implied by the labels just written (identical
-    # components, |V_dup| rows). The labels-side epoch is written only
-    # AFTER the compaction lands: the compaction itself is a
-    # non-atomic parquet overwrite (old files deleted before new ones
-    # commit), so a crash inside it must leave the epochs UNEQUAL —
-    # the next refresh's drift recovery then re-derives connectivity
-    # from edges ∪ star(labels), which tolerates a truncated edge
-    # table (r7 review #2 catch: the previous order silently trusted
-    # a half-written compaction).
-    _compact_edges_from_labels(out, f"{path}/edges")
+    # pre-overwrite snapshot: labels are about to replace the table
+    # this derives from
+    prev = scope.distinct().join(old, "doc_id", "left").localCheckpoint(
+        eager=True
+    )
+    labels = prev.join(comp, prev["doc_id"] == comp["node"], "left").select(
+        # preserve the builder's id column name across refreshes
+        F.col("doc_id").alias(id_name),
+        F.coalesce(
+            comp["cluster_id"], F.col("old_cluster"), F.col("doc_id")
+        ).cast("long").alias("cluster_id"),
+    )
+    out = _write_labels(
+        labels, f"{path}/labels", label_buckets if bucketed else 0,
+        dynamic=True,
+    )
+    if not batch_clean:
+        # replace the edge rows with the spanning star implied by the
+        # labels just written (identical components, |V_dup| rows).
+        # The labels-side epoch is written only AFTER the compaction
+        # lands: the compaction is a non-atomic parquet overwrite, so
+        # a crash inside it must leave the epochs UNEQUAL, and the
+        # drift recovery's edges ∪ star(labels) tolerates a truncated
+        # edge table (r7 review #2 catch).
+        _compact_edges_from_labels(out, f"{path}/edges")
     if commit_check is not None:  # final commit marker: re-assert
         commit_check()
     _write_sync_epoch(spark, path, "labels", epoch)

@@ -282,11 +282,13 @@ def _batch_topk(
 # Default training-sample size of every quantizer (see _train_sample).
 _TRAIN_SAMPLE_LIMIT = 65_536
 
-# Fixed schemas of the ANN artifact's quantizer tables: the build writes
-# them with these and _read_ann_index reads them back with them, so a
-# serving call pays no schema-inference job.
+# Fixed schemas of the ANN artifact's tables: the build writes them
+# with these and the readers read them back with them, so a serving
+# call pays no schema-inference job. The codes table's id column is
+# named by the build's id_col (recorded in path/params).
 _CENTROIDS_DDL = "cluster_id int, centroid array<double>"
 _CODEBOOKS_DDL = "subspace int, code int, center array<double>"
+_CODES_DDL = "{id_col} long, cluster_id int, codes array<int>"
 
 
 def _train_sample(
@@ -1504,21 +1506,19 @@ def _build_ann_index_locked(
     # without params, read as an uncommitted build -> rebuild)
     if commit_check is not None:
         commit_check()
-    write_sidecar_json(
-        spark,
-        f"{path}/params",
-        {
-            "num_clusters": int(num_clusters),
-            "m": int(m),
-            "ksub": int(ksub),
-            "dim": int(dim),
-            "seed": int(seed),
-            "qerr_mean": float(qerr.mean()),
-            "qerr_p95": float(np.quantile(qerr, 0.95)),
-            "qerr_n": int(len(qerr)),
-        },
-    )
-    return spark.read.parquet(f"{path}/codes")
+    params = {
+        "num_clusters": int(num_clusters),
+        "m": int(m),
+        "ksub": int(ksub),
+        "dim": int(dim),
+        "seed": int(seed),
+        "qerr_mean": float(qerr.mean()),
+        "qerr_p95": float(np.quantile(qerr, 0.95)),
+        "qerr_n": int(len(qerr)),
+        "id_col": id_col,  # names the codes table's id column
+    }
+    write_sidecar_json(spark, f"{path}/params", params)
+    return _read_codes(spark, path, params, id_col)
 
 
 def _read_ann_params(spark, path: str):
@@ -1558,6 +1558,27 @@ def _read_ann_params(spark, path: str):
             "(no params sidecar — the build's final write)"
         )
     return params
+
+
+def _read_codes(spark, path: str, params, id_col: str | None = None) -> DataFrame:
+    """``path/codes`` read with the schema ``_assign_and_encode`` writes
+    (``_CODES_DDL``): no schema-inference job. The id column is named
+    by the build's ``id_col`` from the params sidecar; a different
+    ``id_col`` raises instead of reading a column of nulls (``None``
+    takes the recorded name). Sidecars without the key (built before
+    it was recorded) keep the inference read, where a wrong column
+    fails at analysis."""
+    recorded = params.get("id_col") if isinstance(params, dict) else None
+    if recorded is None:
+        return spark.read.parquet(f"{path}/codes")
+    if id_col not in (None, recorded):
+        raise ValueError(
+            f"id_col={id_col!r} does not match the ANN index's id column "
+            f"{recorded!r} (from {path}/params)"
+        )
+    return spark.read.schema(_CODES_DDL.format(id_col=recorded)).parquet(
+        f"{path}/codes"
+    )
 
 
 def _read_ann_index(spark, path: str):
@@ -1632,7 +1653,7 @@ def _assign_and_encode(
                 )
             yield pd.DataFrame(out)
 
-    schema = f"{id_col} long, cluster_id int, codes array<int>"
+    schema = _CODES_DDL.format(id_col=id_col)
     if with_qerr:
         schema += ", __qerr double"
     return spread(df.select(id_col, vec_col)).mapInPandas(run, schema)
@@ -1758,7 +1779,7 @@ def _extend_ann_index_locked(
         batch_codes = batch_codes.observe(
             obs, F.avg("__qerr").alias("m"), F.count(F.lit(1)).alias("n")
         ).drop("__qerr")
-    stored_ids = spark.read.parquet(f"{path}/codes").select(id_col)
+    stored_ids = _read_codes(spark, path, params_d, id_col).select(id_col)
     fresh = batch_codes.join(stored_ids, id_col, "left_anti")
     if commit_check is not None:
         commit_check()
@@ -1802,7 +1823,7 @@ def _extend_ann_index_locked(
                     f"distribution; schedule a rebuild of {path}",
                     stacklevel=2,
                 )
-    return spark.read.parquet(f"{path}/codes")
+    return _read_codes(spark, path, params_d, id_col)
 
 
 def ann_index_stats(spark, path: str) -> DataFrame:
@@ -1825,7 +1846,7 @@ def ann_index_stats(spark, path: str) -> DataFrame:
     params = _read_ann_params(spark, path)
     c = int(params["num_clusters"])
     per_cell = (
-        spark.read.parquet(f"{path}/codes")
+        _read_codes(spark, path, params)
         .groupBy("cluster_id")
         .agg(F.count(F.lit(1)).alias("n_rows"))
         .collect()
@@ -2009,7 +2030,7 @@ def ann_index_topk(
         f"{query_id_col} long, cluster_id int",
     )
 
-    cand = spark.read.parquet(f"{path}/codes").join(
+    cand = _read_codes(spark, path, params, id_col).join(
         F.broadcast(probes), "cluster_id"
     ).select(query_id_col, id_col, "codes")
 

@@ -23,11 +23,10 @@ Index design (the 100 TB story):
   shingle, which the oracle recomputes).
 - Per batch, only the NEW documents are shingled (incremental cost is
   O(batch), never O(corpus)); the candidate join explodes band
-  signatures on both sides and equi-joins on (band_idx, band_sig) —
-  the batch side is tiny, so Catalyst broadcasts it against the index
-  scan. At real scale the index is written partitioned by a band-sig
-  prefix (``partition_bands=True``) so the join prunes to matching
-  partitions instead of scanning the full index.
+  signatures on both sides and equi-joins on (band_idx, band_sig) with
+  the batch as the broadcast side (``operators.dedup._probe_and_verify``,
+  the same pass ``extend_dedup_index`` runs), so the index is scanned
+  once and never shuffled.
 - Verification is exact Jaccard via ``array_intersect`` on the stored
   shingle-hash sets — no re-tokenization of old documents.
 
@@ -41,7 +40,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 
 from etlutils_spark.operators.dedup import band_sig_array, shingle_rows
 
@@ -222,50 +220,30 @@ def incremental_minhash_dedup(
     ``pairs_dir`` and append the batch's signature profiles to
     ``index_dir``. Returns the StreamingQuery.
 
-    Order inside a batch: candidates are computed against the index
-    state BEFORE the batch is appended, plus a batch-local self-join —
-    so every pair is discovered exactly once, in the batch that
-    completes it."""
+    Order inside a batch: the batch is probed against the index state
+    BEFORE the batch is appended and against itself, so every pair is
+    discovered exactly once, in the batch that completes it."""
+    from etlutils_spark.operators.dedup import _probe_and_verify
+    from etlutils_spark.sources.sidecar import sidecar_kind
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         if batch_df.isEmpty():
             return
         prof = batch_profiles(batch_df, text_col, id_col, n, num_hashes, bands)
-        new_banded = _explode_bands(prof, "id_2")
-        try:
-            index = spark.read.parquet(index_dir)
-            have_index = True
-        except AnalysisException:
-            have_index = False
-        pairs = None
-        if have_index:
-            old_banded = _explode_bands(index, "id_1")
-            cand = (
-                old_banded.join(F.broadcast(new_banded), ["band_idx", "band_sig"])
-                .select("id_1", "id_2")
-                .distinct()
-                .filter(F.col("id_1") != F.col("id_2"))  # replay tolerance
-            )
-            pairs = _verified_pairs(cand, index, prof, threshold)
-        # batch-local pairs (new vs new)
-        self_cand = (
-            _explode_bands(prof, "id_1")
-            .join(new_banded, ["band_idx", "band_sig"])
-            .filter(F.col("id_1") < F.col("id_2"))
-            .select("id_1", "id_2")
-            .distinct()
-        )
-        local = _verified_pairs(self_cand, prof, prof, threshold)
-        pairs = local if pairs is None else pairs.unionByName(local)
-        # normalize orientation so an at-least-once replay of the same
-        # logical pair (old-vs-new emits as (old, new)) always lands in
-        # pairs_dir as (min, max) — the downstream distinct then dedupes
-        pairs = pairs.select(
-            F.least("id_1", "id_2").alias("id_1"),
-            F.greatest("id_1", "id_2").alias("id_2"),
-            "jaccard",
-        )
+        # an FS-API existence check, not a read that fails: reading a
+        # missing path logs a FileStreamSink stack on every cold start.
+        # The index holds this stream's profiles, so it is read with
+        # their schema (no inference job)
+        if sidecar_kind(spark, index_dir) == "dir":
+            index = spark.read.schema(prof.schema).parquet(index_dir)
+        else:
+            index = prof.limit(0)
+        # the extend's probe: new-vs-index and new-vs-new pairs in one
+        # broadcast pass, each as (min, max) — so an at-least-once
+        # replay of a logical pair always lands in pairs_dir the same
+        # way and the downstream distinct dedupes it
+        pairs = _probe_and_verify(index, prof, threshold, with_jaccard=True)
         pairs.write.mode("append").parquet(pairs_dir)
         prof.write.mode("append").parquet(index_dir)
 

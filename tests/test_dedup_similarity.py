@@ -345,11 +345,10 @@ def test_build_ann_index_collects_training_sample_once(spark, emb, tmp_path):
 def test_ann_index_topk_reads_quantizers_without_inference(
     spark, emb, tmp_path
 ):
-    """Serving from the artifact reads ``centroids`` and ``codebooks``
-    with their fixed DDL: the call's jobs are the two quantizer
-    collects, the query collect and the ``codes`` read's schema
-    inference — four, where inferring both quantizer schemas made
-    six."""
+    """Serving from the artifact reads ``centroids``, ``codebooks`` and
+    ``codes`` with their fixed schemas: the call's jobs are the two
+    quantizer collects and the query collect — three, where inferring
+    the ``codes`` schema made four and inferring all three made six."""
     from etlutils_spark.operators.similarity import (
         ann_index_topk,
         build_ann_index,
@@ -363,8 +362,28 @@ def test_ann_index_topk_reads_quantizers_without_inference(
         spark, lambda: ann_index_topk(emb, path, queries, k=2)
     )
     assert sum(n.startswith("collect at ") for n in names) == 3, names
-    assert len(names) <= 4, names
+    assert len(names) <= 3, names
     assert got.count() == 4
+
+
+def test_ann_index_reads_codes_with_the_build_id_col(spark, emb, tmp_path):
+    """The codes table is read with the schema the build wrote, its id
+    column named by the build's ``id_col`` from the params sidecar: a
+    serving call or extend with a different ``id_col`` raises instead
+    of reading a column of nulls."""
+    from etlutils_spark.operators.similarity import (
+        ann_index_topk,
+        build_ann_index,
+        extend_ann_index,
+    )
+
+    path = str(tmp_path / "annidx")
+    build_ann_index(emb, path, num_clusters=3, m=4, ksub=4)
+    other = emb.withColumnRenamed("vec_id", "other")
+    with pytest.raises(ValueError, match="id_col='other'"):
+        ann_index_topk(other, path, other.limit(2), k=2, id_col="other")
+    with pytest.raises(ValueError, match="id_col='other'"):
+        extend_ann_index(path, other, id_col="other")
 
 
 def test_multimodal_feature_plumbing(docs):
@@ -833,10 +852,11 @@ def test_extend_dedup_index_clean_batch_fast_path(spark, tmp_path):
 
 
 def test_extend_dedup_index_job_budget(spark, tmp_path):
-    """Spark jobs one refresh may launch on the default (unbucketed)
-    layout, pinned at the measured counts: 18 for a dirty batch (its
-    doc pairs with two stored docs) and 9 for a clean one. Each eager
-    action under AQE is a job per query stage, so a new probe,
+    """Spark jobs one refresh may launch, pinned at the measured counts
+    for each label layout: on the default (unbucketed) one 18 for a
+    dirty batch (its doc pairs with two stored docs) and 9 for a clean
+    one; on the bucketed one (``label_buckets=4``) 21 and 13. Each
+    eager action under AQE is a job per query stage, so a new probe,
     checkpoint or schema inference on the refresh path shows up here
     first. No job is a schema inference: the stored tables are read
     with the schemas the build recorded, and the returned labels with
@@ -856,22 +876,29 @@ def test_extend_dedup_index_job_budget(spark, tmp_path):
         (7, "hi"),
     ]
     docs = spark.createDataFrame(rows, "doc_id bigint, text string")
-    path = str(tmp_path / "budget")
-    build_dedup_index(docs.filter("doc_id in (1, 2, 3, 7)"), path)
-    assert not any(  # the auto layout of a small corpus is unbucketed
-        f.startswith("label_bucket=")
-        for f in os.listdir(os.path.join(path, "labels"))
-    )
-    _, dirty = _group_jobs(
-        spark, lambda: extend_dedup_index(path, docs.filter("doc_id = 4"))
-    )
-    got, clean = _group_jobs(
-        spark, lambda: extend_dedup_index(path, docs.filter("doc_id = 5"))
-    )
-    assert dict(got.select("doc_id", "cluster_id").collect()) == {
-        1: 1, 2: 1, 3: 3, 4: 1, 5: 5, 7: 7
-    }
-    assert len(dirty) <= 18 and len(clean) <= 9, (dirty, clean)
+    for label_buckets, max_dirty, max_clean in [("auto", 18, 9), (4, 21, 13)]:
+        path = str(tmp_path / f"budget_{label_buckets}")
+        build_dedup_index(
+            docs.filter("doc_id in (1, 2, 3, 7)"), path,
+            label_buckets=label_buckets,
+        )
+        # the auto layout of a small corpus is unbucketed
+        assert any(
+            f.startswith("label_bucket=")
+            for f in os.listdir(os.path.join(path, "labels"))
+        ) == (label_buckets != "auto")
+        _, dirty = _group_jobs(
+            spark, lambda: extend_dedup_index(path, docs.filter("doc_id = 4"))
+        )
+        got, clean = _group_jobs(
+            spark, lambda: extend_dedup_index(path, docs.filter("doc_id = 5"))
+        )
+        assert dict(got.select("doc_id", "cluster_id").collect()) == {
+            1: 1, 2: 1, 3: 3, 4: 1, 5: 5, 7: 7
+        }
+        assert len(dirty) <= max_dirty and len(clean) <= max_clean, (
+            label_buckets, dirty, clean,
+        )
 
 
 def test_extend_dedup_index_without_recorded_schemas(spark, tmp_path):
@@ -936,6 +963,52 @@ def test_extend_dedup_index_batch_id_type_differs_from_build(
                 spark.createDataFrame([row], f"doc_id {batch}, text string"),
             )
         assert dict(got.collect()) == {1: 1, 2: 2, 3: 1, 4: 1}, built
+
+
+def test_extend_dedup_index_recovers_crash_with_int_ids(
+    spark, tmp_path, monkeypatch
+):
+    """A dirty extend of an int-id corpus that dies after its appends
+    (here inside connected components) leaves only int64 ids in
+    ``path/edges`` — the type of the compacted star — so the next
+    refresh's full-scope read of the edge table meets no int32 file,
+    and it labels like a rebuild."""
+    import glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etlutils_spark.operators import dedup
+
+    a = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda"
+    rows = [(1, a + " x"), (2, "one two three four five six seven"),
+            (3, a + " y"), (4, a + " z")]
+    docs = spark.createDataFrame(rows, "doc_id int, text string")
+    path = str(tmp_path / "crash")
+    dedup.build_dedup_index(docs.filter("doc_id <= 2"), path)
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("crash after the appends")
+
+    monkeypatch.setattr(dedup, "connected_components", crash)
+    with pytest.raises(RuntimeError, match="crash after the appends"):
+        dedup.extend_dedup_index(path, docs.filter("doc_id = 3"))
+    monkeypatch.undo()
+    files = glob.glob(f"{path}/edges/*.parquet")
+    assert [pq.read_schema(f).field("id_1").type for f in files] == [
+        pa.int64()
+    ] * len(files)
+    assert [pq.read_schema(f).field("id_2").type for f in files] == [
+        pa.int64()
+    ] * len(files)
+    edges = {(r["id_1"], r["id_2"])
+             for f in files for r in pq.read_table(f).to_pylist()}
+    assert (1, 3) in edges  # the crashed batch's edge was appended
+    got = dedup.extend_dedup_index(path, docs.filter("doc_id = 4"))
+    want = dedup.build_dedup_index(docs, str(tmp_path / "rebuild"))
+    assert dict(got.collect()) == dict(want.collect()) == {
+        1: 1, 2: 2, 3: 1, 4: 1
+    }
 
 
 def test_extend_dedup_index_affected_scope_matches_full(spark, tmp_path):
