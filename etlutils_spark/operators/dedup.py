@@ -1116,8 +1116,9 @@ def _build_dedup_index_locked(
         label_buckets = (
             0 if n_docs < 250_000 else min(4096, n_docs // 10_000)
         )
-    # 0 is recorded as "unbucketed" in the sidecar
-    label_buckets = int(label_buckets) if int(label_buckets) >= 2 else 0
+    label_buckets = int(label_buckets)
+    if label_buckets < 2:
+        label_buckets = 0  # recorded as "unbucketed" in the sidecar
     out = _write_labels(labels, f"{path}/labels", label_buckets)
     _compact_edges_from_labels(out, f"{path}/edges")
     # Sidecars (epochs, params) are single FS-API files, not Spark
