@@ -49,15 +49,11 @@ from etlutils_spark.functions.vectors import (
 from etlutils_spark.operators.text import TOKENS_COL, shingles_from_tokens, with_tokens
 from etlutils_spark.sources.files import spread
 from etlutils_spark.sources.sidecar import (
-    acquire_writer_lease,
-    params_committed,
-    read_sidecar_json,
+    read_params,
     read_sidecar_text,
-    release_writer_lease,
-    sidecar_kind,
-    verify_writer_lease,
     write_sidecar_json,
     write_sidecar_text,
+    writer_lease,
 )
 
 
@@ -1005,11 +1001,12 @@ def build_dedup_index(
       EDGES and tracks dup-doc count instead (the r6 verdict's
       measured growing term).
     - ``path/params``   JSON sidecar file pinning (n, num_hashes,
-      bands, threshold) so :func:`extend_dedup_index` probes with the
-      same signature scheme the index was built with, plus the
-      profiles and labels schemas (``StructType.json()``) it reads
-      those tables with instead of inferring them; written last as
-      the build's commit marker (sources.sidecar).
+      bands, threshold, label_buckets) so :func:`extend_dedup_index`
+      probes with the same signature scheme and label layout the index
+      was built with, plus the profiles and labels schemas
+      (``StructType.json()``) it reads those tables with instead of
+      inferring them; written last as the build's commit marker
+      (read back only by ``sources.sidecar.read_params``).
 
     Verification here is exact Jaccard over the stored xxhash64
     shingle sets (identical to exact shingle Jaccard absent ~2^-64
@@ -1035,17 +1032,11 @@ def build_dedup_index(
     the lease to expire (stale steal) or be deleted per the error
     message."""
     spark = docs.sparkSession
-    lease = acquire_writer_lease(spark, f"{path}/.writer_lease")
-    try:
+    with writer_lease(spark, f"{path}/.writer_lease") as commit_check:
         return _build_dedup_index_locked(
             spark, docs, path, text_col, id_col, n, num_hashes, bands,
-            threshold, label_buckets,
-            commit_check=lambda: verify_writer_lease(
-                spark, f"{path}/.writer_lease", lease
-            ),
+            threshold, label_buckets, commit_check,
         )
-    finally:
-        release_writer_lease(spark, f"{path}/.writer_lease", lease)
 
 
 def _build_dedup_index_locked(
@@ -1059,7 +1050,7 @@ def _build_dedup_index_locked(
     bands: int,
     threshold: float,
     label_buckets,
-    commit_check=None,
+    commit_check,
 ) -> DataFrame:
     """Body of :func:`build_dedup_index`, under the writer lease.
     ``commit_check`` (a lease re-verification) runs before the
@@ -1127,8 +1118,7 @@ def _build_dedup_index_locked(
     # (the very last write — streaming_dedup_index's bootstrap and the
     # docstring's "a crashed build is simply rebuilt" both key off it),
     # so the sync epochs land before it.
-    if commit_check is not None:
-        commit_check()
+    commit_check()
     _write_sync_epoch(spark, path, "profiles", 0)
     _write_sync_epoch(spark, path, "labels", 0)
     write_sidecar_json(
@@ -1173,15 +1163,15 @@ def compact_dedup_index(
     Takes a SparkSession (this is artifact maintenance, not a
     DataFrame transform). Returns
     ``{"profiles": n_files, "labels": n_files | None}``."""
-    lease = acquire_writer_lease(
-        spark, f"{path}/.writer_lease", writer_lease_stale_sec
+    from etlutils_spark.sources.files import (
+        compact_parquet_inplace,
+        heal_interrupted_compaction,
     )
-    try:
-        from etlutils_spark.sources.files import (
-            compact_parquet_inplace,
-            heal_interrupted_compaction,
-        )
 
+    with writer_lease(
+        spark, f"{path}/.writer_lease", writer_lease_stale_sec
+    ) as check:
+        params = read_params(spark, path, "build_dedup_index")
         # heal BOTH tables up front: a previous compact_dedup_index
         # that crashed between the labels swap's two renames left
         # path/labels absent — the labels read below would then fail
@@ -1194,9 +1184,6 @@ def compact_dedup_index(
         # rewrite job before it can outlast a heartbeat outage, and a
         # compactor that lost its lease mid-rewrite must not swap its
         # stale copy over a thief's fresh appends (r9 verdict Next #3)
-        check = lambda: verify_writer_lease(  # noqa: E731
-            spark, f"{path}/.writer_lease", lease
-        )
         out = {
             "profiles": compact_parquet_inplace(
                 spark, f"{path}/profiles", target_rows_per_file,
@@ -1206,15 +1193,12 @@ def compact_dedup_index(
         }
         # a bucketed label table keeps one file per bucket by
         # construction; the layout is the one the params record
-        params = read_sidecar_json(spark, f"{path}/params") or {}
-        if not params.get("label_buckets"):
+        if not params["label_buckets"]:
             out["labels"] = compact_parquet_inplace(
                 spark, f"{path}/labels", target_rows_per_file,
                 pre_swap_check=check,
             )
         return out
-    finally:
-        release_writer_lease(spark, f"{path}/.writer_lease", lease)
 
 
 def _label_bucket(id_col, num_buckets: int) -> Column:
@@ -1300,108 +1284,36 @@ def _compact_edges_from_labels(labels: DataFrame, edges_path: str) -> None:
     star.write.mode("overwrite").parquet(edges_path)
 
 
-def _index_committed(spark, path: str) -> bool:
-    """True iff ``path/params`` is present AND readable — the build's
-    commit marker actually committed (sources.sidecar.params_committed
-    has the rationale; shared with the ANN artifact's streaming
-    bootstrap)."""
-    return params_committed(spark, f"{path}/params")
-
-
-def _read_index_params(
-    spark: SparkSession,
+def _check_index_params(
+    params: dict,
     path: str,
     n: int | None,
     num_hashes: int | None,
     bands: int | None,
     threshold: float | None,
-) -> tuple[int, int, int, float, int]:
-    """Resolve (n, num_hashes, bands, threshold, label_buckets) for an
-    extend against the build-time sidecar. ``None`` means "use what
-    the index was built with"; an explicit value is VALIDATED against
-    the sidecar — a silent mismatch (e.g. bands=8 at build, 4 at
-    extend) would make the band probe compare incompatible signatures
-    and drop every cross-batch duplicate without any error.
-
-    Three sidecar states, handled distinctly (review catch — a bare
-    read-returning-None conflated the last two):
-
-    - readable: stored values, validated.
-    - ABSENT (pre-sidecar artifact): explicit values / build defaults.
-    - present but UNREADABLE (torn file, parquet debris from a
-      crashed pre-JSON build): raise — silently probing with defaults
-      against an index built with different params is exactly the
-      quiet-corruption mode the sidecar exists to prevent.
-
-    A successfully read legacy parquet-directory sidecar is upgraded
-    in place to the JSON file form (extend is a writer anyway), so
-    extend-only artifacts stop paying the scheduled Spark read every
-    refresh."""
-    from pyspark.errors import AnalysisException
-
-    defaults = (3, 8, 4, 0.5)
-    given = (n, num_hashes, bands, threshold)
-    names = ("n", "num_hashes", "bands", "threshold")
-    kind = sidecar_kind(spark, f"{path}/params")
-    upgrade_legacy = False
-    if kind is None:
-        resolved = tuple(d if g is None else g for g, d in zip(given, defaults))
-        return (*resolved, 0)  # type: ignore[return-value]
-    if kind == "file":
-        row = read_sidecar_json(spark, f"{path}/params")
-        if row is None:
-            raise ValueError(
-                f"{path}/params exists but is not a readable params "
-                "sidecar (torn write?); rebuild the index rather than "
-                "extending it with guessed parameters"
-            )
-    else:  # legacy parquet-directory sidecar
-        try:
-            row = spark.read.parquet(f"{path}/params").first()
-        except AnalysisException:
-            row = None
-        if row is None:
-            raise ValueError(
-                f"{path}/params exists but is not a readable params "
-                "sidecar (crashed build?); rebuild the index rather "
-                "than extending it with guessed parameters"
-            )
-        upgrade_legacy = True
-    stored = (row["n"], row["num_hashes"], row["bands"], row["threshold"])
-    for name, g, s in zip(names, given, stored):
-        if g is not None and g != s:
+) -> None:
+    """Validate an extend's explicit signature parameters against the
+    build's ``params``. ``None`` means "use what the index was built
+    with"; an explicit value must match — a silent mismatch (e.g.
+    bands=8 at build, 4 at extend) would make the band probe compare
+    incompatible signatures and drop every cross-batch duplicate
+    without any error."""
+    given = {"n": n, "num_hashes": num_hashes, "bands": bands,
+             "threshold": threshold}
+    for name, g in given.items():
+        if g is not None and g != params[name]:
             raise ValueError(
                 f"extend_dedup_index {name}={g!r} does not match the "
-                f"index's build-time {name}={s!r} (from {path}/params); "
-                "pass None to inherit the stored value"
+                f"index's build-time {name}={params[name]!r} (from "
+                f"{path}/params); pass None to inherit the stored value"
             )
-    label_buckets = 0
-    if kind == "file":
-        label_buckets = int(row.get("label_buckets") or 0)
-    if upgrade_legacy:
-        write_sidecar_json(
-            spark,
-            f"{path}/params",
-            {
-                "n": int(stored[0]),
-                "num_hashes": int(stored[1]),
-                "bands": int(stored[2]),
-                "threshold": float(stored[3]),
-                "label_buckets": 0,  # legacy layouts are unbucketed
-            },
-        )
-    return (*stored, label_buckets)  # type: ignore[return-value]
 
 
-def _read_stored(spark: SparkSession, table: str, schema_json: str | None) -> DataFrame:
+def _read_stored(spark: SparkSession, table: str, schema_json: str) -> DataFrame:
     """Read an index table with the schema recorded in the params
-    sidecar (``StructType.json()``): no schema-inference job. ``None``
-    (an artifact built before the sidecar recorded schemas) falls back
-    to the inference read."""
-    reader = spark.read
-    if schema_json is not None:
-        reader = reader.schema(StructType.fromJson(json.loads(schema_json)))
-    return reader.parquet(table)
+    sidecar (``StructType.json()``): no schema-inference job."""
+    schema = StructType.fromJson(json.loads(schema_json))
+    return spark.read.schema(schema).parquet(table)
 
 
 def _probe_and_verify(
@@ -1484,7 +1396,10 @@ def extend_dedup_index(
     inherit the index's build-time values from the ``path/params``
     sidecar; an explicit value must MATCH the sidecar or this raises
     (a silent bands mismatch would probe with incompatible signatures
-    and drop every cross-batch duplicate without any error).
+    and drop every cross-batch duplicate without any error). A params
+    sidecar that is absent, a directory, torn or missing a key the
+    build records raises too (``sources.sidecar.read_params``): rebuild
+    such an artifact.
 
     Connected components are recomputed over the AFFECTED scope: only
     components actually TOUCHED by the batch's new edges are relabeled.
@@ -1505,8 +1420,8 @@ def extend_dedup_index(
     refresh recomputes FULL scope instead: CC over the stored edge
     table ∪ the stored labels' stars ∪ the new edges, over an id scope
     that adds the stored profiles, which re-derives every label and
-    self-heals the crashed batch's shingleable docs. An artifact built
-    before the markers existed takes full scope once, the same way.
+    self-heals the crashed batch's shingleable docs. A missing or torn
+    marker takes full scope the same way.
     Both scopes then share one tail: one checkpoint of the carried
     label rows, ``coalesce(new component, old label, self)``, one
     label write, the edge compaction and the labels-side marker.
@@ -1591,10 +1506,9 @@ def extend_dedup_index(
     # the params read happens UNDER the lease too: a rebuild committing
     # between our read and our writes would otherwise hand us stale
     # signature parameters (review catch)
-    lease = acquire_writer_lease(
+    with writer_lease(
         spark, f"{path}/.writer_lease", writer_lease_stale_sec
-    )
-    try:
+    ) as commit_check:
         # heal a compaction that died between its two renames — UNDER
         # the lease (the heal is itself an artifact mutation; racing a
         # live compactor's swap would corrupt the directory layout) and
@@ -1605,18 +1519,11 @@ def extend_dedup_index(
 
         heal_interrupted_compaction(spark, f"{path}/profiles")
         heal_interrupted_compaction(spark, f"{path}/labels")
-        n, num_hashes, bands, threshold, label_buckets = _read_index_params(
-            spark, path, n, num_hashes, bands, threshold
-        )
+        params = read_params(spark, path, "build_dedup_index")
+        _check_index_params(params, path, n, num_hashes, bands, threshold)
         return _extend_dedup_index_locked(
-            spark, path, new_docs, text_col, id_col,
-            n, num_hashes, bands, threshold, label_buckets,
-            commit_check=lambda: verify_writer_lease(
-                spark, f"{path}/.writer_lease", lease
-            ),
+            spark, path, new_docs, text_col, id_col, params, commit_check
         )
-    finally:
-        release_writer_lease(spark, f"{path}/.writer_lease", lease)
 
 
 def _extend_dedup_index_locked(
@@ -1625,12 +1532,8 @@ def _extend_dedup_index_locked(
     new_docs: DataFrame,
     text_col: str,
     id_col: str,
-    n: int,
-    num_hashes: int,
-    bands: int,
-    threshold: float,
-    label_buckets: int,
-    commit_check=None,
+    params: dict,
+    commit_check,
 ) -> DataFrame:
     """Body of :func:`extend_dedup_index`, running under the artifact's
     writer lease (which also covers the reads: the
@@ -1642,12 +1545,11 @@ def _extend_dedup_index_locked(
     a thief (r9 verdict Next #3)."""
     from etlutils_spark.streaming.incremental_lsh import batch_profiles
 
+    label_buckets = params["label_buckets"]
     # the stored tables are read with the schemas the build recorded
-    # in the params sidecar (no schema-inference job); artifacts built
-    # before those keys existed keep the inference read
-    params = read_sidecar_json(spark, f"{path}/params") or {}
-    old_prof = _read_stored(spark, f"{path}/profiles", params.get("profiles_schema"))
-    lbl = _read_stored(spark, f"{path}/labels", params.get("labels_schema"))
+    # in the params sidecar (no schema-inference job)
+    old_prof = _read_stored(spark, f"{path}/profiles", params["profiles_schema"])
+    lbl = _read_stored(spark, f"{path}/labels", params["labels_schema"])
     id_name = lbl.columns[0]  # builder's id column, positionally
     bucketed = "label_bucket" in lbl.columns
     if bucketed and label_buckets < 2:
@@ -1670,9 +1572,9 @@ def _extend_dedup_index_locked(
     # themselves — wrong and complete-looking. Detection is O(1):
     # every refresh bumps a profiles-side epoch marker BEFORE its
     # appends and a labels-side marker only AFTER its edge compaction,
-    # so unequal markers == crashed refresh. A missing marker (an
-    # artifact built before the markers existed) counts as drift too:
-    # full scope is always correct, and the refresh then writes both.
+    # so unequal markers == crashed refresh. A missing or torn marker
+    # counts as drift too: full scope is always correct, and the
+    # refresh then writes both.
     p_epoch = _read_sync_epoch(spark, path, "profiles")
     l_epoch = _read_sync_epoch(spark, path, "labels")
     drift = p_epoch is None or l_epoch is None or p_epoch != l_epoch
@@ -1685,10 +1587,13 @@ def _extend_dedup_index_locked(
     # added persist double-stored the checkpointed blocks, and hoisting
     # construction ahead of validation made a doomed extend pay a full
     # shingle job under the lease first)
-    new_prof = batch_profiles(new_docs, text_col, id_col, n, num_hashes, bands)
+    new_prof = batch_profiles(
+        new_docs, text_col, id_col,
+        params["n"], params["num_hashes"], params["bands"],
+    )
     # long ids: the compacted star is long, and one table must not mix
     # int and long files (its readers use one schema)
-    new_edges = _probe_and_verify(old_prof, new_prof, threshold).select(
+    new_edges = _probe_and_verify(old_prof, new_prof, params["threshold"]).select(
         F.col("id_1").cast("long").alias("id_1"),
         F.col("id_2").cast("long").alias("id_2"),
     )
@@ -1711,8 +1616,7 @@ def _extend_dedup_index_locked(
     # unequal and the next refresh takes the full-scope drift path.
     # Ownership is re-asserted first: everything above was reads and
     # cluster math (possibly minutes), everything from here on mutates
-    if commit_check is not None:
-        commit_check()
+    commit_check()
     _write_sync_epoch(spark, path, "profiles", epoch)
     if not batch_clean:  # appending a known-empty frame is a dead job
         new_edges.write.mode("append").parquet(f"{path}/edges")
@@ -1743,8 +1647,7 @@ def _extend_dedup_index_locked(
             )
         )
         fresh.write.mode("append").parquet(f"{path}/labels")
-        if commit_check is not None:  # final commit marker
-            commit_check()
+        commit_check()  # final commit marker
         _write_sync_epoch(spark, path, "labels", epoch)
         # appended rows share the stored schema: no inference job
         return spark.read.schema(lbl.schema).parquet(
@@ -1851,8 +1754,7 @@ def _extend_dedup_index_locked(
         # drift recovery's edges ∪ star(labels) tolerates a truncated
         # edge table (r7 review #2 catch).
         _compact_edges_from_labels(out, f"{path}/edges")
-    if commit_check is not None:  # final commit marker: re-assert
-        commit_check()
+    commit_check()  # final commit marker: re-assert
     _write_sync_epoch(spark, path, "labels", epoch)
     # drop the physical partition key: (id, cluster_id) contract
     return out.select(id_name, "cluster_id")

@@ -36,12 +36,10 @@ from etlutils_spark.functions.vectors import (
     norm_fast,
 )
 from etlutils_spark.sources.sidecar import (
-    acquire_writer_lease,
+    read_params,
     read_sidecar_json,
-    release_writer_lease,
-    sidecar_kind,
-    verify_writer_lease,
     write_sidecar_json,
+    writer_lease,
 )
 
 
@@ -178,7 +176,6 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    exact: bool = True,
 ) -> DataFrame:
     """Exact top-k neighbors per query by cosine similarity.
 
@@ -194,34 +191,19 @@ def cosine_topk(
     # bit-identical to the fused cosine — only the fold count changes.
     # Measured at sf0.1 corpus-as-queries (knn audit): the quadratic
     # stage drops to ~1/3 the array-fold work.
-    dot = dot_exact if exact else dot_fast
-    nrm = norm_exact if exact else norm_fast
     q = queries.select(
         F.col(id_col).alias(query_id_col), F.col(vec_col).alias("__qv")
-    ).withColumn("__qn", nrm("__qv"))
+    ).withColumn("__qn", norm_exact("__qv"))
     # spread: the per-(query, vector) cosine work is the CPU stage
     c0 = spread(corpus.select(F.col(id_col), F.col(vec_col).alias("__cv")))
-    c = c0.withColumn("__cn", nrm("__cv"))
+    c = c0.withColumn("__cn", norm_exact("__cv"))
     pairs = c.crossJoin(F.broadcast(q)).filter(
         F.col(query_id_col) != F.col(id_col)
     )
-    if exact:
-        # two-phase exact top-k: emitted cosines/ranks come from the
-        # exact fold — identical output, exact folds only on ~k rows
-        # per query; survivors re-join c0 for vectors
-        return _screened_topk(pairs, c0, q, k, query_id_col, id_col, "__cv")
-    scored = pairs.select(
-        query_id_col,
-        id_col,
-        (dot("__qv", "__cv") / (F.col("__qn") * F.col("__cn"))).alias(
-            "cosine"
-        ),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    # two-phase exact top-k: emitted cosines/ranks come from the exact
+    # fold — identical output, exact folds only on ~k rows per query;
+    # survivors re-join c0 for vectors
+    return _screened_topk(pairs, c0, q, k, query_id_col, id_col, "__cv")
 
 
 def hyperplanes(dim: int, num_planes: int, seed: int = 42) -> list[list[float]]:
@@ -1427,17 +1409,11 @@ def build_ann_index(
     commit codes encoded against the OLD quantizers into the NEW
     table (review catch)."""
     spark = corpus.sparkSession
-    lease = acquire_writer_lease(spark, f"{path}/.writer_lease")
-    try:
+    with writer_lease(spark, f"{path}/.writer_lease") as commit_check:
         return _build_ann_index_locked(
             spark, corpus, path, num_clusters, m, ksub, id_col, vec_col,
-            seed, max_iter, sample_limit,
-            commit_check=lambda: verify_writer_lease(
-                spark, f"{path}/.writer_lease", lease
-            ),
+            seed, max_iter, sample_limit, commit_check,
         )
-    finally:
-        release_writer_lease(spark, f"{path}/.writer_lease", lease)
 
 
 def _build_ann_index_locked(
@@ -1452,7 +1428,7 @@ def _build_ann_index_locked(
     seed: int,
     max_iter: int,
     sample_limit: int,
-    commit_check=None,
+    commit_check,
 ) -> DataFrame:
     """Body of :func:`build_ann_index`, under the writer lease."""
     sample = _train_sample(corpus, id_col, vec_col, sample_limit)
@@ -1504,8 +1480,7 @@ def _build_ann_index_locked(
     # jobs, and a holder whose heartbeat degraded during them must not
     # stamp the artifact committed over a thief's (the tables alone,
     # without params, read as an uncommitted build -> rebuild)
-    if commit_check is not None:
-        commit_check()
+    commit_check()
     params = {
         "num_clusters": int(num_clusters),
         "m": int(m),
@@ -1521,56 +1496,15 @@ def _build_ann_index_locked(
     return _read_codes(spark, path, params, id_col)
 
 
-def _read_ann_params(spark, path: str):
-    """Just the params row/dict of a ``build_ann_index`` artifact —
-    for consumers that never touch the quantizers (``ann_index_stats``
-    / ``ann_index_health``): the full ``_read_ann_index`` also
-    collects the centroid and codebook tables, which a monitoring
-    call has no use for (review catch — at production index sizes
-    those are two needless driver-memory collects per health check)."""
-    kind = sidecar_kind(spark, f"{path}/params")
-    if kind == "file":
-        params = read_sidecar_json(spark, f"{path}/params")
-        if params is None:
-            raise ValueError(
-                f"{path}/params exists but is not a readable params "
-                "sidecar (torn write?); rebuild the ANN index"
-            )
-    elif kind == "dir":
-        # legacy parquet-directory sidecar from earlier r7 builds;
-        # _temporary debris from a crashed build raises
-        # AnalysisException before .first() — same ValueError either
-        # way (review catch)
-        from pyspark.errors import AnalysisException
-
-        try:
-            params = spark.read.parquet(f"{path}/params").first()
-        except AnalysisException:
-            params = None
-        if params is None:
-            raise ValueError(
-                f"{path}/params exists but holds no readable params "
-                "row (crashed build?); rebuild the ANN index"
-            )
-    else:
-        raise ValueError(
-            f"{path} is not a committed build_ann_index artifact "
-            "(no params sidecar — the build's final write)"
-        )
-    return params
-
-
-def _read_codes(spark, path: str, params, id_col: str | None = None) -> DataFrame:
+def _read_codes(
+    spark, path: str, params: dict, id_col: str | None = None
+) -> DataFrame:
     """``path/codes`` read with the schema ``_assign_and_encode`` writes
     (``_CODES_DDL``): no schema-inference job. The id column is named
     by the build's ``id_col`` from the params sidecar; a different
     ``id_col`` raises instead of reading a column of nulls (``None``
-    takes the recorded name). Sidecars without the key (built before
-    it was recorded) keep the inference read, where a wrong column
-    fails at analysis."""
-    recorded = params.get("id_col") if isinstance(params, dict) else None
-    if recorded is None:
-        return spark.read.parquet(f"{path}/codes")
+    takes the recorded name)."""
+    recorded = params["id_col"]
     if id_col not in (None, recorded):
         raise ValueError(
             f"id_col={id_col!r} does not match the ANN index's id column "
@@ -1582,12 +1516,12 @@ def _read_codes(spark, path: str, params, id_col: str | None = None) -> DataFram
 
 
 def _read_ann_index(spark, path: str):
-    """(params row, centroid matrix (C, dim), codebooks (m, ksub, dsub))
+    """(params, centroid matrix (C, dim), codebooks (m, ksub, dsub))
     from a ``build_ann_index`` artifact. Both collects are bounded by
     construction: num_clusters and m*ksub rows; both tables are read
     with their fixed DDL, so neither read launches a schema-inference
     job."""
-    params = _read_ann_params(spark, path)
+    params = read_params(spark, path, "build_ann_index")
     cent_rows = spark.read.schema(_CENTROIDS_DDL).parquet(
         f"{path}/centroids"
     ).collect()
@@ -1692,8 +1626,7 @@ def extend_ann_index(
     (default 2.0: the batch quantizes twice as badly as the corpus the
     quantizers were trained on) flips ``drifted`` and emits a warning;
     the remedy is the documented periodic rebuild. Observability only:
-    the batch still lands — drifted data is real data — and legacy
-    artifacts without a stored baseline skip the measurement.
+    the batch still lands — drifted data is real data.
 
     Single-writer ENFORCED via the ``path/.writer_lease`` sidecar
     (same contract as ``extend_dedup_index``): a concurrent extend
@@ -1704,10 +1637,9 @@ def extend_ann_index(
     # between reading the quantizers and appending the codes would
     # otherwise let this extend encode against the OLD codebooks and
     # append into the NEW table (review catch)
-    lease = acquire_writer_lease(
+    with writer_lease(
         spark, f"{path}/.writer_lease", writer_lease_stale_sec
-    )
-    try:
+    ) as commit_check:
         # heal a compaction that died between its two renames — UNDER
         # the lease and UNCONDITIONALLY (a manual compact_ann_index
         # crash must not wedge extends, or a stream restarted without
@@ -1718,13 +1650,8 @@ def extend_ann_index(
         heal_interrupted_compaction(spark, f"{path}/codes")
         return _extend_ann_index_locked(
             spark, path, new_vectors, id_col, vec_col,
-            drift_ratio_threshold,
-            commit_check=lambda: verify_writer_lease(
-                spark, f"{path}/.writer_lease", lease
-            ),
+            drift_ratio_threshold, commit_check,
         )
-    finally:
-        release_writer_lease(spark, f"{path}/.writer_lease", lease)
 
 
 def _extend_ann_index_locked(
@@ -1734,7 +1661,7 @@ def _extend_ann_index_locked(
     id_col: str,
     vec_col: str,
     drift_ratio_threshold: float,
-    commit_check=None,
+    commit_check,
 ) -> DataFrame:
     """Body of :func:`extend_ann_index`, under the writer lease.
     ``commit_check`` (the wrapper passes a lease re-verification) runs
@@ -1761,69 +1688,60 @@ def _extend_ann_index_locked(
     unnecessary: the frame is consumed exactly once."""
     import warnings
 
+    from pyspark.sql import Observation
+
     params, cents, books = _read_ann_index(spark, path)
-    dim = int(params["dim"])
-    params_d = params.asDict() if hasattr(params, "asDict") else params
-    baseline = params_d.get("qerr_mean")
+    baseline = params["qerr_mean"]
+    obs = Observation()
     batch_codes = _assign_and_encode(
-        new_vectors, cents, books, id_col, vec_col, dim,
+        new_vectors, cents, books, id_col, vec_col, int(params["dim"]),
         "extend_ann_index: batch vectors have dim {got} but the index "
         f"was built at dim {{want}} (from {path}/params)",
-        with_qerr=baseline is not None,
-    )
-    obs = None
-    if baseline is not None:
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        batch_codes = batch_codes.observe(
-            obs, F.avg("__qerr").alias("m"), F.count(F.lit(1)).alias("n")
-        ).drop("__qerr")
-    stored_ids = _read_codes(spark, path, params_d, id_col).select(id_col)
+        with_qerr=True,
+    ).observe(
+        obs, F.avg("__qerr").alias("m"), F.count(F.lit(1)).alias("n")
+    ).drop("__qerr")
+    stored_ids = _read_codes(spark, path, params, id_col).select(id_col)
     fresh = batch_codes.join(stored_ids, id_col, "left_anti")
-    if commit_check is not None:
-        commit_check()
+    commit_check()
     fresh.write.mode("append").parquet(f"{path}/codes")
-    if commit_check is not None:
-        # The encode IS the write job (the Observation rides it — the
-        # r9 one-job design), so a heartbeat give-up DURING that job
-        # cannot be caught by the pre-check alone. The post-check
-        # detects it LOUDLY: a theft requires the lease to sit stale
-        # for a full staleness window mid-write, and the raise tells
-        # the operator which artifact to verify (the append itself is
-        # replay-idempotent — a legitimate re-run anti-joins the
-        # already-appended ids away).
-        commit_check()
-    if obs is not None:
-        stat = obs.get  # ready: the write action above has completed
-        if stat["n"]:
-            # a 0.0 baseline (degenerate all-duplicate training
-            # sample) makes ANY nonzero batch error infinite drift
-            # — correct: the quantizers know exactly one point
-            ratio = float(stat["m"]) / max(float(baseline), 1e-300)
-            drifted = bool(ratio > drift_ratio_threshold)
-            write_sidecar_json(
-                spark,
-                f"{path}/drift",
-                {
-                    "batch_qerr_mean": float(stat["m"]),
-                    "build_qerr_mean": float(baseline),
-                    "ratio": ratio,
-                    "threshold": float(drift_ratio_threshold),
-                    "drifted": drifted,
-                    "batch_rows": int(stat["n"]),
-                },
+    # The encode IS the write job (the Observation rides it — the r9
+    # one-job design), so a heartbeat give-up DURING that job cannot be
+    # caught by the pre-check alone. The post-check detects it LOUDLY:
+    # a theft requires the lease to sit stale for a full staleness
+    # window mid-write, and the raise tells the operator which artifact
+    # to verify (the append itself is replay-idempotent — a legitimate
+    # re-run anti-joins the already-appended ids away).
+    commit_check()
+    stat = obs.get  # ready: the write action above has completed
+    if stat["n"]:
+        # a 0.0 baseline (degenerate all-duplicate training sample)
+        # makes ANY nonzero batch error infinite drift — correct: the
+        # quantizers know exactly one point
+        ratio = float(stat["m"]) / max(float(baseline), 1e-300)
+        drifted = bool(ratio > drift_ratio_threshold)
+        write_sidecar_json(
+            spark,
+            f"{path}/drift",
+            {
+                "batch_qerr_mean": float(stat["m"]),
+                "build_qerr_mean": float(baseline),
+                "ratio": ratio,
+                "threshold": float(drift_ratio_threshold),
+                "drifted": drifted,
+                "batch_rows": int(stat["n"]),
+            },
+        )
+        if drifted:
+            warnings.warn(
+                f"extend_ann_index: batch quantization error is "
+                f"{ratio:.2f}x the build baseline (threshold "
+                f"{drift_ratio_threshold}) — the frozen quantizers no "
+                f"longer fit the ingest distribution; schedule a "
+                f"rebuild of {path}",
+                stacklevel=2,
             )
-            if drifted:
-                warnings.warn(
-                    f"extend_ann_index: batch quantization error is "
-                    f"{ratio:.2f}x the build baseline (threshold "
-                    f"{drift_ratio_threshold}) — the frozen "
-                    f"quantizers no longer fit the ingest "
-                    f"distribution; schedule a rebuild of {path}",
-                    stacklevel=2,
-                )
-    return _read_codes(spark, path, params_d, id_col)
+    return _read_codes(spark, path, params, id_col)
 
 
 def ann_index_stats(spark, path: str) -> DataFrame:
@@ -1842,8 +1760,8 @@ def ann_index_stats(spark, path: str) -> DataFrame:
     the corpus total is derived from the collected per-cell counts
     (at most num_clusters rows — bounded by construction) instead of
     a second count job over the same table, and the params come from
-    the sidecar-only reader (no centroid/codebook collects)."""
-    params = _read_ann_params(spark, path)
+    the sidecar alone (no centroid/codebook collects)."""
+    params = read_params(spark, path, "build_ann_index")
     c = int(params["num_clusters"])
     per_cell = (
         _read_codes(spark, path, params)
@@ -1865,7 +1783,7 @@ def ann_index_stats(spark, path: str) -> DataFrame:
 def ann_index_drift(spark, path: str) -> dict | None:
     """The last extend's drift record for a ``build_ann_index``
     artifact (``path/drift``), or None when no extend has measured one
-    (fresh build, or a legacy artifact without a stored baseline).
+    (a fresh build).
     Keys: batch_qerr_mean, build_qerr_mean, ratio, threshold, drifted,
     batch_rows — see ``extend_ann_index``'s drift contract."""
     return read_sidecar_json(spark, f"{path}/drift")
@@ -1890,20 +1808,15 @@ def compact_ann_index(
     same cadence as the drift check (:func:`ann_index_health`)."""
     from etlutils_spark.sources.files import compact_parquet_inplace
 
-    lease = acquire_writer_lease(
+    with writer_lease(
         spark, f"{path}/.writer_lease", writer_lease_stale_sec
-    )
-    try:
+    ) as check:
         # ownership is re-asserted right before the swap: the rewrite
         # job can outlast a heartbeat outage (r9 verdict Next #3)
         return compact_parquet_inplace(
             spark, f"{path}/codes", target_rows_per_file,
-            pre_swap_check=lambda: verify_writer_lease(
-                spark, f"{path}/.writer_lease", lease
-            ),
+            pre_swap_check=check,
         )
-    finally:
-        release_writer_lease(spark, f"{path}/.writer_lease", lease)
 
 
 def ann_index_health(

@@ -13,18 +13,17 @@ store (HDFS, S3A, local).
 
 Commit discipline: write-to-temp + rename. Atomic on HDFS and local
 filesystems; copy-rename on object stores, where a torn read parses as
-``None``. Callers decide what ``None`` means by pairing the read with
-:func:`sidecar_kind`: for EPOCH MARKERS it is the conservative path
-(drift fallback / migration — weaker stores degrade to correctness,
-not corruption), while for PARAMS sidecars "present but unreadable" is
-corruption and must RAISE, because extending an index with guessed
-parameters fails silently (see ``dedup._read_index_params``).
-Absent-vs-torn is a real distinction — don't collapse it back into a
-bare read.
+``None``. What ``None`` means depends on the sidecar: for EPOCH MARKERS
+it is the conservative path (full-scope drift recovery — weaker stores
+degrade to correctness, not corruption), while a PARAMS sidecar is read
+only through :func:`read_params`, which raises on every form but the
+committed JSON file, because extending or serving an index with
+guessed parameters fails silently.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 from typing import Any
 
@@ -80,110 +79,75 @@ def _read_lease_token(jvm, fs, target) -> str | None:
 
 
 def sidecar_kind(spark, url: str) -> str | None:
-    """``"file"`` (the FS-API sidecar form), ``"dir"`` (the legacy
-    parquet-directory form), or ``None`` (absent). Lets callers
-    distinguish "present but unreadable" (corruption — be loud) from
-    "absent" (pre-sidecar artifact — take the documented fallback),
-    which a bare read-returning-None cannot."""
+    """``"file"`` (the FS-API sidecar form), ``"dir"`` (a directory —
+    a parquet table, or debris at a sidecar path), or ``None``
+    (absent): one ``exists`` plus one status call, no Spark job."""
     _, fs, target = _fs_path(spark, url)
     if not fs.exists(target):
         return None
     return "dir" if fs.getFileStatus(target).isDirectory() else "file"
 
 
-def params_committed(spark, url: str) -> bool:
-    """True iff a params sidecar at ``url`` is present AND readable —
-    i.e. the artifact build whose COMMIT MARKER it is actually
-    committed. Presence alone is not enough: a build that crashed
-    mid-params-write can leave an unreadable stub (a torn file, or a
-    parquet directory holding only _temporary debris), and a bootstrap
-    that mistakes that for "committed" would extend a half-built
-    artifact with guessed params instead of rebuilding it."""
-    from pyspark.errors import AnalysisException
-
-    kind = sidecar_kind(spark, url)
-    if kind == "file":
-        return read_sidecar_json(spark, url) is not None
-    if kind == "dir":  # legacy parquet form
-        try:
-            # readable AND non-empty: a schema-only directory whose
-            # data file was lost would route callers to an extend that
-            # then raises on row=None (review catch)
-            return spark.read.parquet(url).first() is not None
-        except AnalysisException:
-            return False
-    return False
+# Every key each index artifact's build records in ``path/params``;
+# a sidecar missing any of them was not written by a current build.
+_PARAMS_KEYS = {
+    "build_dedup_index": (
+        "n", "num_hashes", "bands", "threshold", "label_buckets",
+        "profiles_schema", "labels_schema",
+    ),
+    "build_ann_index": (
+        "num_clusters", "m", "ksub", "dim", "seed", "qerr_mean",
+        "qerr_p95", "qerr_n", "id_col",
+    ),
+}
 
 
-def bootstrap_action(spark, url: str) -> str:
-    """What a streaming ingest's cold-start probe should do, given the
-    state of the build's params commit marker at ``url``:
+def read_params(spark, path: str, artifact: str) -> dict[str, Any]:
+    """The committed build parameters of the index artifact at
+    ``path``, which ``artifact`` (``"build_dedup_index"`` or
+    ``"build_ann_index"``) wrote: the one JSON file ``path/params``
+    holding every key of ``_PARAMS_KEYS[artifact]``. It is the build's
+    last write, its commit marker. Absent, a directory, torn, or
+    missing a key, the artifact is not one a current build committed,
+    and reading on with guessed parameters would label or serve wrong
+    without any error: each raises a ``ValueError`` that says to
+    rebuild."""
+    url = f"{path}/params"
+    params = read_sidecar_json(spark, url)
+    if params is None:
+        why = {
+            None: "absent: the build never committed",
+            "dir": "a directory, not the JSON file a build writes",
+            "file": "torn write?",
+        }[sidecar_kind(spark, url)]
+    else:
+        missing = [k for k in _PARAMS_KEYS[artifact] if k not in params]
+        if not missing:
+            return params
+        why = f"missing {', '.join(missing)}"
+    raise ValueError(
+        f"{url} is not a readable params sidecar ({why}); rebuild the "
+        f"index with {artifact}"
+    )
 
-    - ``"extend"``  — committed (readable file or readable legacy
-      parquet directory): fold the batch into the existing artifact.
-    - ``"build"``   — ABSENT, or unreadable legacy-DIRECTORY debris on
-      an otherwise-empty artifact path (a crashed pre-JSON build;
-      both writers emit params as the build's last write, so that
-      state can only mean "no committed artifact"): bootstrap from
-      this batch.
-    - raises        — a torn params FILE, or an unreadable legacy
-      params DIRECTORY with sibling artifact tables (labels / edges /
-      codes ...) next to it. The JSON writer commits via temp+rename,
-      so a torn file essentially only happens to an already-committed
-      artifact on a rename-weak store; and a legacy directory that
-      lost its data file post-commit still has the committed artifact
-      tables beside it. Rebuilding from one micro-batch in either
-      state would silently DESTROY the stored corpus (review catches —
-      "absent" and "damaged" must not share the rebuild path, in
-      either sidecar generation)."""
-    from pyspark.errors import AnalysisException
 
-    # one kind stat + one content read per path (review catch: routing
-    # through params_committed re-statted the kind and re-read the
-    # JSON, doubling the cold-start FS round-trips and opening a
-    # TOCTOU seam between the torn-file check and the verdict)
-    kind = sidecar_kind(spark, url)
-    if kind == "file":
-        if read_sidecar_json(spark, url) is None:
-            raise ValueError(
-                f"{url} exists but is not readable (torn write?): this "
-                "looks like a DAMAGED committed artifact, not a fresh "
-                "path — refusing to bootstrap over it; restore the "
-                "params sidecar or rebuild explicitly"
-            )
-        return "extend"
-    if kind is None:
+def bootstrap_action(spark, path: str, artifact: str) -> str:
+    """What a streaming ingest's cold start should do with the index
+    artifact at ``path``, which ``artifact`` builds:
+
+    - ``"build"``  — ``path/params`` absent: no committed artifact, so
+      bootstrap from this batch (a crashed build is rebuilt; every
+      build write is overwrite-mode).
+    - ``"extend"`` — committed params (:func:`read_params`): fold the
+      batch into the artifact.
+    - raises       — :func:`read_params`' error on a torn file, a
+      directory or a key-incomplete file. Both writers commit params as
+      one file via temp + rename, so each is a damaged artifact, and
+      rebuilding from one micro-batch would destroy the stored
+      corpus."""
+    if sidecar_kind(spark, f"{path}/params") is None:
         return "build"
-    # legacy parquet-directory form: readable AND non-empty = committed
-    # (same rule as params_committed)
-    try:
-        committed = spark.read.parquet(url).first() is not None
-    except AnalysisException:
-        committed = False
-    if not committed:
-        # unreadable legacy parquet directory: only a crashed build —
-        # i.e. nothing else on the artifact path — may rebuild; with
-        # committed sibling tables present this is damage, not absence
-        _, fs, target = _fs_path(spark, url)
-        parent = target.getParent()
-        siblings = (
-            [s.getPath().getName() for s in fs.listStatus(parent)]
-            if parent is not None and fs.exists(parent)
-            else []
-        )
-        real = [
-            n for n in siblings
-            if n != target.getName() and not n.startswith((".", "_"))
-        ]
-        if real:
-            raise ValueError(
-                f"{url} is an unreadable legacy params directory but "
-                f"sibling artifact tables exist ({sorted(real)}): this "
-                "looks like a DAMAGED committed artifact, not a fresh "
-                "path — refusing to bootstrap over it; restore the "
-                "params sidecar or rebuild explicitly"
-            )
-        return "build"
+    read_params(spark, path, artifact)
     return "extend"
 
 
@@ -707,6 +671,20 @@ def release_writer_lease(spark, url: str, token: str) -> None:
     )
 
 
+@contextlib.contextmanager
+def writer_lease(spark, url: str, stale_after_sec: float = 600.0):
+    """Hold the single-writer lease at ``url`` for the body of a
+    ``with`` block: :func:`acquire_writer_lease` on entry,
+    :func:`release_writer_lease` on exit (normal or raised). Yields the
+    commit check — :func:`verify_writer_lease` for this holder — which
+    an index mutator calls at its commit points."""
+    token = acquire_writer_lease(spark, url, stale_after_sec)
+    try:
+        yield lambda: verify_writer_lease(spark, url, token)
+    finally:
+        release_writer_lease(spark, url, token)
+
+
 def write_sidecar_text(spark, url: str, text: str) -> None:
     """Commit ``text`` at ``url`` as one file via temp + OVERWRITE
     rename (``FileContext.rename(..., Rename.OVERWRITE)`` — the
@@ -715,11 +693,12 @@ def write_sidecar_text(spark, url: str, text: str) -> None:
     delete-then-rename commit had one, and a concurrent lease-less
     cold-start probe (``bootstrap_action``) reading in that window got
     kind=None -> "build" and rebuilt the artifact from one micro-batch
-    (review catch). A recursive delete still retires a legacy parquet
-    DIRECTORY at the same path first (rename cannot replace a
-    non-empty directory; those migration rewrites run lease-guarded),
-    and stores whose FileContext lacks atomic rename fall back to the
-    old two-step with its documented window."""
+    (review catch). A recursive delete first retires a DIRECTORY at
+    the same path (an epoch marker's earlier parquet form; rename
+    cannot replace a non-empty directory, and every caller writes
+    under the writer lease), and stores whose FileContext lacks
+    atomic rename fall back to the old two-step with its documented
+    window."""
     jvm, fs, target = _fs_path(spark, url)
     parent, name = url.rsplit("/", 1)
     tmp = jvm.org.apache.hadoop.fs.Path(f"{parent}/.{name}.tmp")
@@ -729,7 +708,7 @@ def write_sidecar_text(spark, url: str, text: str) -> None:
     finally:
         stream.close()
     if fs.exists(target) and fs.getFileStatus(target).isDirectory():
-        fs.delete(target, True)  # legacy parquet dir: migration path
+        fs.delete(target, True)  # a directory: rename cannot replace it
     try:
         conf = spark.sparkContext._jsc.hadoopConfiguration()
         fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(conf)
@@ -747,8 +726,8 @@ def write_sidecar_text(spark, url: str, text: str) -> None:
 
 def read_sidecar_text(spark, url: str) -> str | None:
     """File contents, or None when unreadable as a sidecar FILE:
-    absent, a legacy parquet directory, or an IO error. Callers route
-    None through their conservative path."""
+    absent, a directory, or an IO error. Callers route None through
+    their conservative path."""
     from py4j.protocol import Py4JJavaError
 
     jvm, fs, target = _fs_path(spark, url)
@@ -769,8 +748,8 @@ def write_sidecar_json(spark, url: str, obj: dict[str, Any]) -> None:
 
 
 def read_sidecar_json(spark, url: str) -> dict[str, Any] | None:
-    """Parsed JSON object, or None for absent / legacy-directory /
-    torn content (same conservative-path contract as the text form)."""
+    """Parsed JSON object, or None for absent / directory / torn
+    content (same conservative-path contract as the text form)."""
     txt = read_sidecar_text(spark, url)
     if txt is None:
         return None

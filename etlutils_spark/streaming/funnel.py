@@ -37,7 +37,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 
 from etlutils_spark.event_queries import funnel_stages
 
@@ -81,21 +80,27 @@ def incremental_funnel(
             atomic_overwrite_parquet,
             heal_interrupted_compaction,
         )
+        from etlutils_spark.sources.sidecar import sidecar_kind
 
         spark = batch_df.sparkSession
         if batch_df.isEmpty():
             return
         # promote a complete .compact_tmp if the previous batch crashed
-        # between the swap renames — without this, the AnalysisException
-        # fallback below would misread that crash as a COLD START and
-        # silently rebuild state from this batch alone (review catch)
+        # between the swap renames — without this, the existence check
+        # below would misread that crash as a COLD START and silently
+        # rebuild state from this batch alone (review catch)
         heal_interrupted_compaction(spark, state_dir)
         batch = batch_df.select("event_id", "user_id", "ts", "event_type")
-        try:
-            state = spark.read.parquet(state_dir)
+        # an FS-API existence check, not a read that fails: reading a
+        # missing path logs a FileStreamSink stack on every cold start.
+        # The state is this fold's own output, so it is read with that
+        # schema (no inference job)
+        allev = batch
+        if sidecar_kind(spark, state_dir) == "dir":
+            state = spark.read.schema(funnel_stages(batch).schema).parquet(
+                state_dir
+            )
             allev = batch.unionByName(_state_as_events(state))
-        except AnalysisException:
-            allev = batch
         # crash-safe swap, never a direct overwrite of the only copy of
         # accumulated state: a direct mode("overwrite") deletes the old
         # files before the new job commits, so a crash mid-write

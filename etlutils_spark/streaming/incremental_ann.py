@@ -57,8 +57,8 @@ def streaming_ann_index(
 
     The cold-start probe (``sources.sidecar.bootstrap_action``, on
     ``path/params`` — the build's last write) distinguishes three
-    states: committed -> extend; absent or crashed-build debris ->
-    rebuild from the replayed batch; a torn params FILE -> raise,
+    states: committed -> extend; absent -> build from the replayed
+    batch; a torn, directory or key-incomplete params -> raise,
     because that means a DAMAGED committed artifact and rebuilding
     from one micro-batch would destroy the stored corpus. Later
     batches run ``extend_ann_index``: O(batch),
@@ -90,10 +90,11 @@ def streaming_ann_index(
         # unconditionally (r10: previously healed here, lease-less and
         # only when compact_every was set — a manual compaction crash
         # or a restart without compact_every stayed wedged)
-        # committed -> extend; absent/debris -> build; torn params
-        # FILE -> raise (a damaged committed artifact — rebuilding
-        # from one micro-batch would destroy the stored corpus)
-        if bootstrap_action(spark, f"{path}/params") == "extend":
+        # committed -> extend; absent -> build; torn, directory or
+        # key-incomplete params -> raise (a damaged committed artifact
+        # — rebuilding from one micro-batch would destroy the stored
+        # corpus)
+        if bootstrap_action(spark, path, "build_ann_index") == "extend":
             extend_ann_index(path, batch_df, id_col=id_col, vec_col=vec_col)
         else:
             build_ann_index(

@@ -171,16 +171,15 @@ def streaming_dedup_index(
         # unconditionally (r10: previously healed here, lease-less and
         # only when compact_every was set — a manual compaction crash
         # or a restart without compact_every stayed wedged)
-        # cold-start probe with three distinguished states (review
-        # catches, sources.sidecar.bootstrap_action): committed ->
-        # extend; absent / crashed-pre-JSON-build debris -> rebuild;
-        # torn params FILE -> raise, because that state means a
+        # cold-start probe (sources.sidecar.bootstrap_action):
+        # committed -> extend; absent -> build; a torn, directory or
+        # key-incomplete params -> raise, because that state means a
         # DAMAGED committed index and rebuilding from one micro-batch
-        # would silently destroy the stored corpus. Still no Spark job
-        # and no FileStreamSink WARN stack per micro-batch.
+        # would silently destroy the stored corpus. No Spark job and
+        # no FileStreamSink WARN stack per micro-batch.
         from etlutils_spark.sources.sidecar import bootstrap_action
 
-        if bootstrap_action(spark, f"{path}/params") == "extend":
+        if bootstrap_action(spark, path, "build_dedup_index") == "extend":
             extend_dedup_index(path, batch_df, text_col, id_col)
         else:
             build_dedup_index(

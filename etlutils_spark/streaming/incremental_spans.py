@@ -46,9 +46,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 
 from etlutils_spark.operators.dedup import span_rows
+from etlutils_spark.sources.sidecar import sidecar_kind
 
 
 def incremental_span_dedup(
@@ -83,10 +83,16 @@ def incremental_span_dedup(
                 F.struct(F.col(id_col).alias("i"), F.col("__idx").alias("x"))
             ).alias("__bf")
         )
-        try:
-            index = spark.read.parquet(index_dir).withColumnRenamed(
-                "__first", "__if"
-            )
+        # an FS-API existence check, not a read that fails: reading a
+        # missing path logs a FileStreamSink stack on every cold start,
+        # and an error in the probe must fail the batch rather than
+        # read as "no index" (which would re-seed the index from this
+        # batch alone). The index holds this stream's (key, first)
+        # rows, so it is read with their schema (no inference job)
+        if sidecar_kind(spark, index_dir) == "dir":
+            index = spark.read.schema(
+                local.select("__key", F.col("__bf").alias("__first")).schema
+            ).parquet(index_dir).withColumnRenamed("__first", "__if")
             # probe shape matters (review catch): a direct left-outer
             # with the tiny batch as the PRESERVED side cannot
             # broadcast-hash-join (BHJ LeftOuter requires build-right,
@@ -112,7 +118,7 @@ def incremental_span_dedup(
                 ).otherwise(F.col("__bf")).alias("__first"),
                 F.col("__if").isNull().alias("__is_new"),
             )
-        except AnalysisException:
+        else:
             firsts = local.select(
                 "__key", F.col("__bf").alias("__first"),
                 F.lit(True).alias("__is_new"),

@@ -902,13 +902,19 @@ def test_extend_dedup_index_job_budget(spark, tmp_path):
 
 
 def test_extend_dedup_index_without_recorded_schemas(spark, tmp_path):
-    """An artifact whose params sidecar predates the recorded table
-    schemas still extends: the stored tables are read with schema
-    inference, the labels match a rebuild on the union, and the
-    sidecar is left as it was (extend does not add the keys)."""
+    """A params sidecar missing a key the build records (here the
+    table schemas, written by every current build) is not a committed
+    artifact: extend raises, naming the missing keys, before it
+    touches the artifact. The ANN artifact's reader is the same one:
+    its extend and its serving call raise the same way."""
     from etlutils_spark.operators.dedup import (
         build_dedup_index,
         extend_dedup_index,
+    )
+    from etlutils_spark.operators.similarity import (
+        ann_index_topk,
+        build_ann_index,
+        extend_ann_index,
     )
     from etlutils_spark.sources.sidecar import (
         read_sidecar_json,
@@ -916,24 +922,33 @@ def test_extend_dedup_index_without_recorded_schemas(spark, tmp_path):
     )
 
     a = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda"
-    b = "one two three four five six seven eight nine ten eleven twelve"
     docs = spark.createDataFrame(
-        [(1, a + " x"), (2, b + " x"), (3, "hi"),
-         (4, a + " y"), (5, b + " y"), (6, "ok")],
+        [(1, a + " x"), (2, "hi"), (3, a + " y")],
         "doc_id int, text string",
     )
     path = str(tmp_path / "old")
-    build_dedup_index(docs.filter("doc_id <= 3"), path)
+    build_dedup_index(docs.filter("doc_id <= 2"), path)
     params = read_sidecar_json(spark, f"{path}/params")
     assert {"profiles_schema", "labels_schema"} <= set(params)
-    legacy = {k: v for k, v in params.items() if not k.endswith("_schema")}
-    write_sidecar_json(spark, f"{path}/params", legacy)
-    got = extend_dedup_index(path, docs.filter("doc_id > 3"))
-    want = build_dedup_index(docs, str(tmp_path / "rebuild"))
-    assert dict(got.collect()) == dict(want.collect()) == {
-        1: 1, 2: 2, 3: 3, 4: 1, 5: 2, 6: 6
-    }
-    assert read_sidecar_json(spark, f"{path}/params") == legacy
+    partial = {k: v for k, v in params.items() if not k.endswith("_schema")}
+    write_sidecar_json(spark, f"{path}/params", partial)
+    with pytest.raises(
+        ValueError, match="missing profiles_schema, labels_schema"
+    ):
+        extend_dedup_index(path, docs.filter("doc_id = 3"))
+    assert read_sidecar_json(spark, f"{path}/params") == partial
+    assert spark.read.parquet(f"{path}/profiles").count() == 1
+
+    vecs = _clustered_vectors(spark, dim=16)
+    apath = str(tmp_path / "oldann")
+    build_ann_index(vecs, apath, num_clusters=4, m=4, ksub=8)
+    aparams = read_sidecar_json(spark, f"{apath}/params")
+    del aparams["qerr_mean"]
+    write_sidecar_json(spark, f"{apath}/params", aparams)
+    with pytest.raises(ValueError, match="missing qerr_mean"):
+        extend_ann_index(apath, vecs.limit(2))
+    with pytest.raises(ValueError, match="missing qerr_mean"):
+        ann_index_topk(vecs, apath, vecs.limit(2), k=3)
 
 
 def test_extend_dedup_index_batch_id_type_differs_from_build(
@@ -1162,56 +1177,15 @@ def test_extend_dedup_index_params_sidecar(spark, tmp_path):
             extend_dedup_index(path, docs.filter("doc_id = 2"), **bad)
 
 
-def test_params_sidecar_legacy_parquet_fallback(spark, tmp_path):
-    """Artifacts written before the FS-API sidecar carry ``params`` as
-    a one-row parquet DIRECTORY. Readers must keep honoring that form:
-    extend still inherits + validates against it, and the next build
-    write retires it in place (sources.sidecar self-upgrade)."""
-    from etlutils_spark.operators.dedup import (
-        _read_index_params,
-        build_dedup_index,
-        extend_dedup_index,
-    )
-
-    a = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda"
-    docs = spark.createDataFrame(
-        [(1, a + " x"), (2, a + " y"), (3, "unrelated words entirely here")],
-        "doc_id bigint, text string",
-    )
-    path = str(tmp_path / "legacy")
-    build_dedup_index(docs.filter("doc_id != 2"), path,
-                      bands=8, threshold=0.3)
-    # rewrite the params sidecar in the legacy parquet-directory form
-    os.remove(f"{path}/params")
-    spark.createDataFrame(
-        [(3, 8, 8, 0.3)],
-        "n int, num_hashes int, bands int, threshold double",
-    ).write.mode("overwrite").parquet(f"{path}/params")
-    assert os.path.isdir(f"{path}/params")
-    assert _read_index_params(spark, path, None, None, None, None) == (
-        3, 8, 8, 0.3, 0,
-    )
-    # ... and the successful legacy read upgraded the sidecar in place
-    # to the JSON file form, so later extends skip the Spark read
-    assert os.path.isfile(f"{path}/params")
-    out = extend_dedup_index(path, docs.filter("doc_id = 2"))
-    labels = {r.doc_id: r.cluster_id for r in out.collect()}
-    assert labels == {1: 1, 2: 1, 3: 3}
-    with pytest.raises(ValueError, match="does not match"):
-        extend_dedup_index(path, docs.filter("doc_id = 2"), bands=4)
-
-
 def test_unreadable_params_sidecar_is_loud(spark, tmp_path):
-    """'Present but unreadable' params must RAISE, not silently fall
-    back to build defaults: probing a bands=8 index with default
+    """Params that are torn, a directory, or absent must RAISE, not
+    fall back to build defaults: probing a bands=8 index with default
     bands=4 signatures drops every cross-batch duplicate without any
-    error — exactly the quiet corruption the sidecar exists to prevent
-    (review catch: the None-returning reader conflated torn-file with
-    pre-sidecar-absent). A crashed pre-JSON build's parquet debris
-    must likewise read as NOT committed, so the streaming bootstrap
-    rebuilds instead of extending."""
+    error — exactly the quiet corruption the sidecar exists to
+    prevent."""
+    import shutil
+
     from etlutils_spark.operators.dedup import (
-        _index_committed,
         build_dedup_index,
         extend_dedup_index,
     )
@@ -1223,27 +1197,61 @@ def test_unreadable_params_sidecar_is_loud(spark, tmp_path):
     path = str(tmp_path / "torn")
     build_dedup_index(docs.filter("doc_id = 1"), path,
                       bands=8, threshold=0.3)
-    assert _index_committed(spark, path)
     # torn JSON file
     with open(f"{path}/params", "w") as fh:
         fh.write("{not json")
-    assert not _index_committed(spark, path)
-    with pytest.raises(ValueError, match="not a readable params"):
+    with pytest.raises(ValueError, match="not a readable params.*torn"):
         extend_dedup_index(path, docs.filter("doc_id = 2"))
-    # parquet-directory debris from a crashed pre-JSON build
+    # a directory at the params path
     os.remove(f"{path}/params")
     os.makedirs(f"{path}/params/_temporary")
-    assert not _index_committed(spark, path)
-    with pytest.raises(ValueError, match="not a readable params"):
+    with pytest.raises(ValueError, match="not a readable params.*directory"):
         extend_dedup_index(path, docs.filter("doc_id = 2"))
-    # absent entirely == pre-sidecar artifact: the documented defaults
-    # fallback still applies (build used non-defaults, so the probe
-    # misses — but it must not raise)
-    import shutil
-
+    # absent entirely: no committed build to extend
     shutil.rmtree(f"{path}/params")
-    assert not _index_committed(spark, path)
-    extend_dedup_index(path, docs.filter("doc_id = 2")).count()
+    with pytest.raises(ValueError, match="not a readable params.*absent"):
+        extend_dedup_index(path, docs.filter("doc_id = 2"))
+
+
+def test_absent_params_extends_raise_while_bootstrap_builds(spark, tmp_path):
+    """With ``path/params`` deleted from a built artifact, both
+    artifacts' extends and ``ann_index_topk`` raise instead of
+    extending or serving with guessed parameters, while the streaming
+    cold start reads the same state as "no committed artifact" and
+    builds."""
+    from etlutils_spark.operators.dedup import (
+        build_dedup_index,
+        extend_dedup_index,
+    )
+    from etlutils_spark.operators.similarity import (
+        ann_index_topk,
+        build_ann_index,
+        extend_ann_index,
+    )
+    from etlutils_spark.sources.sidecar import bootstrap_action
+
+    a = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda"
+    docs = spark.createDataFrame(
+        [(1, a + " x"), (2, a + " y"), (3, "unrelated words entirely here")],
+        "doc_id bigint, text string",
+    )
+    path = str(tmp_path / "dedup")
+    build_dedup_index(docs.filter("doc_id != 2"), path,
+                      bands=8, threshold=0.3)
+    os.remove(f"{path}/params")
+    assert bootstrap_action(spark, path, "build_dedup_index") == "build"
+    with pytest.raises(ValueError, match="absent"):
+        extend_dedup_index(path, docs.filter("doc_id = 2"))
+
+    vecs = _clustered_vectors(spark, dim=16)
+    apath = str(tmp_path / "ann")
+    build_ann_index(vecs, apath, num_clusters=4, m=4, ksub=8)
+    os.remove(f"{apath}/params")
+    assert bootstrap_action(spark, apath, "build_ann_index") == "build"
+    with pytest.raises(ValueError, match="absent"):
+        extend_ann_index(apath, vecs.limit(2))
+    with pytest.raises(ValueError, match="absent"):
+        ann_index_topk(vecs, apath, vecs.limit(2), k=3)
 
 
 def test_bucketed_layout_without_modulus_is_loud(spark, tmp_path):
@@ -2041,34 +2049,6 @@ def test_ann_index_dim_mismatch_raises(spark, tmp_path):
         ann_index_topk(vecs, path, bad, k=3)
 
 
-def test_ann_index_legacy_parquet_params_fallback(spark, tmp_path):
-    """An ANN artifact whose ``params`` sidecar is still the legacy
-    one-row parquet DIRECTORY must keep serving queries and validating
-    dims (same contract as the dedup index's legacy fallback)."""
-    from etlutils_spark.operators.similarity import (
-        ann_index_topk,
-        build_ann_index,
-    )
-
-    vecs = _clustered_vectors(spark, dim=16)
-    path = str(tmp_path / "legacyann")
-    build_ann_index(vecs, path, num_clusters=4, m=4, ksub=8)
-    os.remove(f"{path}/params")
-    spark.createDataFrame(
-        [(4, 4, 8, 16, 0)],
-        "num_clusters int, m int, ksub int, dim int, seed int",
-    ).write.mode("overwrite").parquet(f"{path}/params")
-    assert os.path.isdir(f"{path}/params")
-    queries = vecs.limit(2)
-    got = ann_index_topk(vecs, path, queries, k=3)
-    assert got.count() == 6
-    bad = spark.createDataFrame(
-        [(999, [1.0] * 8)], "vec_id bigint, embedding array<float>"
-    )
-    with pytest.raises(ValueError, match="dim"):
-        ann_index_topk(vecs, path, bad, k=3)
-
-
 def test_affected_extend_rewrites_only_touched_buckets(spark, tmp_path):
     """The labels table is partitioned by pmod(xxhash64(doc_id), B);
     an affected-scope extend must rewrite ONLY the partitions holding
@@ -2319,40 +2299,51 @@ def test_bucketed_index_returns_contract_schema(spark, tmp_path):
     assert "label_bucket" in spark.read.parquet(f"{path}/labels").columns
 
 
-def test_bootstrap_action_legacy_dir_with_siblings_is_loud(spark, tmp_path):
-    """An unreadable legacy parquet-DIRECTORY params sidecar maps to
-    'build' ONLY on an otherwise-empty artifact path (crashed pre-JSON
-    build debris). With committed sibling tables (labels/edges/...)
-    beside it, the same state means a DAMAGED committed artifact, and
-    rebuilding from one micro-batch would destroy the stored corpus —
-    the exact hazard the torn-FILE case already refuses (review
-    catch: batch extend raises on this state; the streaming bootstrap
-    must not silently diverge)."""
+def test_bootstrap_action_params_directory_is_loud(spark, tmp_path):
+    """The streaming cold start extends committed params, builds on
+    absent ones, and raises on a directory at the params path — with
+    or without artifact tables beside it, since no writer produces one
+    — as it does on a torn or key-incomplete file: rebuilding from one
+    micro-batch over a damaged artifact would destroy the stored
+    corpus."""
     import shutil
 
     from etlutils_spark.operators.dedup import build_dedup_index
-    from etlutils_spark.sources.sidecar import bootstrap_action
+    from etlutils_spark.sources.sidecar import (
+        bootstrap_action,
+        read_sidecar_json,
+        write_sidecar_json,
+    )
 
     a = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda"
     docs = spark.createDataFrame(
         [(1, a + " x")], "doc_id bigint, text string"
     )
-    path = str(tmp_path / "legacy")
+    path = str(tmp_path / "idx")
     build_dedup_index(docs, path, bands=8, threshold=0.3)
-    assert bootstrap_action(spark, f"{path}/params") == "extend"
-    # committed artifact whose legacy params DIRECTORY lost its data
-    # file post-commit: siblings exist -> loud
+    assert bootstrap_action(spark, path, "build_dedup_index") == "extend"
+    params = read_sidecar_json(spark, f"{path}/params")
+    del params["bands"]
+    write_sidecar_json(spark, f"{path}/params", params)
+    with pytest.raises(ValueError, match="missing bands"):
+        bootstrap_action(spark, path, "build_dedup_index")
+    with open(f"{path}/params", "w") as fh:
+        fh.write("{not json")
+    with pytest.raises(ValueError, match="torn"):
+        bootstrap_action(spark, path, "build_dedup_index")
+    # a directory beside the committed tables
     os.remove(f"{path}/params")
     os.makedirs(f"{path}/params/_temporary")
-    with pytest.raises(ValueError, match="sibling artifact tables"):
-        bootstrap_action(spark, f"{path}/params")
-    # same debris on an otherwise-empty path == crashed build -> build
+    with pytest.raises(ValueError, match="a directory"):
+        bootstrap_action(spark, path, "build_dedup_index")
+    # ... and on an otherwise-empty path
     fresh = str(tmp_path / "fresh")
     os.makedirs(f"{fresh}/params/_temporary")
-    assert bootstrap_action(spark, f"{fresh}/params") == "build"
+    with pytest.raises(ValueError, match="a directory"):
+        bootstrap_action(spark, fresh, "build_dedup_index")
     # absent entirely -> build
     shutil.rmtree(f"{fresh}/params")
-    assert bootstrap_action(spark, f"{fresh}/params") == "build"
+    assert bootstrap_action(spark, fresh, "build_dedup_index") == "build"
 
 
 def test_ann_index_drift_metric(spark, tmp_path):

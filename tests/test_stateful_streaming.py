@@ -381,6 +381,40 @@ def test_incremental_span_dedup_replay_is_idempotent(spark, tmp_path):
     assert spark.read.parquet(str(tmp_path / "index")).count() == n_index
 
 
+def test_incremental_span_dedup_unusable_index_raises(spark, tmp_path):
+    """An index directory the probe cannot use (here its ``__first``
+    column is a string, not the ``(id, idx)`` struct) fails the batch
+    loudly; it is not taken for a cold start, which would re-seed the
+    index from the batch alone and emit stats as if no span had been
+    seen before."""
+    import pytest
+
+    from etlutils_spark.streaming.incremental_spans import incremental_span_dedup
+
+    index_dir = str(tmp_path / "index")
+    spark.createDataFrame([(1, "x")], "__key long, __first string").write.parquet(
+        index_dir
+    )
+    src = tmp_path / "docs"
+    spark.createDataFrame(
+        [(0, "a b c d e f g h")], "doc_id bigint, text string"
+    ).coalesce(1).write.parquet(str(src / "b0"))
+    stream = spark.readStream.schema("doc_id bigint, text string").parquet(
+        str(src) + "/*"
+    )
+    q = incremental_span_dedup(
+        stream,
+        index_dir=index_dir,
+        stats_dir=str(tmp_path / "stats"),
+        checkpoint=str(tmp_path / "ckpt"),
+        window=4,
+    )
+    with pytest.raises(Exception):
+        q.awaitTermination()
+    assert not (tmp_path / "stats").exists()
+    assert spark.read.parquet(index_dir).count() == 1
+
+
 def test_incremental_funnel_state_folding_idempotent(spark):
     """The funnel state is a min-aggregation sufficient statistic:
     folding a batch twice (at-least-once replay) must reproduce the
