@@ -180,6 +180,16 @@ _CHANGED_THIS_ROUND: frozenset[str] = frozenset({
     # (operators/dedup.py).
     "dedup_minhash_clusters",
     "dedup_cluster_survivors",
+    # one MinHash engine (operators/dedup.py): the pair pipeline runs on
+    # batch_profiles + the shared banded self-join + the profile verify
+    # (same rows, new plan), and the materialized cluster artifact the
+    # last five read is built through it.
+    "dedup_minhash_lsh",
+    "dedup_clusters_star",
+    "triplet_mining_pairs",
+    "dedup_rate_report_by_source",
+    "leakage_safe_split",
+    "dedup_cluster_size_histogram",
     # IVF/PQ moved onto the artifact's quantizer primitives
     # (operators/similarity.py): ivf_topk trains the seeded numpy
     # k-means on the orderBy(id) sample instead of Spark ML KMeans (plan

@@ -3,8 +3,10 @@
 embeddings tables.
 
 The md5-hex portable-hash convention makes even the MinHash+LSH pipeline
-oracle-checkable end to end: both engines compute identical signatures,
-identical bands, identical candidate pairs, identical verified output.
+oracle-checkable end to end: both engines compute identical minhash
+signatures, and so identical candidate pairs and identical verified
+output (Spark's band keys and shingle sets are 64-bit hashes of the same
+values, equal up to ~2^-64 collisions).
 Queries that depend on engine-specific hashing (xxhash64 simhash) or
 literal-heavy constructions (hyperplane LSH) are declared rows-only, with
 unit tests covering their semantics instead.
@@ -226,11 +228,10 @@ def _duck_minhash_clusters_sql(
 @register("dedup_minhash_lsh", _duck_minhash_sql())
 def q_dedup_minhash_lsh(spark, sf_dir):
     """MinHash(8) + LSH(4 bands x 2 rows) candidates, exact-Jaccard
-    verified >= 0.5. Portable md5 hashing -> the full pipeline
+    verified >= 0.5. The minhash mins are md5 -> the full pipeline
     (signature, banding, candidates, verify) matches the oracle."""
     return minhash_dedup_pairs(
-        _t(spark, sf_dir, "documents"),
-        num_hashes=8, bands=4, threshold=0.5, portable=True,
+        _t(spark, sf_dir, "documents"), num_hashes=8, bands=4, threshold=0.5,
     )
 
 
@@ -247,8 +248,7 @@ def q_dedup_minhash_clusters(spark, sf_dir):
     from etlutils_spark.operators.dedup import build_dedup_clusters
 
     return build_dedup_clusters(
-        _t(spark, sf_dir, "documents"), num_hashes=8, bands=4,
-        threshold=0.5, portable=True,
+        _t(spark, sf_dir, "documents"), num_hashes=8, bands=4, threshold=0.5,
     )
 
 
@@ -1663,9 +1663,7 @@ def q_cluster_survivors(spark, sf_dir):
     from etlutils_spark.operators.dedup import connected_components
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_dedup_pairs(
-        docs, num_hashes=8, bands=4, threshold=0.5, portable=True
-    )
+    pairs = minhash_dedup_pairs(docs, num_hashes=8, bands=4, threshold=0.5)
     comp = connected_components(pairs, "doc_id_1", "doc_id_2")
     out = cluster_survivors(
         docs.select("doc_id", "n_chars"), comp, quality_col="n_chars"
@@ -3145,7 +3143,7 @@ def _materialized_clusters(spark, sf_dir):
         staging = f"{scratch}.tmp{os.getpid()}"
         build_dedup_clusters(
             _t(spark, sf_dir, "documents"), path=staging,
-            num_hashes=8, bands=4, threshold=0.5, portable=True,
+            num_hashes=8, bands=4, threshold=0.5,
         )
         import shutil
 

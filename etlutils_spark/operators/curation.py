@@ -189,7 +189,7 @@ def curate_to_sequences(
     # rewritten corpus; without materialization the whole quality->
     # exact-dedup->span-rewrite chain executes twice (measured ~2x
     # wall at sf0.1) — same materialize-before-fan-out rule as the
-    # shingle table in minhash_dedup_pairs
+    # checkpointed MinHash profiles of dedup.batch_profiles
     from etlutils_spark.caching import persist_tracked
 
     rewritten = persist_tracked(rewritten)

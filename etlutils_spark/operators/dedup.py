@@ -14,9 +14,14 @@ Scale architecture (the 100 TB story):
 - *Embedding near-dup*: blocked by LSH (see similarity.py) at scale;
   the exact pairwise form here is the verify stage / small-N baseline.
 
-Portable-hash convention: with ``portable=True`` signatures use md5 hex
-strings (bit-identical in DuckDB -> oracle-checkable end to end);
-default fast path uses xxhash64 (JVM, no md5 string materialization).
+Portable-hash convention: a hash that decides an output value is md5
+hex, which DuckDB recomputes bit for bit. MinHash has one engine, the
+per-document profile of :func:`batch_profiles`, whose minhash mins are
+md5, so every MinHash pipeline is oracle-checkable end to end; values
+that are only ever equality keys inside an operator (band signatures,
+shingle hashes) are narrowed to 64-bit xxhash64, with equality classes
+identical up to ~2^-64 collisions. SimHash and span keys keep a
+``portable`` switch between md5 and an xxhash64 fast mode.
 
 Algorithms (public literature): MinHash resemblance sketching — Broder,
 "On the resemblance and containment of documents" (SEQUENCES 1997);
@@ -268,28 +273,6 @@ def jaccard_pairs(
     )
 
 
-def minhash_signatures(
-    shingles: DataFrame,
-    id_col: str = "doc_id",
-    num_hashes: int = 8,
-    portable: bool = True,
-) -> DataFrame:
-    """Per-doc MinHash signature as ``num_hashes`` columns mh0..mhK.
-
-    One groupBy over the shingle rows computes every hash's min in a
-    single shuffle (map-side partial min -> tiny exchange). Portable
-    mode: mh_i = MIN(md5('i|' || shingle)) over hex strings; fast mode:
-    MIN(xxhash64(i || shingle)) as bigint."""
-    aggs = []
-    for i in range(num_hashes):
-        if portable:
-            h = F.md5(F.concat(F.lit(f"{i}|"), F.col("shingle")))
-        else:
-            h = F.xxhash64(F.concat(F.lit(f"{i}|"), F.col("shingle")))
-        aggs.append(F.min(h).alias(f"mh{i}"))
-    return shingles.groupBy(id_col).agg(*aggs)
-
-
 def lsh_candidate_probability(
     jaccard: float, bands: int, rows_per_band: int
 ) -> float:
@@ -325,67 +308,75 @@ def pick_lsh_bands(num_hashes: int, threshold: float) -> int:
     return best
 
 
-def band_sig_array(
-    num_hashes: int = 8,
-    bands: int = 4,
-    portable: bool = True,
-    as_long: bool = False,
-) -> Column:
+def band_sig_array(num_hashes: int = 8, bands: int = 4) -> Column:
     """Array of LSH band signatures (index = band number) computed from
-    mh0..mhK signature columns; band signature = digest of the band's
-    concatenated row hashes.
-
-    ``as_long=True`` emits the band digest as a raw xxhash64 int64
-    instead of a digest string (``portable`` is then ignored) — the
-    §2.3 narrow-key form for paths where the signature is ONLY ever an
-    equality join key and never leaves the operator: 8-byte keys in
-    the stored index and the probe joins, with identical equality
-    classes up to ~2^-64 digest collisions (the minhash mins the
-    digest is computed OVER stay portable md5 — they decide which
-    shingle represents each row, so changing them would change the
-    candidate set materially, not at collision level)."""
+    the mh0..mhK signature columns: a band's signature is the xxhash64
+    int64 of its concatenated md5 row mins. The band signature is only
+    ever an equality join key and never leaves the operator, so the
+    8-byte form keeps the stored index and every band join on 8-byte
+    keys, with equality classes identical to a string digest of the
+    same rows up to ~2^-64 collisions. The md5 mins stay as they are:
+    they decide which shingle represents each row, and the DuckDB
+    oracle recomputes them."""
     rpb = num_hashes // bands
-    bodies = [
-        F.concat_ws(
+    return F.array(*[
+        F.xxhash64(F.concat_ws(
             "|", *[F.col(f"mh{b * rpb + r}").cast("string") for r in range(rpb)]
-        )
+        ))
         for b in range(bands)
-    ]
-    if as_long:
-        return F.array(*[F.xxhash64(body) for body in bodies])
-    digest = F.md5 if portable else F.xxhash64
-    return F.array(*[digest(body).cast("string") for body in bodies])
+    ])
 
 
-def band_rows(
-    signatures: DataFrame,
+def batch_profiles(
+    docs: DataFrame,
+    text_col: str = "text",
     id_col: str = "doc_id",
+    n: int = 3,
     num_hashes: int = 8,
     bands: int = 4,
-    portable: bool = True,
+    max_doc_freq: int | None = None,
 ) -> DataFrame:
-    """Explode a signature frame to LSH band rows (id, band_idx,
-    band_sig). The shared banding step of batch LSH
-    (:func:`lsh_candidate_pairs`) and the streaming incremental index
-    (streaming/incremental_lsh.py)."""
-    return signatures.select(
-        id_col,
-        F.posexplode(band_sig_array(num_hashes, bands, portable)).alias("band_idx", "band_sig"),
+    """One MinHash profile row per document, ``(doc_id, band_sigs
+    array<bigint>, shingle_hashes array<bigint>, n_sh)``: the band
+    signatures (:func:`band_sig_array`) and the 64-bit shingle-hash set
+    the verify reads. ``doc_id`` carries ``id_col``'s values and type.
+    ``max_doc_freq`` passes through to :func:`shingle_rows`.
+
+    The one per-document sketch of the package: the pair pipeline
+    (:func:`minhash_dedup_pairs`), the index build and extend, and the
+    streaming pair index all read it. Returned eagerly
+    localCheckpointed: every consumer reads it several times (both band
+    sides, both verify sides, an index append), so the shingling and
+    minhash run once."""
+    # sh feeds exactly one aggregation and the localCheckpoint below
+    # materializes the result, so the shingle table is computed once
+    # without its own persist
+    sh = shingle_rows(docs, text_col, id_col, n, max_doc_freq=max_doc_freq)
+    # one groupBy computes the signature mins AND the shingle-hash set;
+    # the band array is then a per-row expression (index = band number
+    # by construction — no order-sensitive collect_list)
+    sigs = sh.groupBy(id_col).agg(
+        *[
+            F.min(F.md5(F.concat(F.lit(f"{i}|"), F.col("shingle")))).alias(f"mh{i}")
+            for i in range(num_hashes)
+        ],
+        F.collect_set(F.xxhash64("shingle")).alias("shingle_hashes"),
     )
+    out = sigs.select(
+        F.col(id_col).alias("doc_id"),
+        band_sig_array(num_hashes, bands).alias("band_sigs"),
+        "shingle_hashes",
+        F.size("shingle_hashes").alias("n_sh"),
+    )
+    return out.localCheckpoint(eager=True)
 
 
 def lsh_candidate_pairs(
-    signatures: DataFrame,
-    id_col: str = "doc_id",
-    num_hashes: int = 8,
-    bands: int = 4,
-    portable: bool = True,
-    max_bucket_size: int | None = None,
+    profiles: DataFrame, max_bucket_size: int | None = None
 ) -> DataFrame:
-    """Band the signature and bucket-join: pairs agreeing on >=1 band.
-
-    rows_per_band = num_hashes // bands; band signature = digest of the
-    concatenated row hashes. Output distinct (id_1, id_2).
+    """The banded self-join over :func:`batch_profiles` rows: distinct
+    ``(id_1 < id_2)`` pairs that agree on at least one
+    ``(band_idx, band_sig)`` bucket, joined on those 8-byte keys.
 
     ``max_bucket_size`` drops band buckets holding more than that many
     docs before the self-join. A bucket of B docs yields B(B-1)/2
@@ -395,33 +386,55 @@ def lsh_candidate_pairs(
     (those should be collapsed by exact dedup first); dropping them
     bounds the join output at corpus scale. Recall loss is explicit and
     documented: pairs only co-blocked in a dropped bucket are missed."""
-    # the bucket key is pure equality plumbing (never output), so it
-    # narrows to one xxhash64 of (band_idx, band_sig): 8-byte exchange
-    # keys instead of a 32-char md5 hex + int pair in portable mode —
-    # bucket classes identical up to ~2^-64 collisions, the same
-    # documented trade as the incremental index's int64 band digests
-    # (guide §2.3)
-    banded = band_rows(signatures, id_col, num_hashes, bands, portable).select(
-        id_col, F.xxhash64("band_idx", "band_sig").alias("__bk")
+    key = ["band_idx", "band_sig"]
+    banded = profiles.select(
+        "doc_id", F.posexplode("band_sigs").alias(*key)
     )
     if max_bucket_size is not None:
         # one extra partial-agg pass over the banded rows; the semi-join
         # key is the same shuffle key the pair join uses, so AQE
         # coalesces these exchanges at scale
         ok = (
-            banded.groupBy("__bk")
+            banded.groupBy(*key)
             .agg(F.count(F.lit(1)).alias("__bucket_n"))
             .filter(F.col("__bucket_n") <= max_bucket_size)
-            .select("__bk")
+            .select(*key)
         )
-        banded = banded.join(ok, on=["__bk"], how="left_semi")
-    a = banded.select(F.col(id_col).alias(f"{id_col}_1"), "__bk")
-    b = banded.select(F.col(id_col).alias(f"{id_col}_2"), "__bk")
+        banded = banded.join(ok, on=key, how="left_semi")
+    a = banded.select(F.col("doc_id").alias("id_1"), *key)
+    b = banded.select(F.col("doc_id").alias("id_2"), *key)
     return (
-        a.join(b, on=["__bk"])
-        .filter(F.col(f"{id_col}_1") < F.col(f"{id_col}_2"))
-        .select(f"{id_col}_1", f"{id_col}_2")
+        a.join(b, key)
+        .filter(F.col("id_1") < F.col("id_2"))
+        .select("id_1", "id_2")
         .distinct()
+    )
+
+
+def _jaccard(sh_1: str, sh_2: str) -> Column:
+    """Exact Jaccard of two stored shingle-hash sets."""
+    inter = F.size(F.array_intersect(sh_1, sh_2))
+    return inter.cast("double") / (
+        F.size(sh_1) + F.size(sh_2) - inter
+    ).cast("double")
+
+
+def _verified_pairs(
+    cand: DataFrame, left: DataFrame, right: DataFrame, threshold: float
+) -> DataFrame:
+    """``(id_1, id_2, jaccard)`` for the candidate pairs whose exact
+    Jaccard over the profiles' shingle-hash sets is ``>= threshold``."""
+    l_prof = left.select(
+        F.col("doc_id").alias("id_1"), F.col("shingle_hashes").alias("sh_1")
+    )
+    r_prof = right.select(
+        F.col("doc_id").alias("id_2"), F.col("shingle_hashes").alias("sh_2")
+    )
+    return (
+        cand.join(l_prof, "id_1")
+        .join(r_prof, "id_2")
+        .select("id_1", "id_2", _jaccard("sh_1", "sh_2").alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
     )
 
 
@@ -433,14 +446,20 @@ def minhash_dedup_pairs(
     num_hashes: int = 8,
     bands: int = 4,
     threshold: float = 0.5,
-    portable: bool = True,
     collapse_exact: bool = False,
     max_doc_freq: int | None = None,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
-    """Full MinHash+LSH pipeline: signatures -> banded candidates ->
-    exact-Jaccard verify on candidates only. Output verified pairs
-    (id_1, id_2, jaccard).
+    """Full MinHash+LSH pipeline: profiles (:func:`batch_profiles`) ->
+    banded candidates (:func:`lsh_candidate_pairs`) -> exact-Jaccard
+    verify on candidates only. Output verified pairs
+    ``({id_col}_1, {id_col}_2, jaccard)``.
+
+    The verify is exact Jaccard over each pair's stored 64-bit
+    shingle-hash sets: identical to exact shingle Jaccard unless
+    xxhash64 collides within a pair (~2^-64), with no shingle rows
+    joined back per candidate. The minhash mins are md5, so the whole
+    pipeline is recomputed bit-for-bit by the DuckDB oracle.
 
     ``collapse_exact`` runs exact dedup as stage 0 so identical texts
     (jaccard 1.0 by definition) never enter the pairwise stages — the
@@ -457,48 +476,14 @@ def minhash_dedup_pairs(
     bucket blow-up (see :func:`lsh_candidate_pairs`)."""
     if collapse_exact:
         df = drop_exact_duplicates(df, text_col, id_col)
-    sh = _persist_tracked(shingle_rows(df, text_col, id_col, n, max_doc_freq=max_doc_freq))
-    sigs = minhash_signatures(sh, id_col, num_hashes, portable)
-    cand = lsh_candidate_pairs(sigs, id_col, num_hashes, bands, portable, max_bucket_size)
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    # verify join: attach id_1's shingles to each candidate pair, then
-    # count how many also belong to id_2 — work is O(candidates x
-    # shingles-per-doc), never all-pairs. Shingles are narrowed to
-    # 64-bit hashes for the join key: intersection counts are identical
-    # unless xxhash64 collides within a doc pair (~2^-64), and the
-    # shuffle carries 8-byte keys instead of full shingle strings.
-    sh_h = F.xxhash64("shingle").alias("sh_h")
-    # prune the shingle table to docs that actually appear in a
-    # candidate pair BEFORE the intersection joins: candidates are the
-    # near-dup population (bounded further by bucket caps), typically
-    # orders of magnitude smaller than the corpus, so the big shingle
-    # table never shuffles for the verify — only candidate docs' rows
-    # do. cand is persisted (tiny) because three consumers read it.
-    cand = _persist_tracked(cand)
-    ids_1 = cand.select(f"{id_col}_1").distinct()
-    ids_2 = cand.select(f"{id_col}_2").distinct()
-    a = sh.select(F.col(id_col).alias(f"{id_col}_1"), sh_h).join(
-        F.broadcast(ids_1), f"{id_col}_1", "left_semi"
+    prof = batch_profiles(
+        df, text_col, id_col, n, num_hashes, bands, max_doc_freq=max_doc_freq
     )
-    b = sh.select(F.col(id_col).alias(f"{id_col}_2"), sh_h).join(
-        F.broadcast(ids_2), f"{id_col}_2", "left_semi"
-    )
-    inter = (
-        cand.join(a, f"{id_col}_1")
-        .join(b, on=[f"{id_col}_2", "sh_h"])
-        .groupBy(f"{id_col}_1", f"{id_col}_2")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    s1 = sizes.select(F.col(id_col).alias(f"{id_col}_1"), F.col("n_sh").alias("n_1"))
-    s2 = sizes.select(F.col(id_col).alias(f"{id_col}_2"), F.col("n_sh").alias("n_2"))
-    jac = F.col("n_common").cast("double") / (
-        F.col("n_1") + F.col("n_2") - F.col("n_common")
-    ).cast("double")
-    return (
-        inter.join(s1, f"{id_col}_1").join(s2, f"{id_col}_2")
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select(f"{id_col}_1", f"{id_col}_2", "jaccard")
+    cand = lsh_candidate_pairs(prof, max_bucket_size)
+    return _verified_pairs(cand, prof, prof, threshold).select(
+        F.col("id_1").alias(f"{id_col}_1"),
+        F.col("id_2").alias(f"{id_col}_2"),
+        "jaccard",
     )
 
 
@@ -519,8 +504,8 @@ def simhash_signatures(
     ``portable=False`` (default): 64-bit xxhash64 token hashes — the
     fast engine-native mode. ``portable=True``: token hash = the first
     8 hex chars of md5 as a 32-bit integer, so any SQL engine computes
-    bit-identical signatures (the same portable-digest convention
-    ``minhash_signatures`` uses for its oracle mode); requires
+    bit-identical signatures (the same md5 convention as the minhash
+    mins of :func:`batch_profiles`); requires
     ``bits <= 32``.
     """
     if portable and bits > 32:
@@ -898,7 +883,6 @@ def build_dedup_clusters(
     num_hashes: int = 8,
     bands: int = 4,
     threshold: float = 0.5,
-    portable: bool = False,
     max_doc_freq: int | None = None,
     max_bucket_size: int | None = None,
     mode: str = "overwrite",
@@ -920,11 +904,11 @@ def build_dedup_clusters(
     reads the materialized table instead of re-running the pipeline);
     diagnose many. At 100 TB this is a warehouse table keyed by corpus
     snapshot, refreshed per ingest batch — never recomputed per query.
-    Sibling: :func:`build_dedup_index` trades this function's
-    exact-shingle verify (the DuckDB-oracle-exact domain) for a stored
-    band/shingle-hash profile index that makes the artifact
-    batch-extendable (:func:`extend_dedup_index`) without re-shingling
-    the corpus — choose it when the corpus grows in place.
+    Sibling: :func:`build_dedup_index` runs the same profiles,
+    candidates and verify, and also stores the profiles (and a
+    compacted edge table) so the artifact is batch-extendable
+    (:func:`extend_dedup_index`) without re-shingling the corpus —
+    choose it when the corpus grows in place.
 
     Components come from :func:`connected_components`, which reads the
     live pair chain once whichever labeling path the edge count picks.
@@ -932,7 +916,7 @@ def build_dedup_clusters(
     straight through to :func:`minhash_dedup_pairs`."""
     pairs = minhash_dedup_pairs(
         docs, text_col=text_col, id_col=id_col, n=n, num_hashes=num_hashes,
-        bands=bands, threshold=threshold, portable=portable,
+        bands=bands, threshold=threshold,
         max_doc_freq=max_doc_freq, max_bucket_size=max_bucket_size,
     )
     comp = connected_components(pairs, f"{id_col}_1", f"{id_col}_2")
@@ -947,7 +931,8 @@ def build_dedup_clusters(
     if path is None:
         return labels
     labels.write.mode(mode).parquet(path)
-    return docs.sparkSession.read.parquet(path)
+    # read back with the schema just written: no inference job
+    return docs.sparkSession.read.schema(labels.schema).parquet(path)
 
 
 def build_dedup_index(
@@ -990,8 +975,8 @@ def build_dedup_index(
       the bucket as a trailing partition column in the stored table
       only; build/extend RETURN the documented two-column frame.
     - ``path/profiles`` one row per doc: band signatures + the 64-bit
-      shingle-hash set (the verify payload; ~1-2% of corpus bytes —
-      the same index design as streaming/incremental_lsh.py)
+      shingle-hash set (:func:`batch_profiles`; the verify payload,
+      ~1-2% of corpus bytes)
     - ``path/edges``    a COMPACTED spanning star of the verified
       near-dup pair graph — one ``(cluster_id, member)`` row per
       non-singleton doc, |V_dup| rows instead of |E|. Same components
@@ -1008,20 +993,19 @@ def build_dedup_index(
       inferring them; written last as the build's commit marker
       (read back only by ``sources.sidecar.read_params``).
 
-    Verification here is exact Jaccard over the stored xxhash64
-    shingle sets (identical to exact shingle Jaccard absent ~2^-64
-    in-pair collisions — the contract the r1-green incremental LSH
-    oracle already pins). Returns the labels DataFrame
-    (parquet-backed).
+    Verification is exact Jaccard over the stored xxhash64 shingle
+    sets (identical to exact shingle Jaccard absent ~2^-64 in-pair
+    collisions). Returns the labels DataFrame (parquet-backed).
 
     Scale: one corpus pass builds the profiles; candidates are the
-    banded self-join; CC is :func:`connected_components` (driver
+    banded self-join (:func:`lsh_candidate_pairs`); CC is
+    :func:`connected_components` (driver
     union-find on small graphs, O(log n) star rounds beyond). At 100 TB
     each of the three tables is a warehouse table;
     ``extend_dedup_index`` then makes every subsequent ingest batch
     O(batch), never O(corpus).
-    Sibling: :func:`build_dedup_clusters` is the fixed-snapshot form —
-    exact-shingle verify, labels only, no stored probe state — for
+    Sibling: :func:`build_dedup_clusters` is the fixed-snapshot form
+    of the same pipeline — labels only, no stored probe state — for
     corpora rebuilt per snapshot rather than grown in place.
 
     Runs under the artifact's writer lease, same as the extend: a
@@ -1058,21 +1042,8 @@ def _build_dedup_index_locked(
     long jobs, and a holder whose heartbeat degraded during them must
     not stamp the artifact committed over a thief's (tables without
     params read as an uncommitted build -> rebuild)."""
-    from etlutils_spark.streaming.incremental_lsh import (
-        _explode_bands,
-        _verified_pairs,
-        batch_profiles,
-    )
-
     prof = batch_profiles(docs, text_col, id_col, n, num_hashes, bands)
-    a = _explode_bands(prof, "id_1")
-    b = _explode_bands(prof, "id_2")
-    cand = (
-        a.join(b, ["band_idx", "band_sig"])
-        .filter(F.col("id_1") < F.col("id_2"))
-        .select("id_1", "id_2")
-        .distinct()
-    )
+    cand = lsh_candidate_pairs(prof)
     edges = _verified_pairs(cand, prof, prof, threshold).select(
         F.col("id_1").cast("long").alias("id_1"),
         F.col("id_2").cast("long").alias("id_2"),
@@ -1255,9 +1226,9 @@ def _write_sync_epoch(spark, path: str, side: str, epoch: int) -> None:
 
 
 def _read_sync_epoch(spark, path: str, side: str) -> int | None:
-    """None == no readable marker: absent (pre-marker artifact), the
-    earlier parquet-directory form, or torn — every case takes the
-    conservative full-scope drift path in extend_dedup_index."""
+    """None == no readable marker: absent (pre-marker artifact), a
+    directory, or torn — every case takes the conservative full-scope
+    drift path in extend_dedup_index."""
     txt = read_sidecar_text(spark, f"{path}/sync_{side}")
     if txt is None:
         return None
@@ -1345,8 +1316,6 @@ def _probe_and_verify(
     shingles per doc that is 16 KB per doc: a 10k-doc batch broadcasts
     about 160 MB. Split larger ingests into batches that keep this well
     under the driver heap (and Spark's 8 GB broadcast ceiling)."""
-    from etlutils_spark.streaming.incremental_lsh import _jaccard
-
     def exploded(prof: DataFrame, side: str) -> DataFrame:
         return prof.select(
             F.col("doc_id").alias(f"id_{side}"),
@@ -1543,8 +1512,6 @@ def _extend_dedup_index_locked(
     a lease re-verification so a holder whose heartbeat gave up during
     the (long) candidate/verify stage aborts instead of committing over
     a thief (r9 verdict Next #3)."""
-    from etlutils_spark.streaming.incremental_lsh import batch_profiles
-
     label_buckets = params["label_buckets"]
     # the stored tables are read with the schemas the build recorded
     # in the params sidecar (no schema-inference job)

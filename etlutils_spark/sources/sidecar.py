@@ -693,12 +693,11 @@ def write_sidecar_text(spark, url: str, text: str) -> None:
     delete-then-rename commit had one, and a concurrent lease-less
     cold-start probe (``bootstrap_action``) reading in that window got
     kind=None -> "build" and rebuilt the artifact from one micro-batch
-    (review catch). A recursive delete first retires a DIRECTORY at
-    the same path (an epoch marker's earlier parquet form; rename
-    cannot replace a non-empty directory, and every caller writes
-    under the writer lease), and stores whose FileContext lacks
-    atomic rename fall back to the old two-step with its documented
-    window."""
+    (review catch). When that rename fails — a store whose FileContext
+    lacks atomic rename, or a directory at the path, which rename
+    cannot replace — the commit falls back to the old two-step (a
+    recursive delete, then rename) with its documented window; every
+    caller writes under the writer lease."""
     jvm, fs, target = _fs_path(spark, url)
     parent, name = url.rsplit("/", 1)
     tmp = jvm.org.apache.hadoop.fs.Path(f"{parent}/.{name}.tmp")
@@ -707,8 +706,6 @@ def write_sidecar_text(spark, url: str, text: str) -> None:
         stream.write(bytearray(text.encode("utf-8")))
     finally:
         stream.close()
-    if fs.exists(target) and fs.getFileStatus(target).isDirectory():
-        fs.delete(target, True)  # a directory: rename cannot replace it
     try:
         conf = spark.sparkContext._jsc.hadoopConfiguration()
         fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(conf)
@@ -717,7 +714,7 @@ def write_sidecar_text(spark, url: str, text: str) -> None:
         opts[0] = ren.OVERWRITE
         fc.rename(tmp, target, opts)
         return
-    except Exception:  # noqa: BLE001 - store without FileContext rename
+    except Exception:  # noqa: BLE001 - no atomic rename, or a directory
         pass
     fs.delete(target, True)
     if not fs.rename(tmp, target):

@@ -1,8 +1,10 @@
 """Incremental MinHash+LSH near-duplicate detection under Structured
-Streaming: an append-only signature index maintained across micro-
-batches, with each batch's documents checked against the whole corpus
-seen so far — the streaming twin of ``operators.dedup.
-minhash_dedup_pairs``.
+Streaming: an append-only profile index maintained across micro-batches,
+with each batch's documents checked against the whole corpus seen so
+far. The index rows are the MinHash engine's per-document profiles
+(``operators.dedup.batch_profiles``), the same rows the batch pipeline
+(``minhash_dedup_pairs``) and the extendable index (``build_dedup_index``)
+run on, so a streamed pair is the batch pair.
 
 The reference is batch-only (SURVEY §2.7); this is the extension tier
 pattern a training-data ingest pipeline actually runs: documents arrive
@@ -14,13 +16,8 @@ Index design (the 100 TB story):
   shingle_hashes array<bigint>, n_sh)``. Shingle sets are stored as
   64-bit xxhash64 values — exact intersection counts (modulo ~2^-64
   collisions) at 8 bytes per shingle, so the index is ~1-2% of corpus
-  bytes and append-only parquet. Band signatures are likewise 8-byte
-  xxhash64 digests of the (portable md5) minhash rows — the band sig
-  is only ever an equality join key, so the narrow form keeps the
-  stored index and every probe-join key at 8 bytes with identical
-  equality classes up to ~2^-64 digest collisions (guide §2.3; the
-  md5 MINS are unchanged — they pick each row's representative
-  shingle, which the oracle recomputes).
+  bytes and append-only parquet. Band signatures are 8-byte xxhash64
+  digests of the md5 minhash rows (``operators.dedup.band_sig_array``).
 - Per batch, only the NEW documents are shingled (incremental cost is
   O(batch), never O(corpus)); the candidate join explodes band
   signatures on both sides and equi-joins on (band_idx, band_sig) with
@@ -38,81 +35,16 @@ pair sink is idempotent per (id_1, id_2) after downstream distinct).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from etlutils_spark.operators.dedup import band_sig_array, shingle_rows
-
-def batch_profiles(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 8,
-    bands: int = 4,
-) -> DataFrame:
-    """One compact index row per document: band signatures + the 64-bit
-    shingle-hash set (the verify payload)."""
-    # sh feeds exactly one aggregation and the localCheckpoint below
-    # materializes the result, so the shingle table is computed once
-    # without its own persist
-    sh = shingle_rows(docs, text_col, id_col, n)
-    # one groupBy computes signature mins AND the shingle-hash set; the
-    # band array is then a per-row expression (index = band number by
-    # construction — no order-sensitive collect_list)
-    sigs = (
-        sh.groupBy(id_col)
-        .agg(
-            *[
-                F.min(F.md5(F.concat(F.lit(f"{i}|"), F.col("shingle")))).alias(f"mh{i}")
-                for i in range(num_hashes)
-            ],
-            F.collect_set(F.xxhash64("shingle")).alias("shingle_hashes"),
-        )
-    )
-    out = sigs.select(
-        F.col(id_col).alias("doc_id"),
-        # narrow band keys (8-byte xxhash64 digests over the md5 mins;
-        # module docstring) — equality classes identical to the
-        # portable string digests up to ~2^-64 collisions
-        band_sig_array(num_hashes, bands, as_long=True).alias("band_sigs"),
-        "shingle_hashes",
-        F.size("shingle_hashes").alias("n_sh"),
-    )
-    # eager localCheckpoint: prof is re-read ~5x downstream (band
-    # explode x2, two verifies, index append) — materialize once
-    return out.localCheckpoint(eager=True)
-
-
-def _jaccard(sh_1: str, sh_2: str):
-    """Exact Jaccard of two stored shingle-hash sets (Column)."""
-    inter = F.size(F.array_intersect(sh_1, sh_2))
-    return inter.cast("double") / (
-        F.size(sh_1) + F.size(sh_2) - inter
-    ).cast("double")
-
-
-def _verified_pairs(cand: DataFrame, left: DataFrame, right: DataFrame, threshold: float) -> DataFrame:
-    """Exact Jaccard on stored shingle-hash sets for candidate id pairs."""
-    l_prof = left.select(
-        F.col("doc_id").alias("id_1"), F.col("shingle_hashes").alias("sh_1")
-    )
-    r_prof = right.select(
-        F.col("doc_id").alias("id_2"), F.col("shingle_hashes").alias("sh_2")
-    )
-    return (
-        cand.join(l_prof, "id_1")
-        .join(r_prof, "id_2")
-        .select("id_1", "id_2", _jaccard("sh_1", "sh_2").alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
-def _explode_bands(profiles: DataFrame, id_alias: str) -> DataFrame:
-    return profiles.select(
-        F.col("doc_id").alias(id_alias),
-        F.posexplode("band_sigs").alias("band_idx", "band_sig"),
-    )
+from etlutils_spark.operators.dedup import (
+    _probe_and_verify,
+    batch_profiles,
+    build_dedup_index,
+    compact_dedup_index,
+    extend_dedup_index,
+)
+from etlutils_spark.sources.sidecar import bootstrap_action, sidecar_kind
 
 
 def streaming_dedup_index(
@@ -154,12 +86,6 @@ def streaming_dedup_index(
     unbounded files. Default off.
 
     Returns the StreamingQuery."""
-    from etlutils_spark.operators.dedup import (
-        build_dedup_index,
-        compact_dedup_index,
-        extend_dedup_index,
-    )
-
     processed = {"n": 0}
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
@@ -177,8 +103,6 @@ def streaming_dedup_index(
         # DAMAGED committed index and rebuilding from one micro-batch
         # would silently destroy the stored corpus. No Spark job and
         # no FileStreamSink WARN stack per micro-batch.
-        from etlutils_spark.sources.sidecar import bootstrap_action
-
         if bootstrap_action(spark, path, "build_dedup_index") == "extend":
             extend_dedup_index(path, batch_df, text_col, id_col)
         else:
@@ -222,8 +146,6 @@ def incremental_minhash_dedup(
     Order inside a batch: the batch is probed against the index state
     BEFORE the batch is appended and against itself, so every pair is
     discovered exactly once, in the batch that completes it."""
-    from etlutils_spark.operators.dedup import _probe_and_verify
-    from etlutils_spark.sources.sidecar import sidecar_kind
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession

@@ -125,17 +125,17 @@ def test_simhash_multitable_blocking(spark):
 
 
 def test_lsh_bucket_cap_bounds_pairs(spark, docs):
-    from etlutils_spark.operators.dedup import lsh_candidate_pairs, minhash_signatures
+    from etlutils_spark.operators.dedup import batch_profiles, lsh_candidate_pairs
 
     # 6 identical docs -> every band bucket holds all 6 -> 15 pairs
     many = spark.createDataFrame(
         [(i, "same text repeated for the bucket cap test here") for i in range(6)],
         "doc_id bigint, text string",
     )
-    sigs = minhash_signatures(shingle_rows(many), num_hashes=8)
-    uncapped = lsh_candidate_pairs(sigs, num_hashes=8, bands=4)
+    prof = batch_profiles(many, num_hashes=8, bands=4)
+    uncapped = lsh_candidate_pairs(prof)
     assert uncapped.count() == 15
-    capped = lsh_candidate_pairs(sigs, num_hashes=8, bands=4, max_bucket_size=5)
+    capped = lsh_candidate_pairs(prof, max_bucket_size=5)
     assert capped.count() == 0  # all buckets oversized -> dropped
     # the full pipeline with both skew guards still finds the planted
     # near-dup (its buckets are small)
@@ -740,17 +740,42 @@ def test_build_dedup_clusters_artifact(spark, tmp_path):
 
     docs_counted = docs.mapInPandas(counted, docs.schema)
     path = str(tmp_path / "clusters")
-    out = build_dedup_clusters(docs_counted, path=path, portable=False)
+    out = build_dedup_clusters(docs_counted, path=path)
     labels = {r.doc_id: r.cluster_id for r in out.collect()}
     assert labels == {1: 1, 2: 1, 3: 3, 4: 4}
     # one corpus pass for the shingle->minhash->LSH->verify pipeline
-    # (persisted inside), one for the final label join — nothing more
+    # (checkpointed inside), one for the final label join — nothing more
     assert acc.value == 2 * len(rows)
     # the returned frame is parquet-backed: reading again costs no
     # further input scans
     before = acc.value
     assert spark.read.parquet(path).count() == 4
     assert acc.value == before
+
+
+def test_minhash_pipeline_job_budget(spark, docs, tmp_path):
+    """The pair pipeline and the cluster build run on one checkpoint of
+    the profiles, so their Spark jobs stay within the counts measured
+    on this fixture (counted by job group): 8 for the pairs, 12 for a
+    cluster build written to a path (the pair jobs plus the driver
+    connected components, the write and the collect). The labels are
+    read back with the schema just written: no job is a parquet
+    schema inference."""
+    from etlutils_spark.operators.dedup import build_dedup_clusters
+
+    pairs, pair_jobs = _group_jobs(
+        spark, lambda: sorted(map(tuple, minhash_dedup_pairs(docs).collect()))
+    )
+    assert [p[:2] for p in pairs] == [(0, 1), (0, 2), (1, 2)]
+    assert len(pair_jobs) <= 8, pair_jobs
+    path = str(tmp_path / "clusters")
+    labels, cluster_jobs = _group_jobs(
+        spark,
+        lambda: dict(build_dedup_clusters(docs, path=path).collect()),
+    )
+    assert labels == {0: 0, 1: 0, 2: 0, 3: 3, 4: 4}
+    assert len(cluster_jobs) <= 12, cluster_jobs
+    assert not any(n.startswith("parquet at") for n in cluster_jobs), cluster_jobs
 
 
 def test_extend_dedup_index_matches_full_rebuild(spark, tmp_path):
@@ -1290,10 +1315,10 @@ def test_extend_dedup_index_affected_drift_fallback(spark, tmp_path):
     shingleable docs (r6 advice: the compressed graph alone would
     label them to themselves — wrong and complete-looking)."""
     from etlutils_spark.operators.dedup import (
+        batch_profiles,
         build_dedup_index,
         extend_dedup_index,
     )
-    from etlutils_spark.streaming.incremental_lsh import batch_profiles
 
     a = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda"
     b = "one two three four five six seven eight nine ten eleven twelve"
@@ -2127,9 +2152,9 @@ def test_affected_extend_rewrites_only_touched_buckets(spark, tmp_path):
 def test_sync_epoch_marker_formats(spark, tmp_path):
     """Epoch markers are single text files written through the Hadoop
     FileSystem API (no Spark job — the HDFSMetadataLog pattern).
-    Unreadable forms — absent, the earlier parquet-DIRECTORY marker,
-    or a torn write — all read as None, which routes the next extend
-    through the conservative migration/drift path."""
+    Unreadable forms — absent, a directory at the marker path, or a
+    torn write — all read as None, which routes the next extend
+    through the conservative drift path."""
     from etlutils_spark.operators.dedup import (
         _read_sync_epoch,
         _write_sync_epoch,
@@ -2145,8 +2170,9 @@ def test_sync_epoch_marker_formats(spark, tmp_path):
     assert _read_sync_epoch(spark, root, "profiles") == 8
     # absent
     assert _read_sync_epoch(spark, root, "labels") is None
-    # earlier parquet-directory form -> migration path, and a writer
-    # retires it in place
+    # a directory at the marker path is debris: it reads as None
+    # (drift), and a write replaces it through the delete-and-rename
+    # fallback
     os.makedirs(f"{root}/sync_labels")
     assert _read_sync_epoch(spark, root, "labels") is None
     _write_sync_epoch(spark, root, "labels", 3)

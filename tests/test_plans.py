@@ -605,10 +605,10 @@ def test_extend_probe_streams_stored_profiles_past_broadcast_batch(
     from etlutils_spark.operators.dedup import (
         _probe_and_verify,
         _read_stored,
+        batch_profiles,
         build_dedup_index,
     )
     from etlutils_spark.sources.sidecar import read_sidecar_json
-    from etlutils_spark.streaming.incremental_lsh import batch_profiles
 
     a = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda"
     b = "one two three four five six seven eight nine ten eleven twelve"

@@ -30,9 +30,12 @@ COMMENTARY = {
     "single pass after one shuffle on user_id.",
     "window_topk_per_customer": "WindowGroupLimit pushes rn<=2 below the "
     "full window materialization.",
-    "dedup_minhash_lsh": "signatures are one partial-min aggregation; "
-    "candidate join keys are uniform band digests (no skew); verify join "
-    "touches candidates only.",
+    "dedup_minhash_lsh": "one aggregation builds each doc's profile "
+    "(md5 minhash mins + the 64-bit shingle-hash set), checkpointed so "
+    "every consumer scans the RDD; the banded self-join keys on 8-byte "
+    "(band_idx, band_sig) digests (uniform, no skew); the verify joins "
+    "candidate pairs to their profiles by id and computes Jaccard with "
+    "array_intersect — no shingle rows are joined back.",
     "ann_cosine_topk": "query set broadcast; corpus scanned once; per-query "
     "top-k via window over the small scored set.",
     "q8_market_share": "8-table join: every dimension leg broadcasts, "

@@ -16,7 +16,8 @@ by the head group's B(B-1)/2 — the quantity every stage must stay
 linear in.
 
 Per scale the report records: stage walls (pairs pipeline, connected
-components), candidate count BEFORE verification, verified pairs, CC
+components; the package's tracked-table cache is emptied before each
+stage), candidate count BEFORE verification, verified pairs, CC
 rounds (0 when the graph is small enough for driver union-find), peak
 per-stage shuffle write, and the max-bucket-size guard's effect on the
 same corpus (candidates + wall with the head bucket dropped). The
@@ -114,13 +115,23 @@ def total_shuffle_write(spark) -> int:
         return -1
 
 
+def drop_tracked() -> None:
+    """Unpersist every table in the package's ``persist_tracked`` LRU,
+    so a stage's wall never includes reading a table an earlier stage
+    left cached."""
+    from etlutils_spark import caching
+
+    for df in caching._TRACKED:
+        df.unpersist(blocking=True)
+    caching._TRACKED.clear()
+
+
 def run_scale(spark, n: int) -> dict:
     from etlutils_spark.operators.dedup import (
+        batch_profiles,
         connected_components,
         lsh_candidate_pairs,
         minhash_dedup_pairs,
-        minhash_signatures,
-        shingle_rows,
     )
 
     docs, sizes = make_corpus(spark, n)
@@ -138,18 +149,19 @@ def run_scale(spark, n: int) -> dict:
         status-store error sentinel — never a garbage negative MB."""
         return round((b - a) / 1e6, 1) if a >= 0 and b >= 0 else None
 
-    # stage A: candidates (shingle -> signatures -> banded self-join)
+    # stage A: candidates (profiles -> banded self-join)
+    drop_tracked()
     s0 = total_shuffle_write(spark)
     t0 = time.time()
-    sh = shingle_rows(docs)
-    sigs = minhash_signatures(sh)
-    cand = lsh_candidate_pairs(sigs)
+    prof = batch_profiles(docs)
+    cand = lsh_candidate_pairs(prof)
     out["candidates"] = cand.count()
     out["candidates_sec"] = round(time.time() - t0, 2)
     s1 = total_shuffle_write(spark)
     out["candidates_shuffle_mb"] = shuffle_delta(s0, s1)
 
     # stage B: full verified pipeline (the production entry point)
+    drop_tracked()
     t0 = time.time()
     pairs = minhash_dedup_pairs(docs)
     pairs = pairs.persist()
@@ -237,8 +249,9 @@ def run_scale(spark, n: int) -> dict:
 
     # stage D: the guard — same corpus, head buckets dropped before the
     # self-join; candidate mass must collapse toward the non-head tail
+    drop_tracked()
     t0 = time.time()
-    guarded = lsh_candidate_pairs(sigs, max_bucket_size=50)
+    guarded = lsh_candidate_pairs(prof, max_bucket_size=50)
     out["guarded_candidates"] = guarded.count()
     out["guarded_sec"] = round(time.time() - t0, 2)
 
